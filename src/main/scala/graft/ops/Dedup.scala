@@ -496,16 +496,25 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
       checkpointDir: Option[String] = None): DataFrame = {
-    // AQE deliberately INHERITED here, not forced off (round-19
-    // adjudication, both directions measured): on the tiny core-core
-    // graph inside [[graft.ops.Similarity.dbscan]] the fixpoint ran
-    // 39.3 s with AQE vs 11.2 s without (per-round stage barriers
-    // dominate) — dbscan's own [[graft.util.Fixpoint.withoutAqe]] scope
-    // covers that case. But on the larger string-keyed graphs the
-    // direct consumers feed (graph_cc, the minhash-CC dedup family,
-    // curate chains), forcing AQE off read 1.2–1.35x of baseline:
-    // their rounds want AQE's runtime broadcast conversion, which the
-    // static planner cannot derive from un-sized LogicalRDD inputs.
+    // The loop runs WITHOUT AQE and on ONE hash partitioning. Under AQE
+    // every exchange of every round is its own query stage and job; off,
+    // a round is one checkpoint job plus the probe. The directed edges
+    // are hash-partitioned on `dst` once, and every label generation
+    // ends hash-partitioned on `id` with the same p before its
+    // checkpoint (the seed by aggregating on the partition key, each
+    // round by `repartition(p, id)`), so the checkpointed LogicalRDD
+    // advertises HashPartitioning(id, p) and the neighbor-min and
+    // `l ⋈ neighborMin` joins plan no exchange on the label side.
+    // Measured on 4 vCPUs: the pipeline benchmark's graph_fixpoint
+    // (~220 edges) fell from 49 to 20 Spark jobs in its cc stage and
+    // from 2.74 to 1.96 s request p50 (median of 10 alternating pairs);
+    // at sf0.1 graph_cc 3.86 → 3.08 s and dedup_keep_best 2.32 → 1.69 s,
+    // embed_dbscan and dedup_minhash_cc within noise. The round-19
+    // reading that AQE off was 1.2–1.35x slower on graph_cc was taken
+    // with the label side re-shuffled every round. The caller's `pairs`
+    // still run under the caller's conf: the edge count below
+    // materializes them before the scopes open.
+    //
     // localCheckpoint stores lineage-truncated blocks on executors — fine
     // single-node, but an executor loss mid-fixpoint kills the job. When a
     // checkpointDir is given (the cluster deployment mode), rounds write
@@ -520,7 +529,8 @@ object Dedup {
     // returned fixpoint stay on disk (the caller owns the final files; they
     // are reclaimed by spark.cleaner.referenceTracking.cleanCheckpoints or
     // by deleting the UUID subdir after the labels are consumed).
-    val sc = pairs.sparkSession.sparkContext
+    val spark = pairs.sparkSession
+    val sc = spark.sparkContext
     val ckptFs = checkpointDir.map { d =>
       sc.setCheckpointDir(d)
       val root = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
@@ -538,25 +548,34 @@ object Dedup {
       if (ckptFs.isDefined) _.checkpoint(true) else _.localCheckpoint(true)
     val preexisting = listCkpt()
     val fwd = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val edges = graft.util.Caches.persist(
+    val directed = graft.util.Caches.persist(
       fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))))
+    // Size the loop's partitions to the largest frame a round shuffles.
+    // Every vertex is the src of at least one directed edge, so the
+    // label table (one row per vertex) never outgrows the directed edge
+    // table: its count is max(label rows, edge rows). At bench scale
+    // this collapses the rounds' exchanges to a task or two; at corpus
+    // scale the count clamps to the session's configured partitions.
+    // See [[graft.util.Fixpoint.loopPartitions]].
+    val p = graft.util.Fixpoint.loopPartitions(spark, directed.count())
+    val (labels, converged) = graft.util.Fixpoint.withoutAqe(spark) {
+    graft.util.Fixpoint.withShufflePartitions(spark, p) {
+    val edges = graft.util.Caches.persist(directed.repartition(p, col("dst")))
     // Seed comp = min(id, min neighbor): the first neighbor-min round fused
     // into the vertex-set construction (one groupBy instead of a distinct
-    // plus a join+groupBy round).
+    // plus a join+groupBy round). The edge table is symmetric, so grouping
+    // on `dst` gives the same minima as grouping on `src` — and `dst` is
+    // what `edges` is already partitioned on: the aggregate needs no
+    // exchange of its own and the seed comes out HashPartitioning(id, p)
+    // like every later generation. Its scan materializes `edges`, after
+    // which the unpartitioned copy is dead.
     var labels = ckpt(
-      edges.groupBy("src").agg(min("dst").as("mn"))
-        .select(col("src").as("id"), least(col("src"), col("mn")).as("comp")))
+      edges.groupBy("dst").agg(min("src").as("mn"))
+        .select(col("dst").as("id"), least(col("dst"), col("mn")).as("comp")))
+    directed.unpersist(blocking = false)
     var labelsFiles = listCkpt() -- preexisting
     var iter = 0
     var converged = false
-    // the fixpoint's per-round state is the label table — size the
-    // loop's shuffle partitions to it (the count reads the eager
-    // checkpoint's blocks). At bench scale this collapses the rounds'
-    // exchanges to a task or two; at corpus scale the derived count
-    // clamps to the session's configured partitions. See
-    // [[graft.util.Fixpoint.loopPartitions]].
-    val nNodes = labels.count()
-    graft.util.Fixpoint.withLoopPartitions(pairs.sparkSession, nNodes) {
     // One propagation step: neighbor-min then pointer jumping (path
     // halving): comp <- comp(comp). Combined these converge in O(log n)
     // steps, so a long duplicate CHAIN cannot outrun maxIter the way
@@ -578,6 +597,7 @@ object Dedup {
         .select(col("id"),
           least(col("comp"), coalesce(col("jc"), col("comp"))).as("comp"),
           col("__ol"))
+        .repartition(p, col("id"))
     }
     while (!converged && iter < maxIter) {
       // ONE step per materialization (a 2-step unroll was measured
@@ -589,8 +609,10 @@ object Dedup {
       // plan every step, and persist only caches execution — the
       // ANALYZED plan would still grow 2^iter and OOM the driver.
       // Checkpointing truncates lineage each round.
-      val next = ckpt(step(
-        labels.select(col("id"), col("comp"), col("comp").as("__ol"))))
+      val round = step(
+        labels.select(col("id"), col("comp"), col("comp").as("__ol")))
+      graft.util.PlanDump(s"cc_round_${iter + 1}", round)
+      val next = ckpt(round)
       converged = next.where(col("comp") =!= col("__ol")).isEmpty
       // `next` is materialized (eager checkpoint) and the probe read
       // only its own blocks — the previous round's reliable files are
@@ -600,6 +622,8 @@ object Dedup {
       labelsFiles = nextFiles
       labels = next.select(col("id"), col("comp"))
       iter += 1
+    }
+    (labels, converged)
     }
     }
     if (!converged) log.warn(

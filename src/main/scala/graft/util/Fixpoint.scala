@@ -33,16 +33,21 @@ import org.apache.spark.sql.SparkSession
   *
   * CONCURRENCY CONTRACT: `spark.conf` is SESSION-global, not
   * thread-local, so while any fixpoint scope is open every OTHER query
-  * submitted on the same session also plans without AQE. Scopes
-  * themselves are safe to overlap (the restore is reference-counted
-  * per session below — the last scope out re-installs the value the
-  * first scope in saw, so concurrent fixpoints can no longer clobber
-  * each other's `prev`), but a host that multiplexes AQE-sensitive
-  * OLAP queries and fixpoint operators on one session concurrently
-  * should give the fixpoints their own session (`newSession()` shares
-  * the SparkContext and catalog but has independent conf) or set
-  * `spark.graft.fixpoint.aqe=true`. Bench/Verify are single-threaded
-  * and unaffected.
+  * submitted on the same session also plans under the scoped values:
+  * without AQE inside [[withoutAqe]], and with the loop's (often
+  * single-digit) `spark.sql.shuffle.partitions` inside
+  * [[withLoopPartitions]] / [[withShufflePartitions]] — a concurrent
+  * corpus-sized aggregate would run its exchanges in that many tasks.
+  * Scopes themselves are safe to overlap (the restore is
+  * reference-counted per session below — the last scope out
+  * re-installs the value the first scope in saw, or unsets a key that
+  * had no value, so concurrent fixpoints can no longer clobber each
+  * other's `prev`), but a host that multiplexes AQE- or
+  * parallelism-sensitive OLAP queries and fixpoint operators on one
+  * session concurrently should give the fixpoints their own session
+  * (`newSession()` shares the SparkContext and catalog but has
+  * independent conf) or set `spark.graft.fixpoint.aqe=true`.
+  * Bench/Verify are single-threaded and unaffected.
   */
 object Fixpoint {
 
@@ -50,14 +55,16 @@ object Fixpoint {
   private val KeepKey = "spark.graft.fixpoint.aqe"
 
   /** Per-(session, key) open-scope bookkeeping: a stack of scope tokens
-    * with their target values plus the pre-scope original. The LAST
-    * scope out restores the original; a non-final exit re-installs the
+    * with their target values plus the pre-scope original (None when
+    * the key had no value). The LAST scope out restores the original,
+    * or unsets the key so a later `conf.get(key, default)` still sees
+    * its default; a non-final exit re-installs the
     * remaining top scope's target, so overlapping scopes (nested on one
     * thread or concurrent across threads) never clobber the value the
     * first scope in saw. Sessions compare by identity (SparkSession
     * does not override equals).
     */
-  private final class ConfScopes(val original: String) {
+  private final class ConfScopes(val original: Option[String]) {
     val stack = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
     val values = new java.util.IdentityHashMap[AnyRef, String]()
   }
@@ -73,8 +80,8 @@ object Fixpoint {
       body: => T): T = {
     val token = new Object
     open.synchronized {
-      val sc = open.getOrElseUpdate((spark, key), new ConfScopes(
-        try spark.conf.get(key) catch { case _: Exception => "" }))
+      val sc = open.getOrElseUpdate((spark, key),
+        new ConfScopes(spark.conf.getOption(key)))
       sc.stack += token
       sc.values.put(token, value)
       spark.conf.set(key, value)
@@ -85,7 +92,10 @@ object Fixpoint {
       sc.values.remove(token)
       if (sc.stack.isEmpty) {
         open.remove((spark, key))
-        spark.conf.set(key, sc.original)
+        sc.original match {
+          case Some(v) => spark.conf.set(key, v)
+          case None => spark.conf.unset(key)
+        }
       } else spark.conf.set(key, sc.values.get(sc.stack.last))
     }
   }
@@ -122,6 +132,13 @@ object Fixpoint {
     */
   def withLoopPartitions[T](spark: SparkSession, rows: Long)(
       body: => T): T =
-    withConf(spark, "spark.sql.shuffle.partitions",
-      loopPartitions(spark, rows).toString)(body)
+    withShufflePartitions(spark, loopPartitions(spark, rows))(body)
+
+  /** Scope `spark.sql.shuffle.partitions` to an explicit `n` — for a
+    * loop that also hash-partitions its own state with `n` (so the
+    * loop's aggregates and its `repartition(n, key)` frames agree).
+    */
+  def withShufflePartitions[T](spark: SparkSession, n: Int)(
+      body: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions", n.toString)(body)
 }

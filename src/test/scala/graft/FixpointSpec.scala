@@ -91,6 +91,20 @@ class FixpointSpec extends SparkSpec {
     assert(spark.conf.get(key) == before)
   }
 
+  test("a key with no value before the scope is unset again after it") {
+    val key = "spark.graft.test.unsetBeforeScope"
+    spark.conf.unset(key)
+    Fixpoint.withConf(spark, key, "x") {
+      Fixpoint.withConf(spark, key, "y") {
+        assert(spark.conf.get(key) == "y")
+      }
+      assert(spark.conf.get(key) == "x")
+    }
+    // unset, not "": a later lookup with a default still sees the default
+    assert(spark.conf.getOption(key).isEmpty)
+    assert(spark.conf.get(key, "dflt") == "dflt")
+  }
+
   test("scope under an already-off session leaves conf untouched") {
     spark.conf.set(AqeKey, "false")
     try {

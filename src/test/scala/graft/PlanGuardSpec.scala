@@ -293,4 +293,61 @@ class PlanGuardSpec extends SparkSpec {
     guard("ts_acf")
     guard("ab_poststrat")
   }
+
+  test("cc rounds join the checkpointed labels without a label-side exchange") {
+    import spark.implicits._
+    // every label generation ends hash-partitioned on id with the loop's
+    // partition count and the edges are cached partitioned on dst, so the
+    // checkpointed label scan must reach its join with no shuffle
+    // Exchange in between — with broadcast joins allowed (tiny graphs)
+    // and with them off and several partitions (the corpus-scale plan)
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L), (3L, 5L), (9L, 11L))
+      .toDF("doc_a", "doc_b")
+    def roundPlan(confs: (String, String)*): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_cc_plans")
+      val all = confs :+ ("spark.graft.planDumpDir" -> dir.toString)
+      all.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        graft.ops.Dedup.connectedComponents(pairs).collect()
+        java.nio.file.Files.readString(dir.resolve("cc_round_1.txt"))
+      } finally {
+        all.foreach { case (k, _) => spark.conf.unset(k) }
+        val dumps = java.nio.file.Files.list(dir)
+        try dumps.forEach(java.nio.file.Files.delete(_)) finally dumps.close()
+        java.nio.file.Files.delete(dir)
+      }
+    }
+    // the formatted tree: an operator's depth is the column of its
+    // "+-" / ":-" marker, its name the text after it
+    def labelScanPaths(plan: String): Seq[Seq[String]] = {
+      val tree = plan.linesIterator.drop(1).takeWhile(_.trim.nonEmpty)
+        .map { l =>
+          val m = math.max(l.indexOf("+- "), l.indexOf(":- "))
+          val depth = if (m < 0) -1 else m
+          (depth, l.substring(depth + 3).stripPrefix("* ").trim)
+        }.toIndexedSeq
+      tree.indices.filter(i => tree(i)._2.startsWith("Scan ExistingRDD"))
+        .map { i =>
+          // ancestors from the scan up to (and including) the first join
+          var d = tree(i)._1
+          val up = (i - 1 to 0 by -1).flatMap { j =>
+            if (tree(j)._1 < d) { d = tree(j)._1; Some(tree(j)._2) }
+            else None
+          }
+          val k = up.indexWhere(_.contains("Join"))
+          assert(k >= 0, s"label scan with no join above it:\n$plan")
+          up.take(k + 1)
+        }
+    }
+    for (plan <- Seq(roundPlan(),
+        roundPlan("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.graft.fixpoint.rowsPerPartition" -> "2"))) {
+      val paths = labelScanPaths(plan)
+      assert(paths.size >= 2, s"expected the label scans of both joins:\n$plan")
+      paths.foreach { path =>
+        assert(!path.exists(_.startsWith("Exchange")),
+          s"shuffle between the label scan and its join (${path.mkString(" <- ")}):\n$plan")
+      }
+    }
+  }
 }

@@ -192,33 +192,69 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connected components with a reliable checkpoint dir agree with local mode") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
-    try {
-      val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("doc_a", "doc_b")
-      val comps = Dedup.connectedComponents(pairs,
-          checkpointDir = Some(tmp.toString))
-        .as[(Long, Long)].collect().toMap
-      assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
-      // reliable mode actually wrote checkpoint data there
-      val wrote = java.nio.file.Files.walk(tmp)
-      try assert(wrote.count() > 1, "no checkpoint files written")
-      finally wrote.close()
-      // ...and cleaned up after itself: earlier rounds' rdd-* dirs are
-      // deleted as the loop advances, so only the returned fixpoint's
-      // checkpoint survives the run (not one copy per round).
-      import scala.jdk.CollectionConverters._
-      val uuidDir = java.nio.file.Files.list(tmp).iterator.asScala.toSeq
-      assert(uuidDir.size == 1, s"expected one UUID checkpoint subdir, got $uuidDir")
-      val rdds = java.nio.file.Files.list(uuidDir.head).iterator.asScala
-        .map(_.getFileName.toString).toSeq
-      assert(rdds.count(_.startsWith("rdd-")) == 1,
-        s"stale per-round checkpoints not reclaimed: $rdds")
+    // Labels must not depend on execution settings: the full product of
+    // session shuffle partitions {1, 7}, session AQE on/off,
+    // fixpoint.rowsPerPartition 1 vs default and a local vs reliable
+    // checkpoint, on the cluster fixture and the long chain (maxIter 8).
+    // The session's AQE and partition settings must come back unchanged.
+    import scala.jdk.CollectionConverters._
+    val clusters = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("doc_a", "doc_b")
+    val clusterLabels =
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L)
+    val chain = (1 to 59).map(i => (60L - i, 61L - i)).toDF("doc_a", "doc_b")
+    val chainLabels = (1L to 60L).map(_ -> 1L).toMap
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val partsKey = "spark.sql.shuffle.partitions"
+    val rowsKey = "spark.graft.fixpoint.rowsPerPartition"
+    def walk(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val w = java.nio.file.Files.walk(dir)
+      try w.iterator.asScala.toSeq finally w.close()
+    }
+    def list(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val l = java.nio.file.Files.list(dir)
+      try l.iterator.asScala.toSeq finally l.close()
+    }
+    try for {
+      parts <- Seq("1", "7")
+      aqe <- Seq("true", "false")
+      rows <- Seq(Some("1"), None)
+      reliable <- Seq(false, true)
+      (pairs, maxIter, want) <- Seq((clusters, 25, clusterLabels),
+        (chain, 8, chainLabels))
+    } {
+      val setting = s"partitions=$parts aqe=$aqe rowsPerPartition=$rows " +
+        s"reliable=$reliable maxIter=$maxIter"
+      spark.conf.set(partsKey, parts)
+      spark.conf.set(aqeKey, aqe)
+      rows.fold(spark.conf.unset(rowsKey))(spark.conf.set(rowsKey, _))
+      val tmp = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
+      try {
+        val comps = Dedup.connectedComponents(pairs, maxIter = maxIter,
+            checkpointDir = if (reliable) Some(tmp.toString) else None)
+          .as[(Long, Long)].collect().toMap
+        assert(comps == want, s"labels differ under $setting")
+        assert(spark.conf.get(aqeKey) == aqe, s"AQE leaked under $setting")
+        assert(spark.conf.get(partsKey) == parts,
+          s"shuffle partitions leaked under $setting")
+        assert(spark.conf.getOption(rowsKey) == rows)
+        if (reliable) {
+          // reliable mode actually wrote checkpoint data there...
+          assert(walk(tmp).size > 1, s"no checkpoint files written ($setting)")
+          // ...and cleaned up after itself: earlier rounds' rdd-* dirs are
+          // deleted as the loop advances, so only the returned fixpoint's
+          // checkpoint survives the run (not one copy per round).
+          val uuidDir = list(tmp)
+          assert(uuidDir.size == 1,
+            s"expected one UUID checkpoint subdir, got $uuidDir ($setting)")
+          val rdds = list(uuidDir.head).map(_.getFileName.toString)
+          assert(rdds.count(_.startsWith("rdd-")) == 1,
+            s"stale per-round checkpoints not reclaimed: $rdds ($setting)")
+        }
+      } finally walk(tmp).reverse.foreach(java.nio.file.Files.deleteIfExists(_))
     } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(tmp)
-      try walk.iterator.asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
+      spark.conf.set(partsKey, "4")
+      spark.conf.set(aqeKey, "true")
+      spark.conf.unset(rowsKey)
     }
   }
 
