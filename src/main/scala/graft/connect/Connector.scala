@@ -29,9 +29,21 @@ trait Connector {
     * overrides merged over the session conf before the call
     * (ref: CassandraExecute.scala:98-102 — copies SparkConf, overlays stage
     * params, builds the connector conf from the merge).
+    *
+    * The default serves the file-backed connectors, which run statements
+    * through Spark SQL. Spark runs commands (DDL and side-effecting
+    * statements) eagerly when `sql()` returns, so no action is needed;
+    * for statements that do return rows, materialize distributed
+    * (`count`) rather than collecting to the driver — Execute must never
+    * pull a result set into driver memory. Per-stage connection params
+    * are a storage-system concept; a file-backed keyspace has no
+    * connection to configure, so they are ignored here.
     */
   def execute(statement: String, params: Map[String, String] = Map.empty)(
-      implicit ctx: PipelineContext): Unit
+      implicit ctx: PipelineContext): Unit = {
+    val result = ctx.spark.sql(statement)
+    if (result.schema.nonEmpty) result.count(): Unit
+  }
 
   /** The reference's conf-merge: session SparkConf overlaid with per-stage
     * params (stage wins on conflict).
@@ -115,19 +127,6 @@ final class ParquetConnector(baseDir: String) extends Connector {
       val w = df.write.mode(mode).options(passThrough)
       (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(path(table))
     }
-  }
-
-  /** Spark runs commands (DDL and side-effecting statements) eagerly when
-    * `sql()` returns, so no action is needed; for statements that do return
-    * rows, materialize distributed (`count`) rather than collecting to the
-    * driver — Execute must never pull a result set into driver memory.
-    */
-  override def execute(statement: String, params: Map[String, String] = Map.empty)(
-      implicit ctx: PipelineContext): Unit = {
-    // per-stage connection params are a storage-system concept; a local
-    // parquet keyspace has no connection to configure, so they are ignored
-    val result = ctx.spark.sql(statement)
-    if (result.schema.nonEmpty) result.count(): Unit
   }
 }
 

@@ -32,10 +32,4 @@ final class DelimitedConnector(baseDir: String) extends Connector {
       .options(options - "confirm.truncate")
       .csv(path(table))
   }
-
-  override def execute(statement: String, params: Map[String, String] = Map.empty)(
-      implicit ctx: PipelineContext): Unit = {
-    val result = ctx.spark.sql(statement)
-    if (result.schema.nonEmpty) result.count(): Unit
-  }
 }

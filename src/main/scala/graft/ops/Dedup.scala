@@ -489,147 +489,137 @@ object Dedup {
     *
     * The driver loop holds NO data: each round is one join + groupBy, the
     * convergence check is an isEmpty on the diff, and rounds needed =
-    * O(log n) (pointer jumping). Every round checkpoints to truncate the
-    * self-join's exponential lineage — executor-local by default, or to a
-    * RELIABLE `checkpointDir` for cluster runs that must survive executor
-    * loss mid-fixpoint.
+    * O(log n) (pointer jumping) — see [[minLabelFixpoint]]. Every round
+    * checkpoints to truncate the self-join's exponential lineage —
+    * executor-local by default, or to a RELIABLE `checkpointDir` for
+    * cluster runs that must survive executor loss mid-fixpoint.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
       checkpointDir: Option[String] = None): DataFrame = {
-    // The loop runs WITHOUT AQE and on ONE hash partitioning. Under AQE
-    // every exchange of every round is its own query stage and job; off,
-    // a round is one checkpoint job plus the probe. The directed edges
-    // are hash-partitioned on `dst` once, and every label generation
-    // ends hash-partitioned on `id` with the same p before its
-    // checkpoint (the seed by aggregating on the partition key, each
-    // round by `repartition(p, id)`), so the checkpointed LogicalRDD
-    // advertises HashPartitioning(id, p) and the neighbor-min and
-    // `l ⋈ neighborMin` joins plan no exchange on the label side.
-    // Measured on 4 vCPUs: the pipeline benchmark's graph_fixpoint
-    // (~220 edges) fell from 49 to 20 Spark jobs in its cc stage and
-    // from 2.74 to 1.96 s request p50 (median of 10 alternating pairs);
-    // at sf0.1 graph_cc 3.86 → 3.08 s and dedup_keep_best 2.32 → 1.69 s,
-    // embed_dbscan and dedup_minhash_cc within noise. The round-19
-    // reading that AQE off was 1.2–1.35x slower on graph_cc was taken
-    // with the label side re-shuffled every round. The caller's `pairs`
-    // still run under the caller's conf: the edge count below
-    // materializes them before the scopes open.
-    //
-    // localCheckpoint stores lineage-truncated blocks on executors — fine
-    // single-node, but an executor loss mid-fixpoint kills the job. When a
-    // checkpointDir is given (the cluster deployment mode), rounds write
-    // RELIABLE checkpoints there instead and survive executor churn.
-    //
     // The dir is set ONCE, before the loop: setCheckpointDir both mutates
     // shared SparkContext state and mints a fresh UUID subdirectory every
-    // call, so the previous per-round form leaked one directory tree per
-    // round on top of repeating the global mutation. Each round's files are
-    // deleted as soon as the following round has materialized and the
-    // convergence probe has read them — only the in-flight round plus the
-    // returned fixpoint stay on disk (the caller owns the final files; they
-    // are reclaimed by spark.cleaner.referenceTracking.cleanCheckpoints or
-    // by deleting the UUID subdir after the labels are consumed).
-    val spark = pairs.sparkSession
-    val sc = spark.sparkContext
-    val ckptFs = checkpointDir.map { d =>
-      sc.setCheckpointDir(d)
-      val root = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
-      (root.getFileSystem(sc.hadoopConfiguration), root)
-    }
-    def listCkpt(): Set[String] = ckptFs match {
-      case Some((fs, root)) if fs.exists(root) =>
-        fs.listStatus(root).map(_.getPath.getName).toSet
-      case _ => Set.empty
-    }
-    def dropCkpt(names: Set[String]): Unit = ckptFs.foreach { case (fs, root) =>
-      names.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(root, n), true))
-    }
-    val ckpt: DataFrame => DataFrame =
-      if (ckptFs.isDefined) _.checkpoint(true) else _.localCheckpoint(true)
-    val preexisting = listCkpt()
+    // call, so a per-round form would leak one directory tree per round
+    // on top of repeating the global mutation. Only the returned
+    // fixpoint's files stay on disk; the caller owns them (reclaimed by
+    // spark.cleaner.referenceTracking.cleanCheckpoints or by deleting the
+    // UUID subdir after the labels are consumed).
+    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
     val fwd = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val directed = graft.util.Caches.persist(
       fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))))
-    // Size the loop's partitions to the largest frame a round shuffles.
     // Every vertex is the src of at least one directed edge, so the
     // label table (one row per vertex) never outgrows the directed edge
-    // table: its count is max(label rows, edge rows). At bench scale
-    // this collapses the rounds' exchanges to a task or two; at corpus
-    // scale the count clamps to the session's configured partitions.
-    // See [[graft.util.Fixpoint.loopPartitions]].
-    val p = graft.util.Fixpoint.loopPartitions(spark, directed.count())
-    val (labels, converged) = graft.util.Fixpoint.withoutAqe(spark) {
-    graft.util.Fixpoint.withShufflePartitions(spark, p) {
-    val edges = graft.util.Caches.persist(directed.repartition(p, col("dst")))
-    // Seed comp = min(id, min neighbor): the first neighbor-min round fused
-    // into the vertex-set construction (one groupBy instead of a distinct
-    // plus a join+groupBy round). The edge table is symmetric, so grouping
-    // on `dst` gives the same minima as grouping on `src` — and `dst` is
-    // what `edges` is already partitioned on: the aggregate needs no
-    // exchange of its own and the seed comes out HashPartitioning(id, p)
-    // like every later generation. Its scan materializes `edges`, after
-    // which the unpartitioned copy is dead.
-    var labels = ckpt(
-      edges.groupBy("dst").agg(min("src").as("mn"))
-        .select(col("dst").as("id"), least(col("dst"), col("mn")).as("comp")))
+    // table: the edge count is max(label rows, edge rows). It runs under
+    // the caller's conf, before the loop's scopes open.
+    val (labels, converged) = minLabelFixpoint(directed, directed.count(),
+      // Seed lab = min(id, min neighbor): the first neighbor-min round
+      // fused into the vertex-set construction (one groupBy instead of a
+      // distinct plus a join+groupBy round). The edge table is
+      // symmetric, so grouping on `dst` gives the same minima as
+      // grouping on `src` — and `dst` is what the loop's edges are
+      // partitioned on: the aggregate needs no exchange of its own and
+      // the seed comes out HashPartitioning(id, p) like every later
+      // generation.
+      e => e.groupBy("dst").agg(min("src").as("mn"))
+        .select(col("dst").as("id"), least(col("dst"), col("mn")).as("lab")),
+      maxIter, reliable = checkpointDir.isDefined, name = "cc")
     directed.unpersist(blocking = false)
-    var labelsFiles = listCkpt() -- preexisting
-    var iter = 0
-    var converged = false
-    // One propagation step: neighbor-min then pointer jumping (path
-    // halving): comp <- comp(comp). Combined these converge in O(log n)
-    // steps, so a long duplicate CHAIN cannot outrun maxIter the way
-    // pure one-hop propagation (O(diameter)) could. The `__ol` column
-    // (the label as of the LAST materialization) threads through
-    // untouched so the convergence probe is a FILTER over the new
-    // checkpoint's blocks — no re-join against the old generation.
-    def step(l: DataFrame): DataFrame = {
-      val neighborMin = edges
-        .join(l.select(col("id").as("dst"), col("comp")), "dst")
-        .groupBy(col("src").as("id")).agg(min("comp").as("ncomp"))
-      val propagated = l.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"),
-          col("__ol"))
-      propagated
-        .join(propagated.select(col("id").as("comp"), col("comp").as("jc")),
-          Seq("comp"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("jc"), col("comp"))).as("comp"),
-          col("__ol"))
-        .repartition(p, col("id"))
-    }
-    while (!converged && iter < maxIter) {
-      // ONE step per materialization (a 2-step unroll was measured
-      // 2x WORSE: without a materialization boundary the nested
-      // self-joins re-execute the inner step's subtree — ReusedExchange
-      // dedups only the exchanges, not the compute between them).
-      //
-      // checkpoint (not persist): the self-joins double the logical
-      // plan every step, and persist only caches execution — the
-      // ANALYZED plan would still grow 2^iter and OOM the driver.
-      // Checkpointing truncates lineage each round.
-      val round = step(
-        labels.select(col("id"), col("comp"), col("comp").as("__ol")))
-      graft.util.PlanDump(s"cc_round_${iter + 1}", round)
-      val next = ckpt(round)
-      converged = next.where(col("comp") =!= col("__ol")).isEmpty
-      // `next` is materialized (eager checkpoint) and the probe read
-      // only its own blocks — the previous round's reliable files are
-      // now dead.
-      val nextFiles = listCkpt() -- preexisting -- labelsFiles
-      dropCkpt(labelsFiles)
-      labelsFiles = nextFiles
-      labels = next.select(col("id"), col("comp"))
-      iter += 1
-    }
-    (labels, converged)
-    }
-    }
     if (!converged) log.warn(
       s"connectedComponents exited at maxIter=$maxIter without a verified " +
         "fixpoint; labels may be non-converged (raise maxIter)")
-    labels.select(col("id").as("doc_id"), col("comp").as("component"))
+    labels.select(col("id").as("doc_id"), col("lab").as("component"))
+  }
+
+  /** The min-label fixpoint behind [[connectedComponents]] and
+    * [[Graph.scc]]'s color and confirm passes. Over a directed (src, dst)
+    * edge table, labels flow from `dst` to `src`: starting from the
+    * caller's `seed` generation (id, lab), each round sets
+    * lab(v) <- min(lab(v), min lab(u) over edges v -> u), then jumps
+    * pointers (path halving) lab(v) <- min(lab(v), lab(lab(v))).
+    * Combined these converge in O(log n) rounds, so a long CHAIN cannot
+    * outrun `maxIter` the way pure one-hop propagation (O(diameter))
+    * could. Returns the last generation (id, lab) and whether its round
+    * changed nothing.
+    *
+    * `seed` builds the first generation from the loop's own edge table
+    * (cached hash-partitioned on `dst`); `rows` bounds the row counts of
+    * both the edge and the label table and sizes the loop's partition
+    * count p ([[graft.util.Fixpoint.loopPartitions]]) — at bench scale
+    * the rounds' exchanges collapse to a task or two, at corpus scale
+    * the count clamps to the session's configured partitions.
+    * `reliable` picks the checkpoint flavour
+    * ([[graft.util.Truncator.checkpoint]]); each round frame goes to
+    * `PlanDump("<name>_round_<n>")`.
+    *
+    * The loop runs WITHOUT AQE and on ONE hash partitioning. Under AQE
+    * every exchange of every round is its own query stage and job; off,
+    * a round is one checkpoint job plus the probe. The edges are
+    * hash-partitioned on `dst` once, and every label generation ends
+    * hash-partitioned on `id` with the same p before its checkpoint (the
+    * seed as the caller builds it, each round by `repartition(p, id)`),
+    * so the checkpointed LogicalRDD advertises HashPartitioning(id, p)
+    * and the neighbor-min and `l ⋈ neighborMin` joins plan no exchange
+    * on the label side. Measured on 4 vCPUs: the pipeline benchmark's
+    * graph_fixpoint (~220 edges) fell from 49 to 20 Spark jobs in its cc
+    * stage and from 2.74 to 1.96 s request p50 (median of 10 alternating
+    * pairs); at sf0.1 graph_cc 3.86 → 3.08 s and dedup_keep_best 2.32 →
+    * 1.69 s, embed_dbscan and dedup_minhash_cc within noise. The
+    * round-19 reading that AQE off was 1.2–1.35x slower on graph_cc was
+    * taken with the label side re-shuffled every round. The caller's
+    * `edges` still run under the caller's conf if it materialized them
+    * (the `rows` count) before calling.
+    *
+    * ONE step per materialization (a 2-step unroll was measured 2x
+    * WORSE: without a materialization boundary the nested self-joins
+    * re-execute the inner step's subtree — ReusedExchange dedups only
+    * the exchanges, not the compute between them). Checkpoint, not
+    * persist: the self-joins double the logical plan every step, and
+    * persist only caches execution — the ANALYZED plan would still grow
+    * 2^iter and OOM the driver. The `__ol` column (the label as of the
+    * LAST materialization) threads through untouched, so the convergence
+    * probe is a FILTER over the new checkpoint's blocks — no re-join
+    * against the old generation — and once it has read them the
+    * superseded generation (its local blocks or its reliable files) is
+    * dead and freed.
+    */
+  private[ops] def minLabelFixpoint(edges: DataFrame, rows: Long,
+      seed: DataFrame => DataFrame, maxIter: Int, reliable: Boolean,
+      name: String): (DataFrame, Boolean) = {
+    val spark = edges.sparkSession
+    val p = graft.util.Fixpoint.loopPartitions(spark, rows)
+    graft.util.Fixpoint.withoutAqe(spark) {
+    graft.util.Fixpoint.withShufflePartitions(spark, p) {
+    val e = graft.util.Caches.persist(edges.repartition(p, col("dst")))
+    var gen = graft.util.Truncator.checkpoint(seed(e), reliable)
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIter) {
+      val l = gen.select(col("id"), col("lab"), col("lab").as("__ol"))
+      val neighborMin = e
+        .join(l.select(col("id").as("dst"), col("lab")), "dst")
+        .groupBy(col("src").as("id")).agg(min("lab").as("__nm"))
+      val propagated = l.join(neighborMin, Seq("id"), "left")
+        .select(col("id"),
+          least(col("lab"), coalesce(col("__nm"), col("lab"))).as("lab"),
+          col("__ol"))
+      val round = propagated
+        .join(propagated.select(col("id").as("lab"), col("lab").as("__jl")),
+          Seq("lab"), "left")
+        .select(col("id"),
+          least(col("lab"), coalesce(col("__jl"), col("lab"))).as("lab"),
+          col("__ol"))
+        .repartition(p, col("id"))
+      graft.util.PlanDump(s"${name}_round_${iter + 1}", round)
+      val next = graft.util.Truncator.checkpoint(round, reliable)
+      converged = next.where(col("lab") =!= col("__ol")).isEmpty
+      graft.util.Truncator.free(gen)
+      gen = next
+      iter += 1
+    }
+    e.unpersist(blocking = false)
+    (gen.select(col("id"), col("lab")), converged)
+    }
+    }
   }
 
   /** Keep one document per duplicate cluster: drop every row whose id

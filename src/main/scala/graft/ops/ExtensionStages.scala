@@ -1171,13 +1171,10 @@ final case class GraphTransformStage(
             greatest(col(srcCol), col(dstCol)).as("b"))
           .where(col("a") < col("b")).distinct()
         Graph.assortativity(und)
-      // strongly-connected components of the DIRECTED view; the stage's
-      // 0 = off checkpoint convention maps to scc's library default 1
-      // (its outer loop compounds lineage every round — never run bare)
+      // strongly-connected components of the DIRECTED view
       case "scc" =>
         Graph.scc(in.select(col(srcCol).as("src"), col(dstCol).as("dst")),
-          maxOuter, maxIter,
-          if (checkpointEvery > 0) checkpointEvery else 1)
+          maxOuter, maxIter)
       // longest-path depth of the SCC condensation (same digraph)
       case "topo_layers" =>
         Graph.topoLayers(

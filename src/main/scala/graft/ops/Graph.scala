@@ -377,72 +377,25 @@ object Graph {
     * Output: (node, scc) for every vertex of the edge table, scc = the
     * component's minimum node id.
     */
-  def scc(edges: DataFrame, maxOuter: Int = 12, maxIter: Int = 25,
-      checkpointEvery: Int = 1): DataFrame = {
-    // AQE deliberately stays ON here (unlike the other fixpoints —
-    // see [[graft.util.Fixpoint]]): the trim/color/confirm rounds are
-    // semi/anti-join heavy and AQE's runtime broadcast conversion wins
-    // more than its per-stage re-planning costs (measured 7.2 s with
-    // AQE vs 12.9 s without at sf0.1).
+  def scc(edges: DataFrame, maxOuter: Int = 12, maxIter: Int = 25): DataFrame = {
+    // The trim and peel rounds keep AQE ON (unlike the other fixpoints —
+    // see [[graft.util.Fixpoint]]): they are semi/anti-join heavy and
+    // AQE's runtime broadcast conversion wins more than its per-stage
+    // re-planning costs (measured 7.2 s with AQE vs 12.9 s without at
+    // sf0.1). The color and confirm label rounds run in
+    // [[Dedup.minLabelFixpoint]], which turns AQE off for its own rounds
+    // and co-partitions edges and labels, as for connected components.
     require(maxOuter >= 1, s"maxOuter must be >= 1, got $maxOuter")
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val e0 = edges.select(col("src"), col("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull).distinct()
-
-    // min-id-that-REACHES-v fixpoint over (verts, e); O(log n) rounds via
-    // pointer jumping (see scaladoc). Returns (id, lab).
-    def minReach(verts: DataFrame, e: DataFrame): DataFrame = {
-      // eager block reclaim is safe: the convergence probe reads only
-      // the NEW generation (the old label rides along as __ol), so
-      // nothing touches a superseded generation after trunc() frees it.
-      val trunc = new graft.util.Truncator(checkpointEvery)
-      var labels = trunc(verts
-        .join(e.groupBy(col("dst").as("id")).agg(min("src").as("__mn")),
-          Seq("id"), "left")
-        .select(col("id"),
-          least(col("id"), coalesce(col("__mn"), col("id"))).as("lab")))
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        val nm = e
-          .join(labels.select(col("id").as("src"), col("lab")), "src")
-          .groupBy(col("dst").as("id")).agg(min("lab").as("__nm"))
-        // the previous generation's label rides along as __ol so the
-        // convergence probe is a FILTER over the just-checkpointed
-        // blocks (no re-join against the superseded generation, and
-        // cheap enough to probe EVERY round instead of every second)
-        val prop = labels.join(nm, Seq("id"), "left")
-          .select(col("id"), col("lab").as("__ol"),
-            least(col("lab"), coalesce(col("__nm"), col("lab"))).as("lab"))
-        val next = trunc(prop
-          .join(prop.select(col("id").as("lab"), col("lab").as("__jl")),
-            Seq("lab"), "left")
-          .select(col("id"), col("__ol"),
-            least(col("lab"), coalesce(col("__jl"), col("lab"))).as("lab")))
-        converged = next.where(col("lab") =!= col("__ol")).isEmpty
-        labels = next.select(col("id"), col("lab"))
-        iter += 1
-      }
-      // a non-converged coloring can split one SCC across color classes
-      // and silently mislabel part of it in a later peel round — fail
-      // loudly instead (the same contract as the outer peel loop).
-      // Pointer jumping halves chain length per round, so maxIter=25
-      // covers reach-chains ~2^25 long; hitting this means the graph
-      // genuinely needs a bigger budget.
-      if (!converged)
-        throw new IllegalStateException(
-          s"scc label propagation did not converge in maxIter=$maxIter " +
-            "pointer-jumping rounds; raise maxIter")
-      labels
-    }
-
-    // outer-loop state truncation honors a reliable checkpoint dir when
-    // one is set (the connectedComponents cluster-durability convention);
-    // single-node runs keep the cheap executor-local form
+    // every checkpoint here, outer-loop state and label rounds alike,
+    // honors a reliable checkpoint dir when one is set (the cluster
+    // durability convention); single-node runs keep the cheap
+    // executor-local form
+    val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
     def ckpt(df: DataFrame): DataFrame =
-      if (edges.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+      graft.util.Truncator.checkpoint(df, reliable)
     var verts = ckpt(e0.select(col("src").as("id"))
       .union(e0.select(col("dst").as("id"))).distinct())
     var nVerts = verts.count()
@@ -486,9 +439,37 @@ object Graph {
       }
       done = nVerts == 0L
       if (!done) {
-        // 2. COLOR + 3. CONFIRM
+        // 2. COLOR + 3. CONFIRM. minLabelFixpoint's labels flow from dst
+        // to src, so the min id that REACHES v (color) runs on reversed
+        // edges and the min id v reaches (confirm) on forward ones. The
+        // edge tables are subsets of rem, whose endpoints are all in
+        // verts, so max(verts, rem) rows bounds both of their tables.
+        val rows = math.max(nVerts, rem.count())
+        val pass = s"scc_${outer + 1}"
+        def minLabel(e: DataFrame, name: String): DataFrame = {
+          val (labels, converged) = Dedup.minLabelFixpoint(e, rows,
+            // seed lab = min(id, min over v's edges), every vertex kept
+            le => verts
+              .join(le.groupBy(col("src").as("id")).agg(min("dst").as("__mn")),
+                Seq("id"), "left")
+              .select(col("id"),
+                least(col("id"), coalesce(col("__mn"), col("id"))).as("lab")),
+            maxIter, reliable, s"${pass}_$name")
+          // a non-converged coloring can split one SCC across color
+          // classes and silently mislabel part of it in a later peel
+          // round — fail loudly instead (the same contract as the outer
+          // peel loop). Pointer jumping halves chain length per round, so
+          // maxIter=25 covers reach-chains ~2^25 long; hitting this means
+          // the graph genuinely needs a bigger budget.
+          if (!converged)
+            throw new IllegalStateException(
+              s"scc label propagation did not converge in maxIter=$maxIter " +
+                "pointer-jumping rounds; raise maxIter")
+          labels
+        }
         val colors = graft.util.Caches.persist(
-          minReach(verts, rem).withColumnRenamed("lab", "__color"))
+          minLabel(rem.select(col("dst").as("src"), col("src").as("dst")),
+            "color").withColumnRenamed("lab", "__color"))
         // checkpointed: every confirm-fixpoint round joins against this
         // edge table — left lazy it would re-run the two color joins
         // per iteration
@@ -498,9 +479,9 @@ object Graph {
           .join(colors.select(col("id").as("dst"), col("__color").as("__cd")),
             "dst")
           .where(col("__cs") === col("__cd"))
-          // REVERSED class-internal edges: blab = min id v reaches in-class
-          .select(col("dst").as("src"), col("src").as("dst")))
-        val blab = minReach(verts, classEdges).withColumnRenamed("lab", "__blab")
+          .select(col("src"), col("dst")))
+        val blab = minLabel(classEdges, "confirm")
+          .withColumnRenamed("lab", "__blab")
         val assigned = colors.join(blab, "id")
           .where(col("__color") === col("__blab"))
           .select(col("id").as("node"), col("__color").as("scc"))
@@ -552,10 +533,9 @@ object Graph {
     */
   def topoLayers(edges: DataFrame, maxOuter: Int = 12, maxIter: Int = 25,
       checkpointEvery: Int = 1): DataFrame = {
-    // AQE stays ON — same adjudication as [[scc]], which dominates this
-    // operator's runtime.
-    val labels = graft.util.Caches.persist(
-      scc(edges, maxOuter, maxIter, checkpointEvery))
+    // AQE stays ON — same adjudication as [[scc]]'s trim and peel rounds,
+    // which dominate this operator's runtime.
+    val labels = graft.util.Caches.persist(scc(edges, maxOuter, maxIter))
     val ce = graft.util.Caches.persist(edges
       .join(labels.select(col("node").as("src"), col("scc").as("__ca")),
         "src")
@@ -564,11 +544,11 @@ object Graph {
       .where(col("__ca") =!= col("__cb"))
       .select(col("__ca").as("ca"), col("__cb").as("cb")).distinct())
     val comps = labels.select(col("scc").as("c")).distinct()
-    // eager block reclaim is safe here for the same reason as in scc's
-    // minReach: the previous generation's layer rides along as __ol, so
-    // the convergence probe is a FILTER over the just-checkpointed
-    // blocks — one job per relaxation round, nothing reads a superseded
-    // generation after trunc() frees it
+    // eager block reclaim is safe here for the same reason as in
+    // Dedup.minLabelFixpoint: the previous generation's layer rides
+    // along as __ol, so the convergence probe is a FILTER over the
+    // just-checkpointed blocks — one job per relaxation round, nothing
+    // reads a superseded generation after trunc() frees it
     val trunc = new graft.util.Truncator(checkpointEvery)
     var layer = trunc(comps.select(col("c"), lit(0L).as("layer")))
     val nComps = layer.count()

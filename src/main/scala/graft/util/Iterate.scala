@@ -18,14 +18,15 @@ import org.apache.spark.sql.DataFrame
   * Checkpoint flavor follows [[graft.ops.Dedup.connectedComponents]]'s
   * contract: if the session has a RELIABLE checkpoint directory
   * configured (`SparkContext.setCheckpointDir` — the cluster deployment
-  * mode, survives executor loss), rounds use `checkpoint(eager = true)`
-  * and old round files are reclaimed by
+  * mode, survives executor loss), rounds use `checkpoint(eager = true)`;
+  * otherwise `localCheckpoint(eager = true)` (executor-block storage —
+  * fine single-node, lost on executor churn); see
+  * [[Truncator.checkpoint]]. The superseded generation is freed as soon
+  * as its successor is materialized — its local blocks or its reliable
+  * files — so at most two generations are ever held; the final one is
+  * the caller's (reliable files are reclaimed by
   * `spark.cleaner.referenceTracking.cleanCheckpoints` or by deleting the
-  * UUID subdir after the result is consumed; otherwise
-  * `localCheckpoint(eager = true)` (executor-block storage — fine
-  * single-node, lost on executor churn). The superseded local checkpoint
-  * is freed as soon as its successor is materialized, so at most two
-  * generations of blocks are ever held. Freeing goes through the
+  * UUID subdir after the result is consumed). Freeing goes through the
   * checkpointed plan's underlying RDD: `Dataset.unpersist` is a
   * CacheManager call, and a localCheckpoint-backed Dataset was never
   * registered there (localCheckpoint persists the internal RDD
@@ -58,33 +59,45 @@ final class Truncator(every: Int, eagerFree: Boolean = true) {
       orElse: DataFrame => DataFrame = identity): DataFrame = {
     round += 1
     if (every > 0 && round % every == 0) {
-      val reliable =
-        df.sparkSession.sparkContext.getCheckpointDir.isDefined
-      // eager in both flavors: the state must materialize BEFORE the
-      // superseded generation's blocks are dropped
-      val cp =
-        if (reliable) df.checkpoint(eager = true)
-        else df.localCheckpoint(eager = true)
-      if (eagerFree) prev.foreach(free)
+      val cp = Truncator.checkpoint(df,
+        reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      if (eagerFree) prev.foreach(Truncator.free)
       prev = Some(cp)
       cp
     } else orElse(df)
   }
+}
+
+object Truncator {
+
+  /** The one checkpoint call of the fixpoint loops: a RELIABLE
+    * `checkpoint` into the SparkContext's checkpoint dir when `reliable`,
+    * else an executor-local `localCheckpoint`. Eager in both flavors: the
+    * state must materialize BEFORE the superseded generation is freed.
+    */
+  def checkpoint(df: DataFrame, reliable: Boolean): DataFrame =
+    if (reliable) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
 
   /** Drop a superseded checkpoint generation's storage NOW. The plan of a
     * checkpointed Dataset is a single `LogicalRDD` leaf over the
-    * checkpointed RDD; for a localCheckpoint that RDD holds the persisted
-    * blocks, so `rdd.unpersist` is the call that actually releases them
-    * (reliable checkpoints keep files, reclaimed by
-    * `spark.cleaner.referenceTracking.cleanCheckpoints`). The
-    * Dataset-level unpersist stays as a belt-and-braces CacheManager
-    * sweep for loops that also `persist` their generations.
+    * checkpointed RDD. For a localCheckpoint that RDD holds the persisted
+    * blocks, so `rdd.unpersist` is the call that actually releases them;
+    * for a reliable checkpoint the RDD names its own files
+    * (`getCheckpointFile`), which are deleted. The Dataset-level
+    * unpersist stays as a belt-and-braces CacheManager sweep for loops
+    * that also `persist` their generations.
     */
-  private def free(df: DataFrame): Unit = {
+  def free(df: DataFrame): Unit = {
     df.unpersist(blocking = false)
     df.queryExecution.logical match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)
+        l.rdd.getCheckpointFile.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(path, true)
+        }
       case _ => ()
     }
   }

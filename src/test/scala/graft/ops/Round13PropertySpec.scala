@@ -51,14 +51,23 @@ class Round13PropertySpec extends SparkSpec {
   // ---- pins ---------------------------------------------------------
 
   test("scc matches brute-force mutual reachability on random digraphs") {
+    // the trials cycle through session shuffle partitions {1, 7} x AQE
+    // on/off: the label rounds scope both, the trim rounds inherit AQE
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val partsKey = "spark.sql.shuffle.partitions"
+    val settings = for (parts <- Seq("1", "7"); aqe <- Seq("true", "false"))
+      yield (parts, aqe)
     val rnd = new scala.util.Random(13)
-    for (trial <- 1 to 5) {
+    try for (trial <- 1 to 5) {
       val n = 4 + rnd.nextInt(6)
       val edges = (for {
         a <- 0 until n; b <- 0 until n
         if a != b && rnd.nextDouble() < 0.28
       } yield (a, b)).toSet
       if (edges.nonEmpty) {
+        val (parts, aqe) = settings((trial - 1) % settings.size)
+        spark.conf.set(partsKey, parts)
+        spark.conf.set(aqeKey, aqe)
         val want = bruteScc(n, edges)
           .map { case (v, c) => (f"n$v%02d", f"n$c%02d") }
         val covered = edges.flatMap(e => Seq(e._1, e._2))
@@ -68,10 +77,16 @@ class Round13PropertySpec extends SparkSpec {
           .collect().map(r => r.getString(0) -> r.getString(1)).toMap
         val wantCovered = want.filter { case (v, _) =>
           covered.contains(v.drop(1).toInt) }
-        assert(got == wantCovered,
-          s"trial $trial n=$n edges=$edges\n got=$got\nwant=$wantCovered")
+        assert(got == wantCovered, s"trial $trial n=$n partitions=$parts " +
+          s"aqe=$aqe edges=$edges\n got=$got\nwant=$wantCovered")
+        assert(spark.conf.get(aqeKey) == aqe, s"AQE leaked in trial $trial")
+        assert(spark.conf.get(partsKey) == parts,
+          s"shuffle partitions leaked in trial $trial")
         graft.util.Caches.unpersistAll()
       }
+    } finally {
+      spark.conf.set(partsKey, "4")
+      spark.conf.set(aqeKey, "true")
     }
   }
 
