@@ -40,10 +40,13 @@ object Probe {
         println(s"[probe] detail keys: ${e.detail.keys.mkString(",")}")
     }
     // 3. With confirm.truncate=true the same write succeeds.
-    LoadStage("latch_ok", new ParquetConnector(tmp), "probe_nation",
+    val ok = LoadStage("latch_ok", new ParquetConnector(tmp), "probe_nation",
       "nation", SaveMode.Overwrite,
-      options = Map("confirm.truncate" -> "true")).run()
+      options = Map("confirm.truncate" -> "true"))
+    ok.run()
     println(s"[probe] overwrite with latch ok, files=${new java.io.File(s"$tmp/nation.parquet").list().length}")
+    println(s"[probe] load recordsWritten=${ok.detail.getOrElse("recordsWritten", "-")} " +
+      s"numPartitions=${ok.detail.getOrElse("numPartitions", "-")}")
 
     // 4. Streaming load: rate source -> foreachBatch -> parquet connector.
     val sdir = java.nio.file.Files.createTempDirectory("graft_probe_stream").toString

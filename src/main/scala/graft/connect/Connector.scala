@@ -16,7 +16,9 @@ import graft.pipeline.PipelineContext
 trait Connector {
 
   /** Read one table into a DataFrame. Schema is inferred by the source
-    * (ref: CassandraExtract.scala:95-98 — no user schema hook).
+    * (ref: CassandraExtract.scala:95-98 — no user schema hook). The
+    * footer-schema formats (Parquet, ORC) reuse the schema inferred for an
+    * unchanged table through [[SchemaMemo]].
     */
   def read(table: String, options: Map[String, String])(implicit ctx: PipelineContext): DataFrame
 
@@ -81,6 +83,14 @@ trait Connector {
   * co-location). Bucket metadata lives in the session catalog (Spark
   * cannot recover it from bare parquet), hence the explicit read option
   * and the connector-scoped catalog name.
+  *
+  * Plain (non-bucketed) reads go through [[SchemaMemo]]: the schema
+  * Spark inferred from the footers is remembered per table path, read
+  * options and session SQL conf, and reused only while the read's own
+  * file listing shows exactly the files (path, length, modification
+  * time) it was inferred from. It holds schemas and file stamps, never
+  * rows. The bucketed catalog read resolves its schema from the session
+  * catalog and does not use it.
   */
 final class ParquetConnector(baseDir: String) extends Connector {
   private def path(table: String) = s"$baseDir/$table.parquet"
@@ -97,7 +107,7 @@ final class ParquetConnector(baseDir: String) extends Connector {
     if (options.get("bucket.table").exists(_.equalsIgnoreCase("true")))
       ctx.spark.table(catalogName(table))
     else
-      ctx.spark.read.options(options - "bucket.table").parquet(path(table))
+      SchemaMemo.read(ctx.spark, path(table), options - "bucket.table")(_.parquet(_))
 
   /** `disk.partitionBy` (comma-separated columns) lays the table out as
     * partition directories — the lakehouse layout whose directory pruning

@@ -13,6 +13,10 @@ import graft.pipeline.PipelineContext
   * `inferSchema` stays OFF by default to match that contract; pass
   * `params: {"inferSchema": "true"}` to opt in. All other Spark CSV
   * options ride through untouched.
+  *
+  * Reads do not use [[SchemaMemo]]: CSV has no footer schema; Spark
+  * takes the column names from the header row and, with `inferSchema`,
+  * the types from the rows themselves, so each read infers as Spark does.
   */
 final class DelimitedConnector(baseDir: String) extends Connector {
   private def path(table: String) = s"$baseDir/$table.csv"

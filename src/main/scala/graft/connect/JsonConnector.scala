@@ -10,6 +10,11 @@ import graft.pipeline.PipelineContext
   * when the inference pass over the data is too expensive at corpus scale
   * (inference reads every byte once before the real scan).
   *
+  * Reads do not use [[SchemaMemo]]: JSON inference derives the schema
+  * from the records themselves (sampled rows, under options such as
+  * `samplingRatio` and `primitivesAsString`), not from file footers, so
+  * each read infers as Spark does.
+  *
   * Same destructive-write latch as every other connector: Overwrite
   * requires explicit `confirm.truncate=true`.
   */

@@ -9,14 +9,15 @@ import graft.pipeline.PipelineContext
   * round-trip (unlike the delimited/JSON text formats), so it slots in
   * wherever an existing lake is ORC-based (Hive heritage).
   *
-  * Same destructive-write latch as every connector.
+  * Same destructive-write latch as every connector. Reads remember the
+  * footer schema in [[SchemaMemo]], as the parquet keyspace does.
   */
 final class OrcConnector(baseDir: String) extends Connector {
   private def path(table: String) = s"$baseDir/$table.orc"
 
   override def read(table: String, options: Map[String, String])(
       implicit ctx: PipelineContext): DataFrame =
-    ctx.spark.read.options(options).orc(path(table))
+    SchemaMemo.read(ctx.spark, path(table), options)(_.orc(_))
 
   override def write(df: DataFrame, table: String, mode: SaveMode,
       options: Map[String, String])(implicit ctx: PipelineContext): Unit = {

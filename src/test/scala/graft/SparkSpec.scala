@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,6 +11,23 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf001 = "/root/testdata/sf0.001"
+
+  /** Run `f` and count the Spark jobs it started, once the listener bus
+    * has delivered every event `f` posted.
+    */
+  def sparkJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val started = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      val result = f
+      assert(GraftListenerBridge.awaitSharedQueue(sc, 30000), "listener bus did not deliver")
+      (result, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Full dataset equality via row hashes joined both ways — the golden
     * comparator idiom adopted from the reference's test utilities

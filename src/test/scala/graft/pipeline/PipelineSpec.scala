@@ -2,9 +2,10 @@ package graft.pipeline
 
 import java.nio.file.Files
 import graft.SparkSpec
-import graft.connect.ParquetConnector
+import graft.connect.{Connector, ParquetConnector}
 import graft.ops._
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.broadcast
 
 /** End-to-end pipeline behavior mirroring the reference IT suite:
   * config-string -> parse -> run -> assert round-trip
@@ -113,5 +114,90 @@ class PipelineSpec extends SparkSpec {
     // BuildInfo.version, CassandraExtract.scala:15)
     assert(st.detail("version") == graft.BuildInfo.version)
     assert(graft.BuildInfo.version.nonEmpty)
+  }
+
+  private val Latch = Map("confirm.truncate" -> "true")
+
+  /** A view whose plan broadcasts `nation` into a join with `customer`
+    * under the session's AQE.
+    */
+  private def broadcastJoinView(view: String): DataFrame = {
+    val c = spark.read.parquet(s"$sf001/customer.parquet")
+    val n = spark.read.parquet(s"$sf001/nation.parquet")
+    val df = c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+      .select("c_custkey", "c_name", "n_name")
+    df.createOrReplaceTempView(view)
+    df
+  }
+
+  test("load numPartitions is the written frame's partition count") {
+    implicit val ctx: PipelineContext = PipelineContext(spark)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val conn = new ParquetConnector(Files.createTempDirectory("graft_loadparts").toString)
+    spark.range(0, 1000, 1, 5).selectExpr("id", "id % 7 AS g").createOrReplaceTempView("lp_plain")
+    broadcastJoinView("lp_join")
+    val cases = Seq(
+      ("plain", "lp_plain", None, Nil),
+      ("three", "lp_plain", Some(3), Nil),
+      ("byCol", "lp_plain", None, Seq("g")),
+      ("join", "lp_join", None, Nil))
+    cases.foreach { case (label, view, n, cols) =>
+      val expected = Repartition(spark.table(view), n, cols).queryExecution.toRdd.getNumPartitions
+      val st = LoadStage(label, conn, view, label, SaveMode.Overwrite, n, cols, Latch)
+      st.run()
+      assert(st.detail("numPartitions") == expected, label)
+    }
+    assert(spark.table("lp_plain").rdd.getNumPartitions == 5)
+  }
+
+  test("load recordsWritten is exact for every save mode and layout") {
+    implicit val ctx: PipelineContext = PipelineContext(spark)
+    spark.range(0, 500).selectExpr("id", "id % 4 AS g").createOrReplaceTempView("rw_src")
+    spark.range(0, 500).where("id < 0").createOrReplaceTempView("rw_empty")
+    (1 to 20).foreach { round =>
+      val dir = Files.createTempDirectory("graft_loadcount").toString
+      val conn = new ParquetConnector(dir)
+      def written(view: String, table: String, mode: SaveMode,
+          options: Map[String, String] = Map.empty): Any = {
+        val st = LoadStage(s"w$round", conn, view, table, mode, options = options)
+        st.run()
+        st.detail.getOrElse("recordsWritten", "missing")
+      }
+      assert(written("rw_src", "t", SaveMode.Overwrite, Latch) == 500L, s"overwrite, round $round")
+      assert(written("rw_src", "t", SaveMode.Append) == 500L, s"append, round $round")
+      assert(written("rw_src", "t", SaveMode.Ignore) == 0L, s"ignore on existing, round $round")
+      assert(written("rw_empty", "e", SaveMode.Overwrite, Latch) == 0L, s"empty, round $round")
+      assert(written("rw_src", "p", SaveMode.Overwrite, Latch + ("disk.partitionBy" -> "g")) == 500L,
+        s"partitioned, round $round")
+      assert(spark.read.parquet(s"$dir/t.parquet").count() == 1000L)
+    }
+  }
+
+  test("a connector that never executes the frame leaves Load without a count, promptly") {
+    implicit val ctx: PipelineContext = PipelineContext(spark)
+    val ignoring = new Connector {
+      def read(table: String, options: Map[String, String])(implicit ctx: PipelineContext) =
+        ctx.spark.emptyDataFrame
+      def write(df: DataFrame, table: String, mode: SaveMode, options: Map[String, String])(
+          implicit ctx: PipelineContext): Unit = ()
+    }
+    spark.range(0, 10).createOrReplaceTempView("ig_src")
+    val st = LoadStage("ignored", ignoring, "ig_src", "t", SaveMode.Append)
+    val t0 = System.nanoTime()
+    st.run()
+    assert((System.nanoTime() - t0) / 1e9 < 5.0)
+    assert(!st.detail.contains("recordsWritten"))
+    assert(!st.detail.contains("numPartitions"))
+  }
+
+  test("a Load launches as many Spark jobs as a bare write of its view") {
+    implicit val ctx: PipelineContext = PipelineContext(spark)
+    val tmp = Files.createTempDirectory("graft_loadjobs").toString
+    val view = broadcastJoinView("lj_join")
+    val (_, bare) = sparkJobs(view.write.mode(SaveMode.Overwrite).parquet(s"$tmp/bare"))
+    val (_, load) = sparkJobs(LoadStage("lj", new ParquetConnector(tmp), "lj_join", "loaded",
+      SaveMode.Overwrite, options = Latch).run())
+    assert(bare >= 2, "the view broadcasts under AQE, then writes")
+    assert(load == bare)
   }
 }
