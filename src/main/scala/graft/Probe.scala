@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import graft.connect.ParquetConnector
-import graft.ops.LoadStage
+import graft.ops.{ExtractStage, LoadStage}
 import graft.pipeline._
 
 /** Dev-only smoke probe: drives the flagship entry and the destructive-
@@ -47,6 +47,11 @@ object Probe {
     println(s"[probe] overwrite with latch ok, files=${new java.io.File(s"$tmp/nation.parquet").list().length}")
     println(s"[probe] load recordsWritten=${ok.detail.getOrElse("recordsWritten", "-")} " +
       s"numPartitions=${ok.detail.getOrElse("numPartitions", "-")}")
+    // 3b. Extract the written table back: scan metrics in the stage detail.
+    val ext = ExtractStage("probe_extract", new ParquetConnector(tmp), "nation", "probe_back")
+    ext.run()
+    println(s"[probe] extract inputFiles=${ext.detail("inputFiles")} " +
+      s"numPartitions=${ext.detail("numPartitions")}")
 
     // 4. Streaming load: rate source -> foreachBatch -> parquet connector.
     val sdir = java.nio.file.Files.createTempDirectory("graft_probe_stream").toString

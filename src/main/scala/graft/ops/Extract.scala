@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
-import graft.connect.Connector
+import graft.connect.{Connector, PlannedPartitions}
 import graft.pipeline._
 
 /** Source stage: read one table through the connector, optionally
@@ -14,6 +14,20 @@ import graft.pipeline._
   * `partitionBy` are the explicit override for downstream locality. The
   * persist level is MEMORY_AND_DISK_SER (ref: CassandraExtract.scala:131) —
   * serialized so a hot 100 TB-scale intermediate spills instead of OOMing.
+  *
+  * `numPartitions` in the detail is the frame's partition count, found
+  * without executing the frame ([[PlannedPartitions]]):
+  *   - with `numPartitions = n` it is `n`: the count-taking repartition is
+  *     never coalesced, so the shuffle need not run to know it;
+  *   - for a plain file scan it is the number of file partitions the
+  *     scan's own listing packs into, computed the way Spark's read RDD
+  *     computes it, without building the file reader (which would copy
+  *     and broadcast the Hadoop configuration for a frame the downstream
+  *     query plans again anyway);
+  *   - otherwise (`partitionBy` without a count under AQE, a bucketed read,
+  *     a non-file source) it is `toRdd.getNumPartitions`, which under AQE
+  *     runs the hash repartition's shuffle once to learn its coalesced
+  *     count.
   */
 final case class ExtractStage(
     name: String,
@@ -43,9 +57,7 @@ final case class ExtractStage(
     detail += "outputColumns" -> df.schema.length
     if (!ctx.isStreaming) {
       detail += "inputFiles" -> df.inputFiles.length
-      // queryExecution.toRdd avoids the extra InternalRow→Row conversion
-      // stage df.rdd would add just to read a partition count.
-      detail += "numPartitions" -> df.queryExecution.toRdd.getNumPartitions
+      detail += "numPartitions" -> PlannedPartitions.count(df)
       if (persist) {
         df.persist(StorageLevel.MEMORY_AND_DISK_SER)
         detail += "records" -> df.count() // the materializing action

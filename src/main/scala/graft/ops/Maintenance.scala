@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.connect.PlannedPartitions
 
 /** Lakehouse table maintenance.
   *
@@ -59,7 +60,7 @@ object Maintenance {
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     val in = spark.read.parquet(inDir)
     val shaped =
-      if (in.rdd.getNumPartitions >= nOut) in.coalesce(nOut)
+      if (PlannedPartitions.count(in) >= nOut) in.coalesce(nOut)
       else in.repartition(nOut)
     shaped.write.mode("overwrite").parquet(outDir)
     (spark.read.parquet(outDir), dataFiles(spark, outDir).size)

@@ -1,10 +1,17 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import graft.connect.{Connector, ParquetConnector}
 import graft.ops._
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode}
 import org.apache.spark.sql.functions.broadcast
 
 /** End-to-end pipeline behavior mirroring the reference IT suite:
@@ -199,5 +206,38 @@ class PipelineSpec extends SparkSpec {
       SaveMode.Overwrite, options = Latch).run())
     assert(bare >= 2, "the view broadcasts under AQE, then writes")
     assert(load == bare)
+  }
+
+  /** "logger: message" of every ERROR event logged while `body` runs. */
+  private def loggedErrors(body: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-errors", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR))
+          seen.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}"): Unit
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try body
+    finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+    seen.asScala.toSeq
+  }
+
+  test("after a Load, a statement that fails analysis logs no listener error") {
+    implicit val ctx: PipelineContext = PipelineContext(spark)
+    val conn = new ParquetConnector(Files.createTempDirectory("graft_loadlog").toString)
+    spark.range(0, 10).createOrReplaceTempView("ll_src")
+    val st = LoadStage("ll", conn, "ll_src", "t", SaveMode.Overwrite, options = Latch)
+    st.run()
+    assert(st.detail("recordsWritten") == 10L)
+    val errors = loggedErrors {
+      intercept[AnalysisException](spark.sql("SELECT * FROM ll_no_such_view"))
+      assert(GraftListenerBridge.awaitSharedQueue(spark.sparkContext, 30000L))
+    }
+    assert(!errors.exists(_.contains("ListenerBus")), errors.mkString("\n"))
   }
 }
