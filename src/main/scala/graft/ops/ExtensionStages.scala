@@ -7,45 +7,47 @@ import graft.pipeline._
   * (SURVEY §2.3), so a declarative JSON pipeline can run dedup/similarity/
   * text-analysis between Extract and Load exactly like the reference's
   * stages run between its extract and load. Thin: all semantics live in
-  * [[Dedup]], [[Similarity]], [[TextAnalysis]].
+  * [[Dedup]], [[Similarity]], [[TextAnalysis]]. Each stage is built by its
+  * factory in [[graft.pipeline.Parser]], the one place its config keys and
+  * defaults are written, so the fields here carry no defaults.
   */
 final case class DedupTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // exact | exact_incremental | minhash | minhash_pairs | minhash_cc | minhash_cc_apply | containment_pairs | containment_stratified | weighted_pairs | knn | simhash | simhash_pairs | ngram_pairs | prefix_pairs | edit_pairs | jw_pairs | passages | keep_best | cluster_stats
-    idCol: String = "doc_id",
-    textCol: String = "text",
-    keys: Seq[String] = Nil,
-    blockCols: Seq[String] = Nil,
+    method: String,
+    idCol: String,
+    textCol: String,
+    keys: Seq[String],
+    blockCols: Seq[String],
     // None -> the library default for the chosen method (0.9 for minhash,
     // 0.7 for ngram_pairs) — a single stage-level default would silently
     // override the per-method documentation.
-    threshold: Option[Double] = None,
-    minhashK: Int = 64,
-    bands: Int = 16,
-    rows: Int = 4,
-    shingleN: Int = 3,
-    ngramN: Int = 5,
-    bucketWidth: Int = 50,
-    sampleMod: Int = 4,
-    maxHamming: Int = 3,
-    maxBucket: Int = 4096,
-    maxBlock: Int = 1024,
-    lshBands: Int = 8,
-    maxIter: Int = 25,
-    window: Int = 8,
-    maxDist: Int = 5,
-    byDigest: Boolean = false,
-    checkpointDir: Option[String] = None,
-    seenView: Option[String] = None,
+    threshold: Option[Double],
+    minhashK: Int,
+    bands: Int,
+    rows: Int,
+    shingleN: Int,
+    ngramN: Int,
+    bucketWidth: Int,
+    sampleMod: Int,
+    maxHamming: Int,
+    maxBucket: Int,
+    maxBlock: Int,
+    lshBands: Int,
+    maxIter: Int,
+    window: Int,
+    maxDist: Int,
+    byDigest: Boolean,
+    checkpointDir: Option[String],
+    seenView: Option[String],
     // weighted_pairs: term-frequency cap of the multiset expansion
-    maxTf: Int = 16,
+    maxTf: Int,
     // keep_best / cluster_stats: the (doc_id, component) view a prior
     // connectedComponents pass registered
-    componentsView: Option[String] = None,
+    componentsView: Option[String],
     // keep_best: the per-doc quality score the cluster winner maximizes
-    scoreCol: String = "score")
+    scoreCol: String)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -151,39 +153,39 @@ final case class SimilarityTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // topk | maxsim | ann | ivf | kmeans | medoids | kcenter | neardup_pairs | standardize | quantize | project | semantic_dedup | hard_negatives | ann_recall | pca_cov | health | bitext | bitext_scalable | pq_topk | hamming_topk | hamming_pairs
-    queryView: Option[String] = None,
-    k: Int = 5,
-    threshold: Double = 0.95,
-    centroidEvery: Int = 100,
-    maxBucket: Int = 4096,
-    kmeansIters: Int = 2,
+    method: String,
+    queryView: Option[String],
+    k: Int,
+    threshold: Double,
+    centroidEvery: Int,
+    maxBucket: Int,
+    kmeansIters: Int,
     // None -> the per-method library default (ann bands 16x4, neardup 8x8)
-    nBits: Option[Int] = None,
-    bands: Option[Int] = None,
-    rows: Option[Int] = None,
+    nBits: Option[Int],
+    bands: Option[Int],
+    rows: Option[Int],
     // ivf only: bit-deterministic sequential-sum centroids (oracle replay)
-    exactReplay: Boolean = false,
+    exactReplay: Boolean,
     // ivf only: number of nearest cells each query scans (recall knob)
-    probes: Int = 1,
+    probes: Int,
     // quantize only: code levels (256 = int8)
-    levels: Int = 256,
+    levels: Int,
     // project only: input/output dimensionality of the sign projection
-    inDim: Int = 64,
-    outDim: Int = 16,
+    inDim: Int,
+    outDim: Int,
     // bitext family: the margin-criterion quality bar
-    minMargin: Double = 0.01,
+    minMargin: Double,
     // pq_topk: subspace count (subDim = inDim / subspaces)
-    subspaces: Int = 8,
+    subspaces: Int,
     // ivf_write / ivf_query: the persisted cell-partitioned index dir
-    indexDir: Option[String] = None,
+    indexDir: Option[String],
     // ivf_write: writer options (the destructive confirm.truncate latch)
-    options: Map[String, String] = Map.empty,
+    options: Map[String, String],
     // pair_quality: the ground-truth grouping column
-    labelCol: String = "label",
+    labelCol: String,
     // pq_recall / opq_recall / ivf_pq_topk: PQ codebook training rounds
     // (the operators' own default, separate from the cell kmeansIters)
-    pqIters: Int = 1)
+    pqIters: Int)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -313,13 +315,13 @@ final case class AsofJoinTransformStage(
     rightView: String,
     outputView: String,
     keys: Seq[String],
-    leftTime: String = "ts",
-    rightTime: String = "ts",
-    forward: Boolean = false,
+    leftTime: String,
+    rightTime: String,
+    forward: Boolean,
     // nearest-direction pick (tolerance in µs for timestamps, native
     // units for numeric time columns); overrides `forward`
-    nearest: Boolean = false,
-    toleranceMicros: Long = Long.MaxValue)
+    nearest: Boolean,
+    toleranceMicros: Long)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -343,7 +345,7 @@ final case class SaltedJoinTransformStage(
     rightView: String,
     outputView: String,
     keys: Seq[String],
-    saltFactor: Int = 8)
+    saltFactor: Int)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -365,11 +367,11 @@ final case class RangeJoinTransformStage(
     leftTime: String,
     startCol: String,
     endCol: String,
-    keys: Seq[String] = Nil,
-    bucketSeconds: Long = 3600,
+    keys: Seq[String],
+    bucketSeconds: Long,
     // set -> interval-OVERLAP join: left [leftTime, leftEnd] vs right
     // [startCol, endCol], instead of point-in-interval containment
-    leftEnd: Option[String] = None)
+    leftEnd: Option[String])
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -393,14 +395,14 @@ final case class ContaminationTransformStage(
     inputView: String, // the corpus
     evalView: String,  // the eval suite (check) / reference corpus (novelty)
     outputView: String,
-    method: String = "check", // check | novelty | novelty_bloom
-    idCol: String = "doc_id",
-    textCol: String = "text",
-    shingleN: Int = 3,
-    broadcastEval: Boolean = true,
+    method: String,
+    idCol: String,
+    textCol: String,
+    shingleN: Int,
+    broadcastEval: Boolean,
     // novelty_bloom: bitmap size and probe count
-    mBits: Int = 1 << 20,
-    k: Int = 5)
+    mBits: Int,
+    k: Int)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -437,23 +439,23 @@ final case class ProfileTransformStage(
     inputView: String,
     outputView: String,
     columns: Seq[String],
-    exact: Boolean = true,
-    method: String = "table", // table | histogram | bucketize | winsorize | outliers | outliers_mad | correlation | linear_fit | percentile_rank | benford | trimmed_mean | corpus_report
-    valueCol: String = "value",
-    idCol: String = "doc_id",
-    binWidth: Double = 1.0,
-    nBins: Int = 4,
-    pLo: Double = 0.05,
-    pHi: Double = 0.95,
-    byCols: Seq[String] = Nil,
-    sigma: Double = 3.0,
-    madK: Double = 3.5,
-    xCol: String = "x",
-    yCol: String = "y",
+    exact: Boolean,
+    method: String,
+    valueCol: String,
+    idCol: String,
+    binWidth: Double,
+    nBins: Int,
+    pLo: Double,
+    pHi: Double,
+    byCols: Seq[String],
+    sigma: Double,
+    madK: Double,
+    xCol: String,
+    yCol: String,
     // corpus_report column names
-    textCol: String = "text",
-    langCol: String = "lang",
-    sourceCol: String = "source")
+    textCol: String,
+    langCol: String,
+    sourceCol: String)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -496,27 +498,27 @@ final case class SampleTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // deterministic | stratified | per_stratum_head | shard_by_budget | upsample | weighted_topk | negative | shuffle | pack | rebalance | top_fraction | token_cap | systematic | ordinal | importance | rendezvous | pareto
-    idCol: String = "doc_id",
-    rate: Double = 1.0,
-    salt: String = "",
-    stratumCol: String = "lang",
-    rates: Map[String, Double] = Map.empty,
-    defaultRate: Double = 1.0,
-    tokenCol: String = "n_tokens",
-    budget: Long = 1000000L,
-    k: Int = 100,
-    weightCol: String = "n_tokens",
-    nBuckets: Int = 1024,
+    method: String,
+    idCol: String,
+    rate: Double,
+    salt: String,
+    stratumCol: String,
+    rates: Map[String, Double],
+    defaultRate: Double,
+    tokenCol: String,
+    budget: Long,
+    k: Int,
+    weightCol: String,
+    nBuckets: Int,
     // importance (DSIR) only: token source + the target-domain predicate
     // (rows whose stratumCol equals targetValue form the target sample)
-    textCol: String = "text",
-    targetValue: String = "en",
+    textCol: String,
+    targetValue: String,
     // pareto only: the two maximized criteria
-    xCol: String = "x",
-    yCol: String = "y",
+    xCol: String,
+    yCol: String,
     // leakage_safe_split: the (doc_id, component) near-dup cluster view
-    componentsView: Option[String] = None)
+    componentsView: Option[String])
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -605,59 +607,59 @@ final case class TextAnalysisTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    analysis: String, // quality | quality_filter | normalize | chunk | tokens | langid | fingerprint | langdist | repetition | tfidf | quality_score | lm_score | dup_spans | keyness | head_coverage | entropy | bpe_pairs | pmi | blocklist | bpe_apply | bpe_fertility | boilerplate | ttr | chao1 | script_mix | distinct_n | vectorize
-    idCol: String = "doc_id",
-    textCol: String = "text",
-    langCol: String = "lang",
+    analysis: String,
+    idCol: String,
+    textCol: String,
+    langCol: String,
     // quality_score: (metric, weight) pairs in accumulation order
-    scoreWeights: Seq[(String, Double)] = Nil,
-    bias: Double = 0.0,
-    scoreThreshold: Double = 0.5,
-    minChars: Long = 50L,
-    maxChars: Long = 100000L,
-    minWords: Long = 10L,
-    minTtr: Double = 0.1,
-    minStopwordRatio: Double = 0.0,
-    maxPunctRatio: Double = 0.3,
-    chunkSize: Int = 64,
-    overlap: Int = 16,
-    ngramN: Int = 2,
-    topK: Int = 5,
+    scoreWeights: Seq[(String, Double)],
+    bias: Double,
+    scoreThreshold: Double,
+    minChars: Long,
+    maxChars: Long,
+    minWords: Long,
+    minTtr: Double,
+    minStopwordRatio: Double,
+    maxPunctRatio: Double,
+    chunkSize: Int,
+    overlap: Int,
+    ngramN: Int,
+    topK: Int,
     // zipf: vocabulary-head size for the ln-ln fit. Its OWN knob (not
     // the generic topK, whose default 5 would fit a regression on five
     // ranks) so an omitted config matches the zipfFit API default.
-    zipfTopN: Int = 1000,
+    zipfTopN: Int,
     // lm_score: model grouping (e.g. per language) + add-k smoothing
-    groupCols: Seq[String] = Nil,
-    alpha: Double = 0.1,
+    groupCols: Seq[String],
+    alpha: Double,
     // keyness: total Dirichlet prior mass (group column = langCol)
-    alpha0: Double = 100.0,
+    alpha0: Double,
     // blocklist: the whole-word term list
-    terms: Seq[String] = Nil,
+    terms: Seq[String],
     // bpe_apply: "left right" merge pairs in application order
-    merges: Seq[String] = Nil,
+    merges: Seq[String],
     // boilerplate: chunk window (words) and cross-doc frequency floor
-    window: Int = 8,
-    minDocs: Int = 2,
+    window: Int,
+    minDocs: Int,
     // vectorize: hashed bag-of-words dimensionality
-    dim: Int = 64,
+    dim: Int,
     // bpe_learn: greedy merge rounds
-    rounds: Int = 4,
+    rounds: Int,
     // kn_score: the fixed Kneser-Ney discount D
-    discount: Double = 0.75,
+    discount: Double,
     // unigram family: piece length cap, learn knobs, apply vocab
     // (piece -> logp; a set, so the config map's lack of order is fine)
-    maxPieceLen: Int = 4,
-    vocabSize: Int = 64,
-    seedSize: Int = 2048,
-    iters: Int = 2,
-    vocab: Seq[(String, Double)] = Nil,
+    maxPieceLen: Int,
+    vocabSize: Int,
+    seedSize: Int,
+    iters: Int,
+    vocab: Seq[(String, Double)],
     // wordpiece apply: the fixed piece set ("##"-prefixed continuations)
-    pieces: Seq[String] = Nil,
+    pieces: Seq[String],
     // ngram_counts: corpus count floor
-    minCount: Long = 1L,
+    minCount: Long,
     // fix_encoding: stacked double-decode layers to unwind
-    depth: Int = 1)
+    depth: Int)
     extends Stage {
 
   private def parsedMerges: Seq[(String, String)] = merges.map { m =>
@@ -812,7 +814,7 @@ final case class AssembleTransformStage(
     groupCol: String,
     orderCols: Seq[String],
     payloadCol: String,
-    maxTurns: Int = 16)
+    maxTurns: Int)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -834,26 +836,26 @@ final case class RetrievalTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // index | bm25 | rrf | rank_eval
-    idCol: String = "doc_id",
-    textCol: String = "text",
-    minDf: Long = 1L,
-    queryTerms: Seq[String] = Nil,
-    k: Int = 10,
-    k1: Double = 1.2,
-    b: Double = 0.75,
+    method: String,
+    idCol: String,
+    textCol: String,
+    minDf: Long,
+    queryTerms: Seq[String],
+    k: Int,
+    k1: Double,
+    b: Double,
     // rrf only: ranked-list views (each with doc_id + rnk) and the
     // rank-smoothing constant
-    rankViews: Seq[String] = Nil,
-    rrfK: Int = 60,
+    rankViews: Seq[String],
+    rrfK: Int,
     // rank_eval only: the qrels view (query_id, doc_id); inputView is
     // the run (query_id, doc_id, rnk)
-    qrelsView: Option[String] = None,
+    qrelsView: Option[String],
     // qld only: Dirichlet prior mass
-    mu: Double = 2000.0,
+    mu: Double,
     // rm3 only: feedback depth and expansion-term budget
-    fbDocs: Int = 5,
-    fbTerms: Int = 10)
+    fbDocs: Int,
+    fbTerms: Int)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -903,23 +905,23 @@ final case class PiiTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // stats | scrub | kanon | suppress | noisy_counts | ldiversity | tcloseness | pseudonymize | pseudonym_audit
-    idCol: String = "doc_id",
-    textCol: String = "text",
+    method: String,
+    idCol: String,
+    textCol: String,
     // kanon / suppress / ldiversity: the quasi-identifier columns;
     // noisy_counts: dims
-    cols: Seq[String] = Nil,
-    k: Long = 8L,
-    scale: Double = 1.0,
-    salt: String = "",
+    cols: Seq[String],
+    k: Long,
+    scale: Double,
+    salt: String,
     // ldiversity / tcloseness: the sensitive column (textCol would
     // mislead here)
-    sensitiveCol: String = "",
+    sensitiveCol: String,
     // tcloseness: the paper's distribution-distance threshold
-    t: Double = 0.2,
+    t: Double,
     // randomized_response: truth probability pNum/pDen over sensitiveCol
-    pNum: Long = 3L,
-    pDen: Long = 4L)
+    pNum: Long,
+    pDen: Long)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -972,26 +974,26 @@ final case class ClassifyTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // train_score | auc | confusion | calibration | agreement | mcnemar | conformal
-    idCol: String = "doc_id",
-    textCol: String = "text",
+    method: String,
+    idCol: String,
+    textCol: String,
     // train_score: SQL boolean expression labeling the positive class
-    positiveExpr: String = "",
-    buckets: Int = 128,
-    labelCol: String = "label",
-    scoreCol: String = "score",
-    predCol: String = "pred",
-    binWidth: Double = 1.0,
+    positiveExpr: String,
+    buckets: Int,
+    labelCol: String,
+    scoreCol: String,
+    predCol: String,
+    binWidth: Double,
     // agreement (and mcnemar): the two labelings/predictions to compare
-    aCol: String = "a",
-    bCol: String = "b",
+    aCol: String,
+    bCol: String,
     // conformal: test view + truth/prediction columns + miscoverage
-    rightView: String = "",
-    yCol: String = "y",
-    yhatCol: String = "yhat",
-    alpha: Double = 0.1,
+    rightView: String,
+    yCol: String,
+    yhatCol: String,
+    alpha: Double,
     // krippendorff: one column per rater (null = abstained)
-    raterCols: Seq[String] = Nil)
+    raterCols: Seq[String])
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1036,33 +1038,39 @@ final case class GraphTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String = "pagerank", // pagerank | triangles | cooccur_edges | kcore | lpa | link_pred | ppr | cc | scc | topo_layers | ball | harmonic | nf | walks | clustering | reciprocity | degree_alpha | modularity | assortativity
-    srcCol: String = "src",
-    dstCol: String = "dst",
-    iters: Int = 3,
-    dampNum: Long = 850,
-    dampDen: Long = 1000,
-    groupCol: String = "g",
-    nodeCol: String = "n",
-    maxGroup: Int = 256,
-    coreK: Int = 3,
-    seedPrefix: String = "s",
+    method: String,
+    srcCol: String,
+    dstCol: String,
+    iters: Int,
+    dampNum: Long,
+    dampDen: Long,
+    groupCol: String,
+    nodeCol: String,
+    maxGroup: Int,
+    coreK: Int,
+    seedPrefix: String,
     // modularity only: view holding the (node, community) assignment
-    assignView: String = "",
+    assignView: String,
     // lineage truncation cadence for the iterative methods (0 = off)
-    checkpointEvery: Int = 0,
+    checkpointEvery: Int,
     // scc / topo_layers: outer trim+color rounds and per-round fixpoint cap
-    maxOuter: Int = 12,
-    maxIter: Int = 25,
+    maxOuter: Int,
+    maxIter: Int,
     // walks: neighbor-pick hash salt (iters doubles as the walk length)
-    salt: String = "",
+    salt: String,
     // degree_alpha: smallest degree the power-law tail fit includes
-    dMin: Long = 2L)
+    dMin: Long)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
     import org.apache.spark.sql.functions.{col, least, greatest}
     val in = Views.resolve(inputView)
+    // the canonical undirected edge view: self-loops dropped, (a, b) with
+    // a < b, distinct — the input contract of the undirected methods
+    def und = in
+      .select(least(col(srcCol), col(dstCol)).as("a"),
+        greatest(col(srcCol), col(dstCol)).as("b"))
+      .where(col("a") < col("b")).distinct()
     detail += "method" -> method
     detail += "inputView" -> inputView
     detail += "outputView" -> outputView
@@ -1085,13 +1093,6 @@ final case class GraphTransformStage(
           in.select(col(srcCol).as("src"), col(dstCol).as("dst")),
           iters, checkpointEvery)
       case "triangles" =>
-        // canonicalize any (src, dst) view: undirected, self-loops
-        // dropped, (a, b) with a < b, distinct — triangleCounts's input
-        // contract
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.triangleCounts(und)
       case "cooccur_edges" =>
         Graph.coOccurrenceEdges(in, groupCol, nodeCol, maxGroup)
@@ -1102,23 +1103,11 @@ final case class GraphTransformStage(
           .select(col("doc_id").as("node"), col("component"))
       // iters doubles as the peel-rounds budget
       case "kcore" =>
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.kCore(und, coreK, iters, checkpointEvery)
       // edge-cohesion peel: coreK = k, iters = the peel-rounds budget
       case "ktruss" =>
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.kTruss(und, coreK, iters)
       case "lpa" =>
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.labelPropagation(und, iters, checkpointEvery)
       // teleport mass pinned to nodes with the seedPrefix
       case "ppr" =>
@@ -1129,47 +1118,23 @@ final case class GraphTransformStage(
       // HyperBall family over the canonical undirected edge view;
       // iters doubles as the radius
       case "ball" =>
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.neighborhoodSizes(und, iters, checkpointEvery = checkpointEvery)
       case "harmonic" =>
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.harmonicCentrality(und, iters, checkpointEvery = checkpointEvery)
       case "nf" =>
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.neighborhoodFunction(und, iters, checkpointEvery = checkpointEvery)
       // candidate new edges by shared-neighbor structure; maxGroup
       // doubles as the wedge-center degree cap, coreK as minCommon
       case "link_pred" =>
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.linkPrediction(und, maxDegree = maxGroup,
           minCommon = coreK.toLong)
       // Newman Q of an assignment view with (node, community) columns
       case "modularity" =>
         require(assignView.nonEmpty,
           "modularity requires assignView with (node, community) columns")
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.modularity(und, Views.resolve(assignView))
       // Newman degree assortativity of the canonical undirected view
       case "assortativity" =>
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.assortativity(und)
       // strongly-connected components of the DIRECTED view
       case "scc" =>
@@ -1183,17 +1148,9 @@ final case class GraphTransformStage(
           if (checkpointEvery > 0) checkpointEvery else 1)
       // hash-deterministic node2vec-style walks; iters = the walk length
       case "walks" =>
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.deterministicWalks(und, length = iters, salt = salt)
       // local clustering coefficient per node (triangles / wedges)
       case "clustering" =>
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.clusteringCoefficients(und)
       // directed-edge reciprocity of the raw (src, dst) view
       case "reciprocity" =>
@@ -1201,10 +1158,6 @@ final case class GraphTransformStage(
           in.select(col(srcCol).as("src"), col(dstCol).as("dst")))
       // Clauset-Shalizi-Newman discrete MLE of the degree tail exponent
       case "degree_alpha" =>
-        val und = in
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .where(col("a") < col("b")).distinct()
         Graph.degreePowerLaw(und, dMin)
       case other =>
         throw new IllegalArgumentException(s"unknown graph method '$other'")
@@ -1226,8 +1179,8 @@ final case class BloomJoinTransformStage(
     outputView: String,
     leftKey: String,
     rightKey: String,
-    mBits: Int = 1 << 23,
-    k: Int = 5)
+    mBits: Int,
+    k: Int)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1251,7 +1204,7 @@ final case class CompactFilesStage(
     inputDir: String,
     outputDir: String,
     outputView: String,
-    targetBytes: Long = 128L * 1024 * 1024)
+    targetBytes: Long)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1277,12 +1230,12 @@ final case class EncodeTransformStage(
     inputView: String,
     outputView: String,
     columns: Seq[String],
-    method: String = "encode", // encode | vocab | target_loo | woe
-    idCol: String = "doc_id",
-    targetCol: String = "label",
-    maxVocab: Long = 1000000L,
+    method: String,
+    idCol: String,
+    targetCol: String,
+    maxVocab: Long,
     // woe only: Laplace smoothing
-    alpha: Double = 0.5)
+    alpha: Double)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1315,21 +1268,21 @@ final case class SketchTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // hll | kmv | cms | hll_intersect | hll_rolling | kmv_jaccard | kmv_diff | join_size
+    method: String,
     keyCol: String,
-    groupCols: Seq[String] = Nil,
-    m: Int = 512,
-    k: Int = 256,
-    depth: Int = 4,
-    width: Int = 256,
-    topN: Int = 10,
+    groupCols: Seq[String],
+    m: Int,
+    k: Int,
+    depth: Int,
+    width: Int,
+    topN: Int,
     // hll_intersect only: the second corpus view (B side)
-    otherView: String = "",
+    otherView: String,
     // hll_rolling only: integral time-bucket column + trailing window
-    bucketCol: String = "bucket",
-    window: Int = 7,
+    bucketCol: String,
+    window: Int,
     // kmv_jaccard only: key column on the B side ("" = keyCol)
-    otherKeyCol: String = "")
+    otherKeyCol: String)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1403,12 +1356,12 @@ final case class UrlTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // normalize | domain_mix | domain_quality | domain_filter
-    urlCol: String = "url",
-    tokenCol: String = "n_tokens",
-    goodCol: String = "good",
-    minShrunk: Double = 0.5,
-    m: Double = 20.0)
+    method: String,
+    urlCol: String,
+    tokenCol: String,
+    goodCol: String,
+    minShrunk: Double,
+    m: Double)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1434,15 +1387,15 @@ final case class MultimodalTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // attach | meta | validate | decode | frames | resize | features | phash | phash_pairs
-    idCol: String = "doc_id",
-    textCol: String = "text",
-    formatCol: Option[String] = None,
-    metaCols: Seq[String] = Nil,
-    everyN: Int = 2,
-    maxDim: Int = 128,
-    maxHamming: Int = 3,
-    maxBucket: Int = 4096)
+    method: String,
+    idCol: String,
+    textCol: String,
+    formatCol: Option[String],
+    metaCols: Seq[String],
+    everyN: Int,
+    maxDim: Int,
+    maxHamming: Int,
+    maxBucket: Int)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1478,16 +1431,16 @@ final case class CdcTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // upsert | scd2 | derive | changed_keys
-    changesView: Option[String] = None,
-    nextView: Option[String] = None,
-    keyCol: String = "id",
+    method: String,
+    changesView: Option[String],
+    nextView: Option[String],
+    keyCol: String,
     // changed_keys: composite key columns (falls back to keyCol)
-    keys: Seq[String] = Nil,
-    versionCol: String = "version",
-    opCol: String = "op",
-    tsCol: String = "ts",
-    stateCol: String = "state")
+    keys: Seq[String],
+    versionCol: String,
+    opCol: String,
+    tsCol: String,
+    stateCol: String)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1525,32 +1478,32 @@ final case class GapfillTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String = "gapfill", // gapfill | cusum | utilization | seasonal | ewma | holt | changepoint | forecast_eval
-    tsCol: String = "ts",
+    method: String,
+    tsCol: String,
     keyCol: String,
-    idCol: String = "event_id",
-    valueCol: String = "value",
-    target: Double = 0.0,
-    slack: Double = 0.0,
-    threshold: Double = 1.0,
-    startCol: String = "start_us",
-    endCol: String = "end_us",
-    bucketSeconds: Long = 3600L,
+    idCol: String,
+    valueCol: String,
+    target: Double,
+    slack: Double,
+    threshold: Double,
+    startCol: String,
+    endCol: String,
+    bucketSeconds: Long,
     // ewma / holt smoothing coefficients
-    alpha: Double = 0.25,
-    beta: Double = 0.25,
+    alpha: Double,
+    beta: Double,
     // changepoint / forecast_eval: the per-key series order column
-    ordCol: String = "ord",
+    ordCol: String,
     // forecast_eval only: valueCol is the actual, this the prediction
-    forecastCol: String = "forecast",
+    forecastCol: String,
     // acf: largest autocorrelation lag (hours)
-    maxLag: Int = 24,
+    maxLag: Int,
     // rolling: trailing time-window width
-    windowSeconds: Long = 3600L,
+    windowSeconds: Long,
     // rolling_median: trailing row-window width
-    k: Int = 5,
+    k: Int,
     // anomaly_weekly: MAD multiplier for the outlier flag
-    madK: Double = 3.5)
+    madK: Double)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1612,13 +1565,13 @@ final case class ZorderTransformStage(
     outputView: String,
     cols: Seq[String],
     idCol: String,
-    method: String = "manifest", // manifest | write | hilbert_manifest | hilbert_write
-    outputDir: Option[String] = None,
-    blockSize: Long = 4096L,
-    bits: Int = 16,
+    method: String,
+    outputDir: Option[String],
+    blockSize: Long,
+    bits: Int,
     // write replaces the layout wholesale: the destructive-write latch
     // (confirm.truncate=true) applies exactly as it does on LoadStage
-    options: Map[String, String] = Map.empty)
+    options: Map[String, String])
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1675,29 +1628,29 @@ final case class BehaviorTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // funnel | cohort | transitions | attribution | attribution_decay | basket | rate_cap | debounce | throttle | survival
-    tsCol: String = "ts",
-    userCol: String = "user_id",
-    typeCol: String = "event_type",
-    idCol: String = "event_id",
-    valueCol: String = "value",
-    steps: Seq[String] = Nil,
-    maxGapSeconds: Option[Long] = None,
-    touchType: String = "click",
-    convType: String = "purchase",
+    method: String,
+    tsCol: String,
+    userCol: String,
+    typeCol: String,
+    idCol: String,
+    valueCol: String,
+    steps: Seq[String],
+    maxGapSeconds: Option[Long],
+    touchType: String,
+    convType: String,
     // attribution window; doubles as the rate_cap bucket width
-    windowSeconds: Long = 3600L,
+    windowSeconds: Long,
     // basket only: basket/item columns + minimum pair support
-    basketCol: String = "basket",
-    itemCol: String = "item",
-    minSupport: Long = 10L,
+    basketCol: String,
+    itemCol: String,
+    minSupport: Long,
     // rate_cap only: rows kept per (key, bucket)
-    k: Int = 3,
+    k: Int,
     // survival only: per-unit duration + right-censoring flag columns
-    durationCol: String = "duration",
-    observedCol: String = "observed",
+    durationCol: String,
+    observedCol: String,
     // attribution_decay only: recency half-life
-    halfLifeSeconds: Long = 900L)
+    halfLifeSeconds: Long)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1755,22 +1708,22 @@ final case class DataQualityTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // rules | linkage | join_skew | referential | fd | impute | reconcile
-    rules: Seq[(String, String)] = Nil,
-    idCol: String = "id",
-    blockCol: String = "block",
-    fuzzyFields: Seq[(String, Double)] = Nil,
-    exactFields: Seq[(String, Double)] = Nil,
-    minScore: Double = 0.9,
-    maxBlock: Int = 1024,
+    method: String,
+    rules: Seq[(String, String)],
+    idCol: String,
+    blockCol: String,
+    fuzzyFields: Seq[(String, Double)],
+    exactFields: Seq[(String, Double)],
+    minScore: Double,
+    maxBlock: Int,
     // join_skew: the probe side; referential: the parent table
-    rightView: Option[String] = None,
-    leftKey: String = "key",
-    rightKey: String = "key",
-    topK: Int = 20,
+    rightView: Option[String],
+    leftKey: String,
+    rightKey: String,
+    topK: Int,
     // fd only: determinant columns and the dependent column
-    lhs: Seq[String] = Nil,
-    rhsCol: String = "v")
+    lhs: Seq[String],
+    rhsCol: String)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1834,10 +1787,10 @@ final case class AggStateTransformStage(
     name: String,
     inputView: String,
     outputView: String,
-    method: String, // state | merge
+    method: String,
     keys: Seq[String],
-    sumCols: Seq[String] = Nil,
-    stateViews: Seq[String] = Nil)
+    sumCols: Seq[String],
+    stateViews: Seq[String])
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -1883,55 +1836,55 @@ final case class DriftTransformStage(
     inputView: String,
     rightView: String,
     outputView: String,
-    method: String, // ks | tv | centroid | profile | permutation | cuped | srm | heavy_terms | bh | bootstrap | mannwhitney | chi2 | spearman | wilcoxon | kruskal | anova | levene | welch | fisher | proportions | segments | psi | jsd | wasserstein | ks_grouped | wasserstein_grouped | bootstrap_lift | sequential | welch_segments | sequential_mean | ratio_delta | tost | power | yuen | cmh | did
-    valueCol: String = "value",
-    catCol: String = "category",
-    labelCol: String = "label",
+    method: String,
+    valueCol: String,
+    catCol: String,
+    labelCol: String,
     // profile only: columns to diff (empty = every before-side column)
-    columns: Seq[String] = Nil,
+    columns: Seq[String],
     // permutation only
-    idCol: String = "id",
-    nPerms: Int = 200,
-    salt: String = "",
+    idCol: String,
+    nPerms: Int,
+    salt: String,
     // cuped / srm (single-view: rightView is unused): per-unit group /
     // pre-period / experiment-period metric columns
-    groupCol: String = "group",
-    preCol: String = "pre",
-    postCol: String = "post",
+    groupCol: String,
+    preCol: String,
+    postCol: String,
     // srm only: designed arm weights + chi2 flag threshold
-    expected: Map[String, Double] = Map.empty,
-    chi2Threshold: Double = 3.841,
+    expected: Map[String, Double],
+    chi2Threshold: Double,
     // heavy_terms only: tokenized column + movers to keep
-    textCol: String = "text",
-    k: Int = 25,
+    textCol: String,
+    k: Int,
     // bh only (single-view): p-value column + FDR level
-    pCol: String = "p",
-    alpha: Double = 0.05,
+    pCol: String,
+    alpha: Double,
     // proportions / segments (single-view): boolean success column +
     // the two arm names under groupCol; segments adds the stratum col
-    successCol: String = "success",
-    armA: String = "",
-    armB: String = "",
-    segCol: String = "segment",
+    successCol: String,
+    armA: String,
+    armB: String,
+    segCol: String,
     // psi only: number of quantile bins from the before side
-    nBins: Int = 10,
+    nBins: Int,
     // sequential only: look ordinal column + mSPRT mixture variance
-    lookCol: String = "look",
-    tauSq: Double = 0.01,
+    lookCol: String,
+    tauSq: Double,
     // ratio_delta only (single-view): per-unit numerator/denominator
-    numCol: String = "num",
-    denCol: String = "den",
+    numCol: String,
+    denCol: String,
     // tost only: the equivalence margin (required, > 0)
-    margin: Double = 0.0,
+    margin: Double,
     // power only: the target power level (alpha doubles as the level)
-    powerTarget: Double = 0.8,
+    powerTarget: Double,
     // yuen only: per-tail trim fraction
-    trim: Double = 0.2,
+    trim: Double,
     // did only (single-view): period column + the two period labels
     // (armA/armB double as treat/control)
-    periodCol: String = "period",
-    prePeriod: String = "pre",
-    postPeriod: String = "post")
+    periodCol: String,
+    prePeriod: String,
+    postPeriod: String)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
@@ -2062,11 +2015,11 @@ final case class SnapshotStage(
     name: String,
     baseDir: String,
     outputView: String,
-    method: String, // publish | read | vacuum
-    inputView: Option[String] = None,
-    version: Option[Long] = None,
-    keepLast: Int = 1,
-    confirmTruncate: Boolean = false)
+    method: String,
+    inputView: Option[String],
+    version: Option[Long],
+    keepLast: Int,
+    confirmTruncate: Boolean)
     extends Stage {
 
   override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.collection.mutable
 import scala.collection.mutable.ListBuffer
 
 /** One config problem; all problems for a stage are reported together.
@@ -14,22 +15,30 @@ final case class ConfigError(key: String, message: String) {
   *
   * Usage: read every field (each read records errors instead of throwing),
   * then call `result(...)` — `Right(stage)` only if zero errors accumulated.
+  * Every getter records the key it was asked for, so the keys a stage
+  * factory reads are that stage's valid keys ([[rejectUnread]]).
   */
 final class ConfigReader(conf: Map[String, Any]) {
   private val errors = ListBuffer.empty[ConfigError]
+  private val read = mutable.Set.empty[String]
 
   def error(key: String, message: String): Unit =
     errors += ConfigError(key, message)
 
-  /** Reject unknown keys (typo guard; ref: checkValidKeys,
-    * CassandraExtract.scala:33).
+  /** Reject every key no getter was asked for (typo guard; ref: the
+    * invalid-keys check, CassandraExtract.scala:33). Call after the factory
+    * has read its fields; the unknown-key errors go ahead of the
+    * factory's own. A factory must therefore read each of its keys on
+    * every path, not only in the branch that uses it.
     */
-  def checkValidKeys(valid: Set[String]): Unit =
-    (conf.keySet -- valid).toSeq.sorted.foreach { k =>
-      errors += ConfigError(k, s"unknown option; expected one of ${valid.toSeq.sorted.mkString(", ")}")
-    }
+  def rejectUnread(alsoValid: Set[String]): Unit = {
+    val valid = (read ++ alsoValid).toSeq.sorted
+    errors.prependAll((conf.keySet -- valid).toSeq.sorted.map(k =>
+      ConfigError(k, s"unknown option; expected one of ${valid.mkString(", ")}")))
+  }
 
-  private def get[T](key: String, typeName: String)(pf: PartialFunction[Any, T]): Option[T] =
+  private def get[T](key: String, typeName: String)(pf: PartialFunction[Any, T]): Option[T] = {
+    read += key
     conf.get(key) match {
       case None => None
       case Some(v) =>
@@ -40,6 +49,7 @@ final class ConfigReader(conf: Map[String, Any]) {
             None
         }
     }
+  }
 
   def string(key: String): Option[String] =
     get(key, "string") { case s: String => s }
@@ -107,6 +117,9 @@ final class ConfigReader(conf: Map[String, Any]) {
         m.map { case (k, v) => String.valueOf(k) -> String.valueOf(v) }
     }.getOrElse(Map.empty)
 
+  /** `Right(value)` only if no error accumulated. A key read twice with a
+    * bad value is reported once.
+    */
   def result[T](value: => T): Either[List[ConfigError], T] =
-    if (errors.isEmpty) Right(value) else Left(errors.toList)
+    if (errors.isEmpty) Right(value) else Left(errors.distinct.toList)
 }

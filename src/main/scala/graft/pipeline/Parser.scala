@@ -16,6 +16,12 @@ import org.apache.spark.sql.SaveMode
   * once, ref: CassandraExtract.scala:59-62), and per-stage `environments`
   * filtering (ref: arc.json:6-9).
   *
+  * Each stage's config surface is written once, in its factory below: the
+  * keys and defaults the factory reads through the [[ConfigReader]] are
+  * the stage's options, and any other key is an `unknown option` error
+  * (ref: the invalid-keys check, CassandraExtract.scala:33) — for classpath
+  * [[StagePlugin]]s too.
+  *
   * Configs are HOCON ([[Hocon]] — the reference is HOCON-first and its
   * arc.json files are the JSON subset), and every error carries the source
   * LINE of the offending key (`stages[2].saveMode: line 14: invalid
@@ -180,12 +186,14 @@ object Parser {
         params = r.stringMap("params"))
     },
     "TypingTransform" -> { (r, _) =>
+      // read on every path: a key the factory never reads is unknown
+      val schemaURI = r.string("schemaURI")
       TypingTransformStage(
         name = r.requiredString("name"),
         inputView = r.requiredString("inputView"),
         outputView = r.requiredString("outputView"),
         schemaJson = r.string("schema").getOrElse {
-          r.string("schemaURI") match {
+          schemaURI match {
             case Some(uri) =>
               try Statements.fromUri(uri)
               catch {
@@ -886,10 +894,13 @@ object Parser {
       val colsList = r.stringList("cols")
       if (colsList.nonEmpty && colsList.size < 2)
         r.error("cols", s"need >= 2 columns to interleave, got ${colsList.size}")
+      // read on every path: a key the factory never reads is unknown
+      val (xCol, yCol) = (r.string("xCol"), r.string("yCol"))
       val dims =
         if (method == "delete") Nil
         else if (colsList.size >= 2) colsList
-        else Seq(r.requiredString("xCol"), r.requiredString("yCol"))
+        else Seq(xCol.getOrElse(r.requiredString("xCol")),
+          yCol.getOrElse(r.requiredString("yCol")))
       ZorderTransformStage(
         name = r.requiredString("name"),
         inputView = r.requiredString("inputView"),
@@ -981,18 +992,19 @@ object Parser {
   /** Statement text comes inline (`sql`) or from a URI (`inputURI`)
     * resolved at CONFIG time (ref: CassandraExecute.scala:31-32). Read and
     * parse failures are ACCUMULATED as config errors, never thrown — the
-    * parse contract is `Either`, not exceptions.
+    * parse contract is `Either`, not exceptions. All three keys are read
+    * on every path, so each stays a known option.
     */
   private def sqlOf(r: ConfigReader): String =
-    (r.string("sql"), r.string("inputURI")) match {
-      case (Some(s), _) => s
-      case (None, Some(uri)) =>
-        try Statements.fromUri(uri, r.stringMap("authentication"))
+    (r.string("sql"), r.string("inputURI"), r.stringMap("authentication")) match {
+      case (Some(s), _, _) => s
+      case (None, Some(uri), auth) =>
+        try Statements.fromUri(uri, auth)
         catch {
           case e: Exception =>
             r.error("inputURI", s"cannot read '$uri': ${e.getMessage}"); ""
         }
-      case (None, None) =>
+      case (None, None, _) =>
         r.error("sql", "one of 'sql' or 'inputURI' is required"); ""
     }
 
@@ -1008,117 +1020,8 @@ object Parser {
     })
   }
 
+  /** Keys every stage may carry besides the ones its factory reads. */
   private val commonKeys = Set("type", "name", "environments", "connection")
-  private val validKeys: Map[String, Set[String]] = Map(
-    "Extract" -> (commonKeys ++ Set("table", "outputView", "numPartitions", "partitionBy", "persist", "params")),
-    "Load" -> (commonKeys ++ Set("inputView", "table", "saveMode", "numPartitions", "partitionBy", "params")),
-    "SqlTransform" -> (commonKeys ++ Set("sql", "inputURI", "outputView", "sqlParams", "numPartitions", "partitionBy", "persist", "authentication")),
-    "Execute" -> (commonKeys ++ Set("sql", "inputURI", "sqlParams", "authentication", "params")),
-    "TypingTransform" -> (commonKeys ++ Set("inputView", "outputView", "schema", "schemaURI")),
-    "DedupTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "idCol", "textCol", "keys", "blockCols", "threshold", "minhashK", "bands",
-      "rows", "shingleN", "ngramN", "bucketWidth", "sampleMod", "maxHamming",
-      "maxBucket", "maxBlock", "lshBands", "maxIter", "window", "maxDist",
-      "byDigest", "checkpointDir", "seenView", "maxTf", "componentsView",
-      "scoreCol")),
-    "SimilarityTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "queryView", "k", "threshold", "centroidEvery", "maxBucket",
-      "kmeansIters", "nBits", "bands", "rows", "exactReplay", "probes",
-      "levels", "inDim", "outDim", "minMargin", "subspaces", "indexDir",
-      "params", "pqIters", "labelCol")),
-    "AsofJoinTransform" -> (commonKeys ++ Set("inputView", "rightView",
-      "outputView", "keys", "leftTime", "rightTime", "forward", "nearest",
-      "toleranceMicros")),
-    "SaltedJoinTransform" -> (commonKeys ++ Set("inputView", "rightView",
-      "outputView", "keys", "saltFactor")),
-    "RangeJoinTransform" -> (commonKeys ++ Set("inputView", "rightView",
-      "outputView", "leftTime", "startCol", "endCol", "keys", "bucketSeconds",
-      "leftEnd")),
-    "ContaminationTransform" -> (commonKeys ++ Set("inputView", "evalView",
-      "outputView", "method", "idCol", "textCol", "shingleN",
-      "broadcastEval", "mBits", "k")),
-    "ProfileTransform" -> (commonKeys ++ Set("inputView", "outputView", "columns", "exact",
-      "method", "valueCol", "idCol", "binWidth", "nBins", "pLo", "pHi", "byCols",
-      "sigma", "madK", "xCol", "yCol", "textCol", "langCol", "sourceCol")),
-    "RetrievalTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "idCol", "textCol", "minDf", "queryTerms", "k", "k1", "b",
-      "rankViews", "rrfK", "qrelsView", "mu", "fbDocs", "fbTerms")),
-    "PiiTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "idCol", "textCol", "cols", "k", "scale", "salt", "sensitiveCol",
-      "t", "pNum", "pDen")),
-    "ClassifyTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "idCol", "textCol", "positiveExpr", "buckets", "labelCol",
-      "scoreCol", "predCol", "binWidth", "aCol", "bCol", "rightView",
-      "yCol", "yhatCol", "alpha", "raterCols")),
-    "GraphTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "srcCol", "dstCol", "iters", "dampNum", "dampDen",
-      "groupCol", "nodeCol", "maxGroup", "coreK", "seedPrefix",
-      "assignView", "checkpointEvery", "maxOuter", "maxIter", "salt",
-      "dMin")),
-    "BehaviorTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "tsCol", "userCol", "typeCol", "idCol", "valueCol",
-      "steps", "maxGapSeconds", "touchType", "convType", "windowSeconds",
-      "basketCol", "itemCol", "minSupport", "k", "durationCol",
-      "observedCol", "halfLifeSeconds")),
-    "DataQualityTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "rules", "idCol", "blockCol", "fuzzyFields", "exactFields",
-      "minScore", "maxBlock", "rightView", "leftKey", "rightKey", "topK",
-      "lhs", "rhsCol")),
-    "DriftTransform" -> (commonKeys ++ Set("inputView", "rightView",
-      "outputView", "method", "valueCol", "catCol", "labelCol", "columns",
-      "idCol", "nPerms", "salt", "groupCol", "preCol", "postCol",
-      "expected", "chi2Threshold", "textCol", "k", "pCol", "alpha",
-      "successCol", "armA", "armB", "segCol", "nBins", "lookCol",
-      "tauSq", "numCol", "denCol", "margin", "powerTarget", "trim",
-      "periodCol", "prePeriod", "postPeriod")),
-    "Snapshot" -> (commonKeys ++ Set("baseDir", "outputView", "method",
-      "inputView", "version", "keepLast", "confirm.truncate")),
-    "AggStateTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "keys", "sumCols", "stateViews")),
-    "BloomJoinTransform" -> (commonKeys ++ Set("inputView", "rightView",
-      "outputView", "leftKey", "rightKey", "mBits", "k")),
-    "CompactFiles" -> (commonKeys ++ Set("inputDir", "outputDir",
-      "outputView", "targetBytes")),
-    "SampleTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "idCol", "rate", "salt", "stratumCol", "rates", "defaultRate",
-      "tokenCol", "budget", "k", "weightCol", "nBuckets", "textCol",
-      "targetValue", "xCol", "yCol", "componentsView")),
-    "TextAnalysisTransform" -> (commonKeys ++ Set("inputView", "outputView", "analysis",
-      "idCol", "textCol", "langCol", "minChars", "maxChars", "minWords",
-      "minTtr", "minStopwordRatio", "maxPunctRatio", "chunkSize", "overlap",
-      "ngramN", "topK", "zipfTopN", "scoreWeights", "bias", "scoreThreshold",
-      "groupCols", "alpha", "alpha0", "terms", "merges", "window",
-      "minDocs", "dim", "rounds", "discount", "minCount", "maxPieceLen",
-      "vocabSize", "seedSize", "iters", "vocab", "pieces", "depth")),
-    "AssembleTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "groupCol", "orderCols", "payloadCol", "maxTurns")),
-    "EncodeTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "columns", "method", "idCol", "targetCol", "maxVocab", "alpha")),
-    "SketchTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "keyCol", "groupCols", "m", "k", "depth", "width", "topN",
-      "otherView", "bucketCol", "window", "otherKeyCol")),
-    "CdcTransform" -> (commonKeys ++ Set("inputView", "outputView", "method",
-      "changesView", "nextView", "keyCol", "keys", "versionCol", "opCol",
-      "tsCol", "stateCol")),
-    "MultimodalTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "idCol", "textCol", "formatCol", "metaCols", "everyN",
-      "maxDim", "maxHamming", "maxBucket")),
-    "UrlTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "urlCol", "tokenCol", "goodCol", "minShrunk", "m")),
-    "GapfillTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "tsCol", "keyCol", "idCol", "valueCol", "target", "slack",
-      "threshold", "startCol", "endCol", "bucketSeconds", "alpha", "beta",
-      "ordCol", "forecastCol", "maxLag", "windowSeconds", "k", "madK")),
-    "ZorderTransform" -> (commonKeys ++ Set("inputView", "outputView",
-      "cols", "xCol", "yCol", "idCol", "method", "outputDir", "blockSize",
-      "bits", "params")),
-    "StreamingExtract" -> (commonKeys ++ Set("inputDir", "outputView",
-      "maxFilesPerTrigger")),
-    "StreamingLoad" -> (commonKeys ++ Set("inputView", "outputView",
-      "method", "checkpointDir", "table", "saveMode", "indexDir",
-      "referenceView", "valueCol", "nBins", "storeDir",
-      "params"))
-  )
 
   def parse(
       json: String,
@@ -1142,8 +1045,6 @@ object Parser {
     // on collision (a plugin must not silently replace a contract stage)
     val plugins = discoveredPlugins()
     val fullRegistry = plugins.map(p => p.stageType -> p.factory).toMap ++ registry
-    val fullValidKeys = plugins.filter(_.validKeys.nonEmpty)
-      .map(p => p.stageType -> (commonKeys ++ p.validKeys)).toMap ++ validKeys
     val parsed = stageVals.zipWithIndex.map {
       case (m: Map[_, _], i) =>
         val conf = m.asInstanceOf[Map[String, Any]]
@@ -1154,9 +1055,9 @@ object Parser {
             Left(List(at(s"stages[$i]", "type",
               s"unknown stage type '$tpe'; registered: ${fullRegistry.keySet.toSeq.sorted.mkString(", ")}")))
           case Some(factory) =>
-            fullValidKeys.get(tpe).foreach(r.checkValidKeys)
             val envs = r.stringList("environments")
             val stage = factory(r, connectors)
+            r.rejectUnread(commonKeys)
             r.result(StageDef(stage, envs)).left.map(_.map(e =>
               at(s"stages[$i]", e.key, e.message)))
         }

@@ -18,12 +18,10 @@ trait StagePlugin {
   /** The config `type` discriminator this plugin handles. */
   def stageType: String
 
-  /** Builds the stage from its validated config. */
-  def factory: Parser.StageFactory
-
-  /** Config keys valid for this stage beyond the common ones
-    * (`type`/`name`/`environments`/`connection`). Empty set = skip the
-    * unknown-key check for this stage type.
+  /** Builds the stage from its config. The keys it reads through the
+    * [[ConfigReader]], plus the common `type`/`name`/`environments`/
+    * `connection`, are the stage's valid keys: [[Parser.parse]] rejects
+    * any other key as an unknown option, exactly as for a built-in.
     */
-  def validKeys: Set[String] = Set.empty
+  def factory: Parser.StageFactory
 }

@@ -117,4 +117,55 @@ class ConfigSpec extends SparkSpec {
     // allowMissing: placeholder passes through untouched
     assert(SqlParams.inject("${keep}", Map.empty, allowMissing = true) == "${keep}")
   }
+
+  test("every registered stage type rejects an unknown key and accepts the common ones") {
+    val common = Seq("connection", "environments", "name", "type")
+    for (tpe <- Parser.defaultRegistry.keySet.toSeq.sorted) {
+      val conf = s"""stages = [
+                    |  { type = "$tpe", name = s, connection = default, environments = ["test"]
+                    |    zzTypo = 1 }
+                    |]""".stripMargin
+      val errs = Parser.parse(conf, conns).left.getOrElse(Nil)
+      // the unknown-key error comes ahead of the factory's own errors
+      val typo = errs.headOption.filter(_.key == "stages[0].zzTypo")
+      assert(typo.exists(_.message.startsWith("line 3: unknown option; expected one of ")),
+        s"$tpe: ${errs.mkString("; ")}")
+      val listed = typo.get.message.split("expected one of ").last.split(", ").toSet
+      assert(common.forall(listed.contains), s"$tpe lists $listed")
+      assert(errs.forall(e => e.key == "stages[0].zzTypo" ||
+        !e.message.contains("unknown option")), s"$tpe: ${errs.mkString("; ")}")
+    }
+  }
+
+  test("keys a factory uses on only one branch are accepted on every branch") {
+    val stages = Seq(
+      """{"type": "TypingTransform", "name": "t", "inputView": "a",
+        | "outputView": "b", "schema": "[]", "schemaURI": "file:/no/such.json"}""",
+      """{"type": "SqlTransform", "name": "q", "sql": "SELECT 1",
+        | "inputURI": "file:/no/such.sql", "authentication": {"user": "u"},
+        | "outputView": "b"}""",
+      """{"type": "ZorderTransform", "name": "z", "inputView": "a",
+        | "outputView": "b", "idCol": "id", "cols": ["x", "y"],
+        | "xCol": "x", "yCol": "y"}""",
+      """{"type": "ZorderTransform", "name": "d", "inputView": "a",
+        | "outputView": "b", "idCol": "id", "method": "delete",
+        | "outputDir": "/tmp/z", "xCol": "x", "yCol": "y"}""")
+      .map(_.stripMargin)
+    for (st <- stages) {
+      val errs = Parser.parse(s"""{"stages": [$st]}""", conns).left.getOrElse(Nil)
+      assert(!errs.exists(_.message.contains("unknown option")), s"$st: ${errs.mkString("; ")}")
+    }
+  }
+
+  test("an invalid method on an extension stage is a parse-time error") {
+    val conf = """stages = [
+                 |  { type = DedupTransform, name = dd
+                 |    inputView = a, outputView = b
+                 |    method = minhsh }
+                 |]""".stripMargin
+    val Left(errs) = Parser.parse(conf, conns): @unchecked
+    val valid = Parser.methodEnums("DedupTransform").mkString(", ")
+    assert(errs.map(e => e.key -> e.message) == List("stages[0].method" ->
+      s"line 4: invalid value 'minhsh'; expected one of $valid"))
+  }
 }

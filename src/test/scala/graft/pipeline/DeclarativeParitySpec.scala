@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * user (the reference's entire contract) cannot reach it, because the
   * Parser stage enum was never extended.
   *
-  * Two mechanical checks:
+  * Three mechanical checks:
   *
   *  1. COMPLETENESS — every public DataFrame-returning method on the
   *     batch operator modules (found by REFLECTION, so a brand-new
@@ -20,6 +20,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *     [[Parser.methodEnums]], the single source the stage factories
   *     read. A route pointing at an enum value the parser would reject
   *     fails here, so routes cannot rot.
+  *  3. DISPATCH — the `case "<method>" =>` arms of the stage classes,
+  *     SCANNED from their source files, equal [[Parser.methodEnums]] in
+  *     both directions: an enum value with no arm (config parses, run
+  *     throws "unknown method") and an arm no enum value reaches both
+  *     fail.
   *
   * The routes table is the declarative coverage inventory; it is
   * asserted, not documentation.
@@ -388,318 +393,31 @@ class DeclarativeParitySpec extends AnyFunSuite {
     "Url.domainQuality" -> ("UrlTransform", "domain_quality"),
     "Url.normalize" -> ("UrlTransform", "normalize"))
 
-  /** Every `case "<method>" =>` dispatch arm in ExtensionStages.scala
-    * (regenerated alongside routes). Test 3 checks methodEnums against
-    * this, so a parser enum value with no dispatch arm — config parses,
-    * run throws "unknown method" — fails at test time, not run time.
+  /** (stage type, method) for every `case "<method>" =>` arm inside a
+    * top-level `…Stage` class of the stage sources, the stage type being
+    * the class name without `Stage`. Read from the source text, so it
+    * cannot lag the dispatch code. A class runs to the next top-level
+    * declaration.
     */
-  private val dispatchArms: Set[(String, String)] = Set(
-    ("AggStateTransform", "merge"),
-    ("AggStateTransform", "state"),
-    ("BehaviorTransform", "attribution"),
-    ("BehaviorTransform", "attribution_decay"),
-    ("BehaviorTransform", "basket"),
-    ("BehaviorTransform", "cohort"),
-    ("BehaviorTransform", "debounce"),
-    ("BehaviorTransform", "funnel"),
-    ("BehaviorTransform", "rate_cap"),
-    ("BehaviorTransform", "survival"),
-    ("BehaviorTransform", "throttle"),
-    ("BehaviorTransform", "top_paths"),
-    ("BehaviorTransform", "transitions"),
-    ("CdcTransform", "changed_keys"),
-    ("CdcTransform", "derive"),
-    ("CdcTransform", "scd2"),
-    ("CdcTransform", "upsert"),
-    ("ClassifyTransform", "agreement"),
-    ("ClassifyTransform", "krippendorff"),
-    ("ClassifyTransform", "auc"),
-    ("ClassifyTransform", "calibration"),
-    ("ClassifyTransform", "confusion"),
-    ("ClassifyTransform", "conformal"),
-    ("ClassifyTransform", "mcnemar"),
-    ("ClassifyTransform", "train_score"),
-    ("ContaminationTransform", "check"),
-    ("ContaminationTransform", "novelty"),
-    ("ContaminationTransform", "novelty_bloom"),
-    ("ContaminationTransform", "novelty_bloom_big"),
-    ("DataQualityTransform", "fd"),
-    ("DataQualityTransform", "impute"),
-    ("DataQualityTransform", "join_skew"),
-    ("DataQualityTransform", "linkage"),
-    ("DataQualityTransform", "reconcile"),
-    ("DataQualityTransform", "referential"),
-    ("DataQualityTransform", "rules"),
-    ("DedupTransform", "cluster_stats"),
-    ("DedupTransform", "containment_pairs"),
-    ("DedupTransform", "containment_stratified"),
-    ("DedupTransform", "edit_pairs"),
-    ("DedupTransform", "exact"),
-    ("DedupTransform", "exact_incremental"),
-    ("DedupTransform", "jw_pairs"),
-    ("DedupTransform", "keep_best"),
-    ("DedupTransform", "knn"),
-    ("DedupTransform", "minhash"),
-    ("DedupTransform", "minhash_cc"),
-    ("DedupTransform", "minhash_cc_apply"),
-    ("DedupTransform", "minhash_incremental"),
-    ("DedupTransform", "minhash_pairs"),
-    ("DedupTransform", "ngram_pairs"),
-    ("DedupTransform", "oph_pairs"),
-    ("DedupTransform", "passages"),
-    ("DedupTransform", "prefix_pairs"),
-    ("DedupTransform", "simhash"),
-    ("DedupTransform", "simhash_pairs"),
-    ("DedupTransform", "weighted_pairs"),
-    ("DriftTransform", "anova"),
-    ("DriftTransform", "bh"),
-    ("DriftTransform", "bootstrap"),
-    ("DriftTransform", "bootstrap_lift"),
-    ("DriftTransform", "centroid"),
-    ("DriftTransform", "chi2"),
-    ("DriftTransform", "cmh"),
-    ("DriftTransform", "cuped"),
-    ("DriftTransform", "did"),
-    ("DriftTransform", "fisher"),
-    ("DriftTransform", "heavy_terms"),
-    ("DriftTransform", "hodges_lehmann"),
-    ("DriftTransform", "jsd"),
-    ("DriftTransform", "kruskal"),
-    ("DriftTransform", "ks"),
-    ("DriftTransform", "ks_grouped"),
-    ("DriftTransform", "ks_test"),
-    ("DriftTransform", "levene"),
-    ("DriftTransform", "mannwhitney"),
-    ("DriftTransform", "mi"),
-    ("DriftTransform", "permutation"),
-    ("DriftTransform", "post_stratified"),
-    ("DriftTransform", "power"),
-    ("DriftTransform", "profile"),
-    ("DriftTransform", "proportions"),
-    ("DriftTransform", "psi"),
-    ("DriftTransform", "ratio_delta"),
-    ("DriftTransform", "segments"),
-    ("DriftTransform", "sequential"),
-    ("DriftTransform", "sequential_mean"),
-    ("DriftTransform", "spearman"),
-    ("DriftTransform", "srm"),
-    ("DriftTransform", "tost"),
-    ("DriftTransform", "tv"),
-    ("DriftTransform", "wasserstein"),
-    ("DriftTransform", "wasserstein_grouped"),
-    ("DriftTransform", "welch"),
-    ("DriftTransform", "welch_segments"),
-    ("DriftTransform", "wilcoxon"),
-    ("DriftTransform", "yuen"),
-    ("EncodeTransform", "encode"),
-    ("EncodeTransform", "target_loo"),
-    ("EncodeTransform", "vocab"),
-    ("EncodeTransform", "woe"),
-    ("GapfillTransform", "acf"),
-    ("GapfillTransform", "dtw"),
-    ("GapfillTransform", "anomaly_weekly"),
-    ("GapfillTransform", "changepoint"),
-    ("GapfillTransform", "cusum"),
-    ("GapfillTransform", "ewma"),
-    ("GapfillTransform", "forecast_eval"),
-    ("GapfillTransform", "gapfill"),
-    ("GapfillTransform", "holt"),
-    ("GapfillTransform", "mann_kendall"),
-    ("GapfillTransform", "rolling"),
-    ("GapfillTransform", "rolling_median"),
-    ("GapfillTransform", "seasonal"),
-    ("GapfillTransform", "seasonal_weekly"),
-    ("GapfillTransform", "theil_sen"),
-    ("GapfillTransform", "utilization"),
-    ("GraphTransform", "assortativity"),
-    ("GraphTransform", "ball"),
-    ("GraphTransform", "cc"),
-    ("GraphTransform", "clustering"),
-    ("GraphTransform", "cooccur_edges"),
-    ("GraphTransform", "degree_alpha"),
-    ("GraphTransform", "harmonic"),
-    ("GraphTransform", "kcore"),
-    ("GraphTransform", "ktruss"),
-    ("GraphTransform", "link_pred"),
-    ("GraphTransform", "lpa"),
-    ("GraphTransform", "modularity"),
-    ("GraphTransform", "nf"),
-    ("GraphTransform", "pagerank"),
-    ("GraphTransform", "hits"),
-    ("GraphTransform", "katz"),
-    ("GraphTransform", "ppr"),
-    ("GraphTransform", "reciprocity"),
-    ("GraphTransform", "scc"),
-    ("GraphTransform", "topo_layers"),
-    ("GraphTransform", "triangles"),
-    ("GraphTransform", "walks"),
-    ("MultimodalTransform", "attach"),
-    ("MultimodalTransform", "decode"),
-    ("MultimodalTransform", "features"),
-    ("MultimodalTransform", "frames"),
-    ("MultimodalTransform", "meta"),
-    ("MultimodalTransform", "phash"),
-    ("MultimodalTransform", "phash_pairs"),
-    ("MultimodalTransform", "resize"),
-    ("MultimodalTransform", "validate"),
-    ("PiiTransform", "kanon"),
-    ("PiiTransform", "ldiversity"),
-    ("PiiTransform", "noisy_counts"),
-    ("PiiTransform", "randomized_response"),
-    ("PiiTransform", "pseudonym_audit"),
-    ("PiiTransform", "pseudonymize"),
-    ("PiiTransform", "scrub"),
-    ("PiiTransform", "tcloseness"),
-    ("PiiTransform", "stats"),
-    ("PiiTransform", "suppress"),
-    ("ProfileTransform", "benford"),
-    ("ProfileTransform", "bucketize"),
-    ("ProfileTransform", "corpus_report"),
-    ("ProfileTransform", "correlation"),
-    ("ProfileTransform", "correlation_matrix"),
-    ("ProfileTransform", "gini"),
-    ("ProfileTransform", "histogram"),
-    ("ProfileTransform", "linear_fit"),
-    ("ProfileTransform", "outliers"),
-    ("ProfileTransform", "outliers_mad"),
-    ("ProfileTransform", "percentile_rank"),
-    ("ProfileTransform", "table"),
-    ("ProfileTransform", "trimmed_mean"),
-    ("ProfileTransform", "winsorize"),
-    ("RetrievalTransform", "bm25"),
-    ("RetrievalTransform", "index"),
-    ("RetrievalTransform", "qld"),
-    ("RetrievalTransform", "rm3"),
-    ("RetrievalTransform", "rank_eval"),
-    ("RetrievalTransform", "rrf"),
-    ("SampleTransform", "deterministic"),
-    ("SampleTransform", "importance"),
-    ("SampleTransform", "leakage_safe_split"),
-    ("SampleTransform", "negative"),
-    ("SampleTransform", "ordinal"),
-    ("SampleTransform", "pack"),
-    ("SampleTransform", "pareto"),
-    ("SampleTransform", "per_stratum_head"),
-    ("SampleTransform", "rebalance"),
-    ("SampleTransform", "rendezvous"),
-    ("SampleTransform", "shard_by_budget"),
-    ("SampleTransform", "shard_manifest"),
-    ("SampleTransform", "shuffle"),
-    ("SampleTransform", "split"),
-    ("SampleTransform", "stratified"),
-    ("SampleTransform", "systematic"),
-    ("SampleTransform", "temperature"),
-    ("SampleTransform", "token_cap"),
-    ("SampleTransform", "top_fraction"),
-    ("SampleTransform", "top_stratum"),
-    ("SampleTransform", "upsample"),
-    ("SampleTransform", "weighted_topk"),
-    ("SimilarityTransform", "ann"),
-    ("SimilarityTransform", "ann_recall"),
-    ("SimilarityTransform", "bitext"),
-    ("SimilarityTransform", "bitext_scalable"),
-    ("SimilarityTransform", "hamming_pairs"),
-    ("SimilarityTransform", "hamming_topk"),
-    ("SimilarityTransform", "hard_negatives"),
-    ("SimilarityTransform", "health"),
-    ("SimilarityTransform", "ivf"),
-    ("SimilarityTransform", "ivf_pq_topk"),
-    ("SimilarityTransform", "ivf_query"),
-    ("SimilarityTransform", "ivf_write"),
-    ("SimilarityTransform", "kmeans"),
-    ("SimilarityTransform", "dbscan"),
-    ("SimilarityTransform", "silhouette"),
-    ("SimilarityTransform", "pair_quality"),
-    ("SimilarityTransform", "kcenter"),
-    ("SimilarityTransform", "maxsim"),
-    ("SimilarityTransform", "medoids"),
-    ("SimilarityTransform", "neardup_pairs"),
-    ("SimilarityTransform", "opq_recall"),
-    ("SimilarityTransform", "pca_components"),
-    ("SimilarityTransform", "pca_cov"),
-    ("SimilarityTransform", "pq_recall"),
-    ("SimilarityTransform", "pq_topk"),
-    ("SimilarityTransform", "project"),
-    ("SimilarityTransform", "quantize"),
-    ("SimilarityTransform", "semantic_dedup"),
-    ("SimilarityTransform", "standardize"),
-    ("SimilarityTransform", "topk"),
-    ("SketchTransform", "cms"),
-    ("SketchTransform", "hll"),
-    ("SketchTransform", "hll_intersect"),
-    ("SketchTransform", "hll_rolling"),
-    ("SketchTransform", "join_size"),
-    ("SketchTransform", "kmv"),
-    ("SketchTransform", "kmv_diff"),
-    ("SketchTransform", "kmv_jaccard"),
-    ("Snapshot", "publish"),
-    ("Snapshot", "read"),
-    ("Snapshot", "vacuum"),
-    ("TextAnalysisTransform", "blocklist"),
-    ("TextAnalysisTransform", "boilerplate"),
-    ("TextAnalysisTransform", "bpe_apply"),
-    ("TextAnalysisTransform", "bpe_fertility"),
-    ("TextAnalysisTransform", "bpe_learn"),
-    ("TextAnalysisTransform", "bpe_pairs"),
-    ("TextAnalysisTransform", "chao1"),
-    ("TextAnalysisTransform", "charclass"),
-    ("TextAnalysisTransform", "chunk"),
-    ("TextAnalysisTransform", "distinct_n"),
-    ("TextAnalysisTransform", "dup_runs"),
-    ("TextAnalysisTransform", "dup_spans"),
-    ("TextAnalysisTransform", "dup_substring"),
-    ("TextAnalysisTransform", "dup_substring_apply"),
-    ("TextAnalysisTransform", "entropy"),
-    ("TextAnalysisTransform", "fingerprint"),
-    ("TextAnalysisTransform", "head_coverage"),
-    ("TextAnalysisTransform", "heavy_hitters"),
-    ("TextAnalysisTransform", "heavy_hitters_grouped"),
-    ("TextAnalysisTransform", "keyness"),
-    ("TextAnalysisTransform", "lang_purity"),
-    ("TextAnalysisTransform", "kn_score"),
-    ("TextAnalysisTransform", "langdist"),
-    ("TextAnalysisTransform", "langid"),
-    ("TextAnalysisTransform", "lm_score"),
-    ("TextAnalysisTransform", "ngram_counts"),
-    ("TextAnalysisTransform", "normalize"),
-    ("TextAnalysisTransform", "pmi"),
-    ("TextAnalysisTransform", "quality"),
-    ("TextAnalysisTransform", "quality_filter"),
-    ("TextAnalysisTransform", "quality_score"),
-    ("TextAnalysisTransform", "readability"),
-    ("TextAnalysisTransform", "repetition"),
-    ("TextAnalysisTransform", "script_mix"),
-    ("TextAnalysisTransform", "self_repetition_apply"),
-    ("TextAnalysisTransform", "tfidf"),
-    ("TextAnalysisTransform", "tokens"),
-    ("TextAnalysisTransform", "ttr"),
-    ("TextAnalysisTransform", "unigram_learn"),
-    ("TextAnalysisTransform", "unigram_encode"),
-    ("TextAnalysisTransform", "unigram_fertility"),
-    ("TextAnalysisTransform", "wordpiece_learn"),
-    ("TextAnalysisTransform", "wordpiece_encode"),
-    ("TextAnalysisTransform", "wordpiece_fertility"),
-    ("TextAnalysisTransform", "bytebpe_learn"),
-    ("TextAnalysisTransform", "bytebpe_encode"),
-    ("TextAnalysisTransform", "bytebpe_fertility"),
-    ("TextAnalysisTransform", "html_extract"),
-    ("TextAnalysisTransform", "fix_encoding"),
-    ("TextAnalysisTransform", "nfc"),
-    ("TextAnalysisTransform", "vectorize"),
-    ("TextAnalysisTransform", "zipf"),
-    ("TextAnalysisTransform", "heaps"),
-    ("UrlTransform", "domain_filter"),
-    ("UrlTransform", "domain_mix"),
-    ("UrlTransform", "domain_quality"),
-    ("UrlTransform", "normalize"),
-    ("ZorderTransform", "hilbert_manifest"),
-    ("ZorderTransform", "hilbert_write"),
-    ("ZorderTransform", "manifest"),
-    ("ZorderTransform", "write"),
-    ("ZorderTransform", "delete"),
-    ("StreamingLoad", "load"),
-    ("StreamingLoad", "ivf_append"),
-    ("StreamingLoad", "drift_append"))
+  private lazy val scannedArms: Set[(String, String)] = {
+    val decl = """(?m)^(?:final |sealed |abstract )*(?:case class|class|object|trait) (\w+)""".r
+    val arm = """case\s+"([^"]+)"\s*=>""".r
+    Seq("src/main/scala/graft/ops/ExtensionStages.scala",
+        "src/main/scala/graft/streaming/StreamingStages.scala").flatMap { path =>
+      val src = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
+      val decls = decl.findAllMatchIn(src).toSeq
+      decls.zip(decls.drop(1).map(_.start) :+ src.length).flatMap {
+        case (d, end) if d.group(1).endsWith("Stage") =>
+          arm.findAllMatchIn(src.substring(d.start, end))
+            .map(a => d.group(1).stripSuffix("Stage") -> a.group(1))
+        case _ => Nil
+      }
+    }.toSet
+  }
+
+  private lazy val enumPairs: Set[(String, String)] =
+    Parser.methodEnums.toSeq.flatMap { case (st, ms) => ms.map(st -> _) }.toSet
 
   /** Public DataFrame-returning methods with NO declarative route, each
     * with the reason it deliberately has none. Additions here need the
@@ -804,10 +522,17 @@ class DeclarativeParitySpec extends AnyFunSuite {
 
   test("every methodEnums value has a dispatch arm (no parse-accepts-" +
       "run-throws enum entries)") {
-    val missing = Parser.methodEnums.toSeq.flatMap { case (st, ms) =>
-      ms.filterNot(m => dispatchArms.contains((st, m))).map(m => s"$st.$m")
-    }
+    val missing = (enumPairs -- scannedArms).toSeq.sorted
+      .map { case (st, m) => s"$st.$m" }
     assert(missing.isEmpty,
       s"enum values with no dispatch arm:\n  ${missing.mkString("\n  ")}")
+  }
+
+  test("every dispatch arm is a methodEnums value (no arm the parser " +
+      "can never reach)") {
+    val unreachable = (scannedArms -- enumPairs).toSeq.sorted
+      .map { case (st, m) => s"$st.$m" }
+    assert(unreachable.isEmpty,
+      s"dispatch arms with no enum value:\n  ${unreachable.mkString("\n  ")}")
   }
 }

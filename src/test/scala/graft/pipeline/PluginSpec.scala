@@ -26,7 +26,7 @@ class PluginSpec extends SparkSpec {
     assert(names.nonEmpty && names.forall(n => n == n.toUpperCase))
   }
 
-  test("plugin validKeys drive the unknown-key check") {
+  test("a plugin stage rejects keys its factory does not read") {
     val conf = """{"stages": [
       {"type": "UppercaseTransform", "name": "up",
        "inputView": "a", "outputView": "b", "column": "c", "colunm": "typo"}

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions.{col, upper}
   */
 class UppercaseStagePlugin extends StagePlugin {
   override def stageType: String = "UppercaseTransform"
-  override def validKeys: Set[String] = Set("inputView", "outputView", "column")
   override def factory: Parser.StageFactory = (r, _) =>
     UppercaseStage(
       name = r.requiredString("name"),
