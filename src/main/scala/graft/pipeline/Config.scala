@@ -117,6 +117,17 @@ final class ConfigReader(conf: Map[String, Any]) {
         m.map { case (k, v) => String.valueOf(k) -> String.valueOf(v) }
     }.getOrElse(Map.empty)
 
+  /** [[stringMap]] whose values are numbers; a value that is not records
+    * `<what> for '<k>' is not a number` and reads as `fallback`.
+    */
+  def doubleMap(key: String, what: String, fallback: Double): Map[String, Double] =
+    stringMap(key).map { case (k, v) =>
+      k -> (try v.toDouble catch {
+        case _: NumberFormatException =>
+          error(key, s"$what for '$k' is not a number: '$v'"); fallback
+      })
+    }
+
   /** `Right(value)` only if no error accumulated. A key read twice with a
     * bad value is reported once.
     */

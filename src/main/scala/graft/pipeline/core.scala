@@ -66,6 +66,82 @@ trait Stage {
     }
 }
 
+/** A stage that reads its own config. Each `val` of a subclass reads one
+  * key, with its default, from the [[ConfigReader]] the stage is built
+  * from, so the keys a stage reads are its options
+  * ([[ConfigReader.rejectUnread]]). A val reads its key on every path,
+  * and a constructor never throws: problems are recorded on the reader.
+  *
+  * The base holds what every such stage repeats: its name, the detail
+  * entries recorded before it runs, and the registration of its output
+  * under `outputView`. Scala initialises the base before the subclass, so
+  * the base reads no subclass member while it is being constructed.
+  */
+abstract class ConfiguredStage(r: ConfigReader) extends Stage {
+  val name: String = r.requiredString("name")
+
+  def outputView: String
+
+  /** Detail entries recorded before the stage runs, in order. */
+  protected def describe: Seq[(String, Any)]
+
+  protected def output()(implicit ctx: PipelineContext): DataFrame
+
+  final override def execute()(implicit ctx: PipelineContext): Option[DataFrame] = {
+    detail ++= describe
+    val out = output()
+    Views.register(out, outputView)
+    Option(out)
+  }
+}
+
+/** A [[ConfiguredStage]] that runs one of several methods, chosen by a
+  * selector key. Its arm table, `method -> body`, is the one declaration
+  * of the methods: the selector is validated against the table's keys,
+  * [[Parser.methodEnums]] lists them, and `execute` runs the chosen arm on
+  * the stage's input, which is resolved only if the arm reads it.
+  */
+abstract class MethodStage(r: ConfigReader) extends ConfiguredStage(r) {
+  protected type Arm = (=> DataFrame) => DataFrame
+
+  /** The selected method, a key of [[arms]]. */
+  def method: String
+
+  /** The frame an arm receives. */
+  protected def input(implicit ctx: PipelineContext): DataFrame
+
+  /** The arm table, in enum order. Building it runs no arm and reads no
+    * val: the selector lists its keys while the subclass is still being
+    * constructed, with no context to run in.
+    */
+  protected def arms(implicit ctx: PipelineContext): Seq[(String, Arm)]
+
+  /** The method names: the keys of the arm table. */
+  final def methods: Seq[String] = arms(PipelineContext(spark = null)).map(_._1)
+
+  /** Reads the selector `key`, validated against [[methods]]. */
+  protected final def select(key: String, default: String): String =
+    r.oneOf(key, methods, default)
+
+  protected def output()(implicit ctx: PipelineContext): DataFrame = {
+    lazy val in = input
+    arms.toMap.apply(method)(in)
+  }
+}
+
+/** A [[MethodStage]] from one input view to one output view, the shape of
+  * most transforms: its arms receive `inputView`.
+  */
+abstract class TransformStage(r: ConfigReader) extends MethodStage(r) {
+  val inputView: String = r.requiredString("inputView")
+  val outputView: String = r.requiredString("outputView")
+
+  protected def describe: Seq[(String, Any)] =
+    Seq("method" -> method, "inputView" -> inputView, "outputView" -> outputView)
+
+  protected def input(implicit ctx: PipelineContext): DataFrame = Views.resolve(inputView)
+}
+
 object Views {
 
   /** Register a DataFrame under a view name, honoring the append-only

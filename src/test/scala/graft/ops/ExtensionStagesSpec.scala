@@ -1738,6 +1738,44 @@ class ExtensionStagesSpec extends SparkSpec {
     assert(spark.table("sn_p2").count() == spark.table("sn_orders").count())
   }
 
+  test("snapshot vacuum from HOCON: refuses without the params latch, " +
+      "drops all but keepLast with it") {
+    implicit val ctx: PipelineContext = PipelineContext(spark)
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("xs_vac")
+      .toString + "/t"
+    def run(conf: String) = {
+      val Right(p) = Parser.parse(conf,
+        Map("default" -> new ParquetConnector(sf001))): @unchecked
+      Runner.run(p)
+    }
+    run(s"""stages = [
+      { type = SqlTransform, name = src, sql = "SELECT id FROM range(5)"
+        outputView = vac_src }
+      { type = Snapshot, name = p1, method = publish, inputView = vac_src
+        baseDir = "$base", outputView = vac_v1 }
+      { type = Snapshot, name = p2, method = publish, inputView = vac_src
+        baseDir = "$base", outputView = vac_v2 }
+      { type = Snapshot, name = p3, method = publish, inputView = vac_src
+        baseDir = "$base", outputView = vac_v3 }
+    ]""")
+    def vacuum(latch: String) = s"""stages = [
+      { type = Snapshot, name = vac, method = vacuum, baseDir = "$base"
+        outputView = vac_dropped, keepLast = 1
+        $latch }
+    ]"""
+    val ex = intercept[DetailException](run(vacuum("")))
+    assert(ex.getMessage.contains("confirm.truncate"), ex.getMessage)
+    run(vacuum("""params { "confirm.truncate" = "true" }"""))
+    assert(spark.table("vac_dropped").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+    run(s"""stages = [
+      { type = Snapshot, name = rd, method = read, baseDir = "$base"
+        outputView = vac_latest }
+    ]""")
+    assert(spark.table("vac_latest").count() == 5)
+  }
+
   test("snapshot publish without inputView fails at parse; drift profile runs") {
     val bad = """{"stages": [
       {"type": "Snapshot", "name": "p", "method": "publish",

@@ -167,5 +167,19 @@ class ConfigSpec extends SparkSpec {
     val valid = Parser.methodEnums("DedupTransform").mkString(", ")
     assert(errs.map(e => e.key -> e.message) == List("stages[0].method" ->
       s"line 4: invalid value 'minhsh'; expected one of $valid"))
+    // every method stage validates its own selector against its arms
+    assert(Seq("DedupTransform", "TextAnalysisTransform", "StreamingLoad")
+      .forall(Parser.methodEnums.contains))
+    for ((tpe, methods) <- Parser.methodEnums.toSeq.sortBy(_._1)) {
+      val selector = if (tpe == "TextAnalysisTransform") "analysis" else "method"
+      val conf = s"""stages = [
+                    |  { type = "$tpe", name = s
+                    |    $selector = zz }
+                    |]""".stripMargin
+      val errs = Parser.parse(conf, conns).left.getOrElse(Nil)
+      assert(methods.nonEmpty && errs.contains(ConfigError(s"stages[0].$selector",
+        s"line 3: invalid value 'zz'; expected one of ${methods.mkString(", ")}")),
+        s"$tpe: ${errs.mkString("; ")}")
+    }
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * user (the reference's entire contract) cannot reach it, because the
   * Parser stage enum was never extended.
   *
-  * Three mechanical checks:
+  * Two mechanical checks:
   *
   *  1. COMPLETENESS — every public DataFrame-returning method on the
   *     batch operator modules (found by REFLECTION, so a brand-new
@@ -17,14 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *     justified exception). An unlisted new operator fails this spec
   *     in the same sbt-test run that adds it.
   *  2. VALIDITY — every route's (stageType, method) pair must exist in
-  *     [[Parser.methodEnums]], the single source the stage factories
-  *     read. A route pointing at an enum value the parser would reject
-  *     fails here, so routes cannot rot.
-  *  3. DISPATCH — the `case "<method>" =>` arms of the stage classes,
-  *     SCANNED from their source files, equal [[Parser.methodEnums]] in
-  *     both directions: an enum value with no arm (config parses, run
-  *     throws "unknown method") and an arm no enum value reaches both
-  *     fail.
+  *     [[Parser.methodEnums]]. A route pointing at an enum value the
+  *     parser would reject fails here, so routes cannot rot.
+  *
+  * The enum is read from each stage's arm table, so an enum value and
+  * its dispatch arm are one declaration and need no check of their own.
   *
   * The routes table is the declarative coverage inventory; it is
   * asserted, not documentation.
@@ -34,9 +31,9 @@ class DeclarativeParitySpec extends AnyFunSuite {
   /** Batch operator modules under audit (the Parser-facing surface).
     * Streaming: the foreachBatch SINKS gained their HOCON stage types
     * in round 19 (`StreamingExtract` / `StreamingLoad` — audited via
-    * the methodEnums/dispatch checks below and the stage_streaming
-    * gate); the transform-side streaming ops (StreamingOps) return
-    * streaming DataFrames driven by caller-held query handles and stay
+    * the route-validity check below and the stage_streaming gate); the
+    * transform-side streaming ops (StreamingOps) return streaming
+    * DataFrames driven by caller-held query handles and stay
     * behind graft.streaming's own gate machinery by design.
     */
   private val modules: Map[String, AnyRef] = Map(
@@ -393,32 +390,6 @@ class DeclarativeParitySpec extends AnyFunSuite {
     "Url.domainQuality" -> ("UrlTransform", "domain_quality"),
     "Url.normalize" -> ("UrlTransform", "normalize"))
 
-  /** (stage type, method) for every `case "<method>" =>` arm inside a
-    * top-level `…Stage` class of the stage sources, the stage type being
-    * the class name without `Stage`. Read from the source text, so it
-    * cannot lag the dispatch code. A class runs to the next top-level
-    * declaration.
-    */
-  private lazy val scannedArms: Set[(String, String)] = {
-    val decl = """(?m)^(?:final |sealed |abstract )*(?:case class|class|object|trait) (\w+)""".r
-    val arm = """case\s+"([^"]+)"\s*=>""".r
-    Seq("src/main/scala/graft/ops/ExtensionStages.scala",
-        "src/main/scala/graft/streaming/StreamingStages.scala").flatMap { path =>
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-      val decls = decl.findAllMatchIn(src).toSeq
-      decls.zip(decls.drop(1).map(_.start) :+ src.length).flatMap {
-        case (d, end) if d.group(1).endsWith("Stage") =>
-          arm.findAllMatchIn(src.substring(d.start, end))
-            .map(a => d.group(1).stripSuffix("Stage") -> a.group(1))
-        case _ => Nil
-      }
-    }.toSet
-  }
-
-  private lazy val enumPairs: Set[(String, String)] =
-    Parser.methodEnums.toSeq.flatMap { case (st, ms) => ms.map(st -> _) }.toSet
-
   /** Public DataFrame-returning methods with NO declarative route, each
     * with the reason it deliberately has none. Additions here need the
     * same scrutiny as a route: "forgot" is not a justification.
@@ -518,21 +489,5 @@ class DeclarativeParitySpec extends AnyFunSuite {
     assert(bad.isEmpty,
       "routes pointing at enum values the Parser rejects:\n  " +
         bad.map { case (k, (st, me)) => s"$k -> $st.$me" }.mkString("\n  "))
-  }
-
-  test("every methodEnums value has a dispatch arm (no parse-accepts-" +
-      "run-throws enum entries)") {
-    val missing = (enumPairs -- scannedArms).toSeq.sorted
-      .map { case (st, m) => s"$st.$m" }
-    assert(missing.isEmpty,
-      s"enum values with no dispatch arm:\n  ${missing.mkString("\n  ")}")
-  }
-
-  test("every dispatch arm is a methodEnums value (no arm the parser " +
-      "can never reach)") {
-    val unreachable = (scannedArms -- enumPairs).toSeq.sorted
-      .map { case (st, m) => s"$st.$m" }
-    assert(unreachable.isEmpty,
-      s"dispatch arms with no enum value:\n  ${unreachable.mkString("\n  ")}")
   }
 }

@@ -377,8 +377,10 @@ class StreamingSpec extends SparkSpec {
     // a BATCH view into the streaming sink is a wiring error, loudly
     Seq((1L, "x")).toDF("id", "payload").createOrReplaceTempView("dstr_b")
     Views.register(spark.table("dstr_b"), "dstr_batch")
-    val stage = StreamingLoadStage("s", "dstr_batch", "o", "load",
-      s"$tmp/chk", Some(new ParquetConnector(s"$tmp/data")), "t")
+    val Right(p) = Parser.parse(s"""stages = [ { type = StreamingLoad, name = s
+        method = load, inputView = dstr_batch, outputView = o
+        checkpointDir = "$tmp/chk", table = t } ]""", conns): @unchecked
+    val stage = p.stages.head.stage
     val ex = intercept[DetailException] { stage.run() }
     assert(ex.getMessage.contains("batch"), ex.getMessage)
   }
