@@ -45,7 +45,7 @@ import graft.functions.{TextFunctions => T}
   */
 object ByteBpe {
 
-  private val sep = "\u001F"
+  private val sep = TextAnalysis.FrameSep
 
   /** Per-byte framed hex of a word: each UTF-8 byte as ␟XX␟. */
   private def byteFramed(wCol: Column): Column =
@@ -82,52 +82,16 @@ object ByteBpe {
     * empty result rather than padded rounds.
     */
   def learn(df: DataFrame, textCol: String, rounds: Int = 4,
-      checkpointEvery: Int = 0): DataFrame =
-    // AQE off for the merge rounds (see [[graft.util.Fixpoint]])
-    graft.util.Fixpoint.withoutAqe(df.sparkSession) {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = df.sparkSession
-    import spark.implicits._
-    var enc = graft.util.Caches.persist(
-      df.select(explode(split(col(textCol), " ")).as("w"))
-        .where(length(col("w")) >= 1)
-        .groupBy("w").agg(count(lit(1)).as("wn"))
-        .select(byteFramed(col("w")).as("e"), col("wn")))
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, String, Long)]
-    val trunc = new graft.util.Truncator(checkpointEvery)
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val syms = enc.select(col("wn"),
-        filter(split(col("e"), sep), s => s =!= "").as("ss"))
-      val pairs = syms
-        .select(col("wn"), explode(when(size(col("ss")) >= 2,
-          transform(sequence(lit(1), size(col("ss")) - 1),
-            i => struct(element_at(col("ss"), i).as("a"),
-              element_at(col("ss"), i + 1).as("b"))))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum("wn").as("cnt"))
-      val top = pairs.orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((r.toLong, a, b, a + b, cnt))
-        val next = trunc(
-          enc.select(replace(col("e"), lit(s"$sep$a$sep$sep$b$sep"),
-            lit(s"$sep$a$b$sep")).as("e"), col("wn")),
-          orElse = graft.util.Caches.persist)
-        next.count() // materialize before evicting the parent generation
-        enc.unpersist(blocking = false)
-        enc = next
-        r += 1
-      }
-    }
-    enc.unpersist(blocking = false)
-    merges.toSeq
-      .toDF("merge_round", "left_sym", "right_sym", "merged", "cnt")
+      checkpointEvery: Int = 0): DataFrame = {
+    val picked = TextAnalysis.learnMerges(df.sparkSession, rounds,
+      checkpointEvery, "bytebpe",
+      graft.util.Caches.persist(
+        df.select(explode(split(col(textCol), " ")).as("w"))
+          .where(length(col("w")) >= 1)
+          .groupBy("w").agg(count(lit(1)).as("wn"))
+          .select(byteFramed(col("w")).as("e"), col("wn"))))(
+      TextAnalysis.mostFrequent)
+    TextAnalysis.mergeTable(df.sparkSession, picked)
   }
 
   /** Encode each document under a fixed merge table. Output per doc:

@@ -547,9 +547,8 @@ object Dedup {
     * count p ([[graft.util.Fixpoint.loopPartitions]]) — at bench scale
     * the rounds' exchanges collapse to a task or two, at corpus scale
     * the count clamps to the session's configured partitions.
-    * `reliable` picks the checkpoint flavour
-    * ([[graft.util.Truncator.checkpoint]]); each round frame goes to
-    * `PlanDump("<name>_round_<n>")`.
+    * `reliable` picks the checkpoint flavour; `name` names the round
+    * dumps ([[graft.util.Fixpoint.iterate]]).
     *
     * The loop runs WITHOUT AQE and on ONE hash partitioning. Under AQE
     * every exchange of every round is its own query stage and job; off,
@@ -578,48 +577,39 @@ object Dedup {
     * 2^iter and OOM the driver. The `__ol` column (the label as of the
     * LAST materialization) threads through untouched, so the convergence
     * probe is a FILTER over the new checkpoint's blocks — no re-join
-    * against the old generation — and once it has read them the
-    * superseded generation (its local blocks or its reliable files) is
-    * dead and freed.
+    * against the old generation.
     */
   private[ops] def minLabelFixpoint(edges: DataFrame, rows: Long,
       seed: DataFrame => DataFrame, maxIter: Int, reliable: Boolean,
       name: String): (DataFrame, Boolean) = {
     val spark = edges.sparkSession
     val p = graft.util.Fixpoint.loopPartitions(spark, rows)
-    graft.util.Fixpoint.withoutAqe(spark) {
-    graft.util.Fixpoint.withShufflePartitions(spark, p) {
-    val e = graft.util.Caches.persist(edges.repartition(p, col("dst")))
-    var gen = graft.util.Truncator.checkpoint(seed(e), reliable)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val l = gen.select(col("id"), col("lab"), col("lab").as("__ol"))
-      val neighborMin = e
-        .join(l.select(col("id").as("dst"), col("lab")), "dst")
-        .groupBy(col("src").as("id")).agg(min("lab").as("__nm"))
-      val propagated = l.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lab"), coalesce(col("__nm"), col("lab"))).as("lab"),
-          col("__ol"))
-      val round = propagated
-        .join(propagated.select(col("id").as("lab"), col("lab").as("__jl")),
-          Seq("lab"), "left")
-        .select(col("id"),
-          least(col("lab"), coalesce(col("__jl"), col("lab"))).as("lab"),
-          col("__ol"))
-        .repartition(p, col("id"))
-      graft.util.PlanDump(s"${name}_round_${iter + 1}", round)
-      val next = graft.util.Truncator.checkpoint(round, reliable)
-      converged = next.where(col("lab") =!= col("__ol")).isEmpty
-      graft.util.Truncator.free(gen)
-      gen = next
-      iter += 1
+    // persisted inside the loop's scopes, where its plan is made
+    lazy val e = graft.util.Caches.persist(edges.repartition(p, col("dst")))
+    val res = graft.util.Fixpoint.iterate(spark, seed(e), maxIter, name,
+        every = 1, materializeSeed = true, aqe = false,
+        parts = graft.util.Fixpoint.Parts.Exactly(p),
+        reliable = Some(reliable),
+        changed = Some(next => !next.where(col("lab") =!= col("__ol")).isEmpty)) {
+      gen =>
+        val l = gen.select(col("id"), col("lab"), col("lab").as("__ol"))
+        val neighborMin = e
+          .join(l.select(col("id").as("dst"), col("lab")), "dst")
+          .groupBy(col("src").as("id")).agg(min("lab").as("__nm"))
+        val propagated = l.join(neighborMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("lab"), coalesce(col("__nm"), col("lab"))).as("lab"),
+            col("__ol"))
+        propagated
+          .join(propagated.select(col("id").as("lab"), col("lab").as("__jl")),
+            Seq("lab"), "left")
+          .select(col("id"),
+            least(col("lab"), coalesce(col("__jl"), col("lab"))).as("lab"),
+            col("__ol"))
+          .repartition(p, col("id"))
     }
     e.unpersist(blocking = false)
-    (gen.select(col("id"), col("lab")), converged)
-    }
-    }
+    (res.state.select(col("id"), col("lab")), res.converged)
   }
 
   /** Keep one document per duplicate cluster: drop every row whose id

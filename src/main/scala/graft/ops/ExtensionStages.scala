@@ -46,12 +46,14 @@ final class DedupTransformStage(r: ConfigReader) extends TransformStage(r) {
   val maxDist = r.int("maxDist").getOrElse(5)
   val byDigest = r.boolean("byDigest", default = false)
   val checkpointDir = r.string("checkpointDir")
-  val seenView = r.string("seenView")
+  val seenView = requiredBy("seenView", "exact_incremental",
+    "minhash_incremental")
   // weighted_pairs: term-frequency cap of the multiset expansion
   val maxTf = r.int("maxTf").getOrElse(16)
   // keep_best / cluster_stats: the (doc_id, component) view a prior
   // connectedComponents pass registered
-  val componentsView = r.string("componentsView")
+  val componentsView = requiredBy("componentsView", "keep_best",
+    "cluster_stats")
   // keep_best: the per-doc quality score the cluster winner maximizes
   val scoreCol = r.string("scoreCol").getOrElse("score")
 
@@ -61,11 +63,9 @@ final class DedupTransformStage(r: ConfigReader) extends TransformStage(r) {
         byDigest)),
     // ingest-batch dedup vs a persisted history view (digested here)
     "exact_incremental" -> { in =>
-      val seen = seenView.getOrElse(throw new IllegalArgumentException(
-        "dedup method 'exact_incremental' requires 'seenView'"))
       val ks = if (keys.nonEmpty) keys else Seq(textCol)
       Dedup.exactIncremental(in,
-        Dedup.digests(Views.resolve(seen), ks), ks, Seq(idCol))
+        Dedup.digests(Views.resolve(seenView), ks), ks, Seq(idCol))
     },
     "minhash" -> (in => Dedup.minhashApply(in, idCol, textCol,
       minhashK, bands, rows, shingleN, threshold.getOrElse(0.9))),
@@ -125,25 +125,16 @@ final class DedupTransformStage(r: ConfigReader) extends TransformStage(r) {
       minhashK, bands, rows, shingleN)),
     // score-aware cluster collapse: keep the best-scoring doc per
     // component (componentsView = a connectedComponents output view)
-    "keep_best" -> { in =>
-      val comp = componentsView.getOrElse(throw new IllegalArgumentException(
-        "dedup method 'keep_best' requires 'componentsView'"))
-      Dedup.keepBest(in, Views.resolve(comp), idCol, scoreCol)
-    },
+    "keep_best" -> (in =>
+      Dedup.keepBest(in, Views.resolve(componentsView), idCol, scoreCol)),
     // dedup-budget readout: cluster-size histogram + singleton mass
-    "cluster_stats" -> { in =>
-      val comp = componentsView.getOrElse(throw new IllegalArgumentException(
-        "dedup method 'cluster_stats' requires 'componentsView'"))
-      Dedup.clusterStats(in, Views.resolve(comp))
-    },
+    "cluster_stats" -> (in =>
+      Dedup.clusterStats(in, Views.resolve(componentsView))),
     // ingest-batch near-dup candidates vs a persisted seen corpus
-    "minhash_incremental" -> { in =>
-      val seen = seenView.getOrElse(throw new IllegalArgumentException(
-        "dedup method 'minhash_incremental' requires 'seenView'"))
-      Dedup.minhashIncrementalPairs(in, Views.resolve(seen), idCol,
+    "minhash_incremental" -> (in =>
+      Dedup.minhashIncrementalPairs(in, Views.resolve(seenView), idCol,
         textCol, minhashK, bands, rows, shingleN,
-        threshold.getOrElse(0.9))
-    })
+        threshold.getOrElse(0.9))))
 }
 
 final class SimilarityTransformStage(r: ConfigReader) extends TransformStage(r) {
@@ -172,7 +163,7 @@ final class SimilarityTransformStage(r: ConfigReader) extends TransformStage(r) 
   // pq_topk: subspace count (subDim = inDim / subspaces)
   val subspaces = r.int("subspaces").getOrElse(8)
   // ivf_write / ivf_query: the persisted cell-partitioned index dir
-  val indexDir = r.string("indexDir")
+  val indexDir = requiredBy("indexDir", "ivf_write", "ivf_query")
   // pair_quality: the ground-truth grouping column
   val labelCol = r.string("labelCol").getOrElse("label")
   // ivf_write: writer options (the destructive confirm.truncate latch)
@@ -274,18 +265,12 @@ final class SimilarityTransformStage(r: ConfigReader) extends TransformStage(r) 
         Pq.ivfAdcTopK(in, queries(in), k, centroidEvery, kmeansIters,
           probes, subspaces, subDim, pqIters = pqIters)),
       // persisted cell-partitioned IVF index lifecycle: write ...
-      "ivf_write" -> { in =>
-        val dir = indexDir.getOrElse(throw new IllegalArgumentException(
-          "similarity method 'ivf_write' requires 'indexDir'"))
-        Similarity.ivfWrite(in, dir, centroidEvery, kmeansIters,
-          exactReplay, options)
-      },
+      "ivf_write" -> (in =>
+        Similarity.ivfWrite(in, indexDir, centroidEvery, kmeansIters,
+          exactReplay, options)),
       // ... and query (probes = cells scanned per query)
-      "ivf_query" -> { in =>
-        val dir = indexDir.getOrElse(throw new IllegalArgumentException(
-          "similarity method 'ivf_query' requires 'indexDir'"))
-        Similarity.ivfQueryIndex(ctx.spark, dir, queries(in), k, probes)
-      },
+      "ivf_query" -> (in =>
+        Similarity.ivfQueryIndex(ctx.spark, indexDir, queries(in), k, probes)),
       // driver-side power-iteration eigen over a pca_cov output view
       // (inDim = dimensionality, k = components)
       "pca_components" -> (in =>
@@ -467,7 +452,7 @@ final class SampleTransformStage(r: ConfigReader) extends TransformStage(r) {
   val xCol = r.string("xCol").getOrElse("x")
   val yCol = r.string("yCol").getOrElse("y")
   // leakage_safe_split: the (doc_id, component) near-dup cluster view
-  val componentsView = r.string("componentsView")
+  val componentsView = requiredBy("componentsView", "leakage_safe_split")
 
   protected def arms(implicit ctx: PipelineContext): Seq[(String, Arm)] = Seq(
     "deterministic" -> (in => Sampling.deterministic(in, idCol, rate, salt)),
@@ -522,13 +507,9 @@ final class SampleTransformStage(r: ConfigReader) extends TransformStage(r) {
       Sampling.splitAssign(in, idCol, rates.toSeq.sortBy(_._1), salt)),
     // split whole near-dup clusters as one unit (componentsView = a
     // connectedComponents output view)
-    "leakage_safe_split" -> { in =>
-      val comp = componentsView.getOrElse(
-        throw new IllegalArgumentException(
-          "sample method 'leakage_safe_split' requires 'componentsView'"))
-      Sampling.leakageSafeSplit(in, idCol, Views.resolve(comp),
-        rates.toSeq.sortBy(_._1), salt)
-    },
+    "leakage_safe_split" -> (in =>
+      Sampling.leakageSafeSplit(in, idCol, Views.resolve(componentsView),
+        rates.toSeq.sortBy(_._1), salt)),
     // per-shard manifest rollup of shard_by_budget
     "shard_manifest" -> (in =>
       Sampling.shardManifest(in, idCol, tokenCol, budget)))
@@ -1093,10 +1074,9 @@ final class SketchTransformStage(r: ConfigReader) extends TransformStage(r) {
   val depth = r.int("depth").getOrElse(4)
   val width = r.int("width").getOrElse(256)
   val topN = r.int("topN").getOrElse(10)
-  // hll_intersect / kmv_jaccard: the second corpus view (B side)
-  val otherView = r.string("otherView").getOrElse("")
-  if ((method == "hll_intersect" || method == "kmv_jaccard") && otherView.isEmpty)
-    r.error("otherView", s"missing; $method needs the B-side view")
+  // the two-corpus methods: the second corpus view (B side)
+  val otherView = requiredBy("otherView", "hll_intersect", "kmv_jaccard",
+    "kmv_diff", "join_size")
   // hll_rolling only: integral time-bucket column + trailing window
   val bucketCol = r.string("bucketCol").getOrElse("bucket")
   val window = r.int("window").getOrElse(7)
@@ -1130,10 +1110,8 @@ final class SketchTransformStage(r: ConfigReader) extends TransformStage(r) {
       "kmv_diff" -> (in =>
         Sketches.kmvDifference(in, col(keyCol), other, otherKey, k)),
       // pre-shuffle join-size estimate from two CMS sketches
-      "join_size" -> { in =>
-        require(otherView.nonEmpty, "join_size requires otherView")
-        Sketches.cmsJoinSize(in, col(keyCol), other, otherKey, depth, width)
-      })
+      "join_size" -> (in =>
+        Sketches.cmsJoinSize(in, col(keyCol), other, otherKey, depth, width)))
   }
 }
 
@@ -1300,9 +1278,7 @@ final class GapfillTransformStage(r: ConfigReader) extends TransformStage(r) {
   */
 final class ZorderTransformStage(r: ConfigReader) extends TransformStage(r) {
   val method: String = select("method", "manifest")
-  val outputDir = r.string("outputDir")
-  if ((method == "write" || method == "delete") && outputDir.isEmpty)
-    r.error("outputDir", s"missing; $method requires a target directory")
+  val outputDir = requiredBy("outputDir", "write", "delete", "hilbert_write")
   // dimensions: the N-column "cols" list (ZORDER BY parity) or the
   // classic xCol/yCol pair — exactly one form. A targeted delete
   // operates on the stored layout and needs no curve columns.
@@ -1328,16 +1304,14 @@ final class ZorderTransformStage(r: ConfigReader) extends TransformStage(r) {
     Seq("inputView" -> inputView, "outputView" -> outputView, "method" -> method)
 
   protected def arms(implicit ctx: PipelineContext): Seq[(String, Arm)] = {
-    def dir(m: String) = {
-      val d = outputDir.getOrElse(
-        throw new IllegalArgumentException(s"$m requires outputDir"))
-      detail += "outputDir" -> d
-      d
+    def dir = {
+      detail += "outputDir" -> outputDir
+      outputDir
     }
     Seq(
       "manifest" -> (in => Layout.zorderManifestN(in, cols, idCol, blockSize, bits)),
       "write" -> (in =>
-        Layout.zorderWriteN(in, cols, idCol, dir("write"), blockSize, bits,
+        Layout.zorderWriteN(in, cols, idCol, dir, blockSize, bits,
           options)),
       // Hilbert curve variant: the 2-D walk for k=2, Skilling's N-D
       // transpose beyond — tighter blocks, same manifest shape
@@ -1348,13 +1322,13 @@ final class ZorderTransformStage(r: ConfigReader) extends TransformStage(r) {
       // Hilbert skipping index (2-D): same store shape, tighter blocks
       "hilbert_write" -> { in =>
         require(cols.size == 2, s"hilbert_write is 2-D, got ${cols.size} cols")
-        Layout.hilbertWrite(in, cols(0), cols(1), idCol, dir("hilbert_write"),
+        Layout.hilbertWrite(in, cols(0), cols(1), idCol, dir,
           blockSize, bits, options)
       },
       // targeted delete (right-to-be-forgotten): the input view's idCol
       // column IS the deletion request; statistics-pruned block rewrite
       "delete" -> { in =>
-        val d = dir("delete")
+        val d = dir
         val ids = in.select(col(idCol).cast("long"))
           .distinct().collect().map(_.getLong(0)).toSeq.sorted
         Layout.targetedDelete(in.sparkSession, d, idCol, ids, options)

@@ -78,7 +78,7 @@ object Graph {
     * with init = RankScale div N, all in exact long arithmetic.
     *
     * `checkpointEvery` (0 = off): truncate the rank table's lineage every
-    * N rounds ([[graft.util.Truncator]]) — at the default 3 iterations
+    * N rounds ([[graft.util.Fixpoint]]) — at the default 3 iterations
     * the plan is shallow and the knob is off; long-horizon runs
     * (iters ≳ 10) should set it to 2-3 so plan depth stays bounded.
     */
@@ -130,20 +130,19 @@ object Graph {
               .otherwise(lit(0L)).as("r"))
     }
     val eo = e.join(outdeg, "src") // (src, dst, od)
-    val trunc = new graft.util.Truncator(checkpointEvery)
-    var ranks = init
-    for (_ <- 1 to iters) {
+    val ranks = graft.util.Fixpoint.iterate(edges.sparkSession, init, iters,
+        "pagerank", every = checkpointEvery) { ranks =>
       val contrib = eo
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"),
           ldiv(col("r") * dampNum, col("od") * dampDen).as("c"))
         .groupBy("node").agg(sum("c").as("cs"))
-      ranks = trunc(init
+      init
         .join(contrib, Seq("node"), "left")
         .select(col("node"),
           (ldiv(col("r") * (dampDen - dampNum), lit(dampDen))
-            + coalesce(col("cs"), lit(0L))).as("r")))
-    }
+            + coalesce(col("cs"), lit(0L))).as("r"))
+    }.state
     ranks.select(col("node"), col("r").as("rank_fp"),
       (col("r").cast("double") / RankScale).as("rank"))
   }
@@ -210,19 +209,18 @@ object Graph {
         s"worst pre-division product $worstIntermediate) — " +
         "lower alpha/iters or use pagerank's degree-diluted walk")
     val init = nodes.select(col("node"), lit(RankScale).as("r"))
-    val trunc = new graft.util.Truncator(checkpointEvery)
-    var ranks = init
-    for (_ <- 1 to iters) {
+    val ranks = graft.util.Fixpoint.iterate(edges.sparkSession, init, iters,
+        "katz", every = checkpointEvery) { ranks =>
       val contrib = e
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"),
           ldiv(col("r") * alphaNum, lit(alphaDen)).as("c"))
         .groupBy("node").agg(sum("c").as("cs"))
-      ranks = trunc(init
+      init
         .join(contrib, Seq("node"), "left")
         .select(col("node"),
-          (lit(RankScale) + coalesce(col("cs"), lit(0L))).as("r")))
-    }
+          (lit(RankScale) + coalesce(col("cs"), lit(0L))).as("r"))
+    }.state
     ranks.select(col("node"), col("r").as("katz_fp"),
       (col("r").cast("double") / RankScale).as("katz"))
   }
@@ -269,7 +267,6 @@ object Graph {
     */
   def hits(edges: DataFrame, iters: Int = 2,
       checkpointEvery: Int = 0): DataFrame =
-    // AQE off for the per-round pulls/totals (see [[graft.util.Fixpoint]])
     graft.util.Fixpoint.withoutAqe(edges.sparkSession) {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     // e and nodes persisted: e is walked by every pull (2 per
@@ -283,7 +280,7 @@ object Graph {
         .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.agg(count(lit(1)).as("__nn"))
     // L1-normalized uniform start: h0 = scale div N, so Σ h0 ≤ scale.
-    var hub = graft.util.Caches.persist(
+    val hub0 = graft.util.Caches.persist(
       nodes.crossJoin(broadcast(n))
         .select(col("node"), ldiv(lit(HitsScale), col("__nn")).as("h")))
     var auth: DataFrame = null
@@ -309,13 +306,12 @@ object Graph {
       graft.util.Caches.persist(rawP
         .select(col("node"), ldiv(col(in) * HitsScale, lit(tot)).as(out)))
     }
-    val trunc = new graft.util.Truncator(checkpointEvery)
-    // each pull's exchange carries node-sized partials; size the loop's
-    // shuffle partitions to the node table (see [[graft.util.Fixpoint]];
-    // the count reads the already-persisted node set)
-    graft.util.Fixpoint.withLoopPartitions(edges.sparkSession,
-      nodes.count()) {
-    for (_ <- 1 to iters) {
+    // each pull's exchange carries node-sized partials; the loop's
+    // shuffle partitions are sized to the (already persisted) node table
+    val hub = graft.util.Fixpoint.iterate(edges.sparkSession, hub0, iters,
+        "hits", every = checkpointEvery,
+        parts = graft.util.Fixpoint.Parts.Exactly(graft.util.Fixpoint
+          .loopPartitions(edges.sparkSession, nodes.count()))) { hub =>
       // score vectors are one row per node — broadcast them into the
       // edge joins so each pull is a map-side broadcast join + combine
       val araw = e.join(broadcast(hub.select(col("node").as("src"),
@@ -325,9 +321,8 @@ object Graph {
       val hraw = e.join(broadcast(auth.select(col("node").as("dst"),
           col("a"))), "dst")
         .groupBy(col("src").as("node")).agg(sum("a").as("__hr"))
-      hub = trunc(normalize(hraw, "__hr", "h"))
-    }
-    }
+      normalize(hraw, "__hr", "h")
+    }.state
     nodes.join(auth, Seq("node"), "left").join(hub, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("a"), lit(0L)).as("auth_fp"),
@@ -371,7 +366,7 @@ object Graph {
     * Shape at scale: every step is an edge⨝label hash join plus a
     * map-side-combined min — no driver state, no per-vertex collect; all
     * three fixpoints truncate their self-join lineage through
-    * [[graft.util.Truncator]]. Determinism: min-label fixpoints are
+    * [[graft.util.Fixpoint]]. Determinism: min-label fixpoints are
     * order-independent, so any engine agrees on the labels.
     *
     * Output: (node, scc) for every vertex of the edge table, scc = the
@@ -389,13 +384,8 @@ object Graph {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val e0 = edges.select(col("src"), col("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull).distinct()
-    // every checkpoint here, outer-loop state and label rounds alike,
-    // honors a reliable checkpoint dir when one is set (the cluster
-    // durability convention); single-node runs keep the cheap
-    // executor-local form
     val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame =
-      graft.util.Truncator.checkpoint(df, reliable)
+    def ckpt(df: DataFrame): DataFrame = graft.util.Fixpoint.truncate(df)
     var verts = ckpt(e0.select(col("src").as("id"))
       .union(e0.select(col("dst").as("id"))).distinct())
     var nVerts = verts.count()
@@ -528,7 +518,7 @@ object Graph {
     * depth (condensations of web graphs are shallow; a chain-shaped
     * condensation deeper than `maxIter` fails loudly). Every step is a
     * component-keyed join + map-side-combined max; lineage truncates
-    * through [[graft.util.Truncator]]. Output: one row per component
+    * through [[graft.util.Fixpoint]]. Output: one row per component
     * (scc, n_nodes, layer).
     */
   def topoLayers(edges: DataFrame, maxOuter: Int = 12, maxIter: Int = 25,
@@ -544,38 +534,29 @@ object Graph {
       .where(col("__ca") =!= col("__cb"))
       .select(col("__ca").as("ca"), col("__cb").as("cb")).distinct())
     val comps = labels.select(col("scc").as("c")).distinct()
-    // eager block reclaim is safe here for the same reason as in
-    // Dedup.minLabelFixpoint: the previous generation's layer rides
-    // along as __ol, so the convergence probe is a FILTER over the
-    // just-checkpointed blocks — one job per relaxation round, nothing
-    // reads a superseded generation after trunc() frees it
-    val trunc = new graft.util.Truncator(checkpointEvery)
-    var layer = trunc(comps.select(col("c"), lit(0L).as("layer")))
-    val nComps = layer.count()
-    var iter = 0
-    var converged = false
-    // component-sized loop state: size the relaxation's shuffle
-    // partitions to it (same rationale as [[scc]]'s loop scope)
-    graft.util.Fixpoint.withLoopPartitions(edges.sparkSession, nComps) {
-    while (!converged && iter < maxIter) {
+    // the previous generation's layer rides along as __ol, so the
+    // convergence probe is a FILTER over the materialized generation;
+    // the loop's partitions are sized to the component count
+    val layered = graft.util.Fixpoint.iterate(edges.sparkSession,
+        comps.select(col("c"), lit(0L).as("layer")), maxIter, "topo",
+        every = checkpointEvery, materializeSeed = true,
+        parts = graft.util.Fixpoint.Parts.SizedBy(_.count()),
+        changed = Some(next =>
+          !next.where(col("layer") =!= col("__ol")).isEmpty)) { layer =>
       val relax = ce
         .join(layer.select(col("c").as("ca"), col("layer")), "ca")
         .groupBy(col("cb").as("c")).agg((max("layer") + 1L).as("__nl"))
-      val next = trunc(layer.join(relax, Seq("c"), "left")
+      layer.join(relax, Seq("c"), "left")
         .select(col("c"), col("layer").as("__ol"),
           greatest(col("layer"), coalesce(col("__nl"), col("layer")))
-            .as("layer")))
-      converged = next.where(col("layer") =!= col("__ol")).isEmpty
-      layer = next.select(col("c"), col("layer"))
-      iter += 1
+            .as("layer"))
     }
-    }
-    if (!converged)
+    if (!layered.converged)
       throw new IllegalStateException(
         s"topoLayers did not converge in maxIter=$maxIter relaxation " +
           "rounds; the condensation is deeper than maxIter — raise it")
     labels.groupBy(col("scc")).agg(count(lit(1)).as("n_nodes"))
-      .join(layer.withColumnRenamed("c", "scc"), "scc")
+      .join(layered.state.select(col("c").as("scc"), col("layer")), "scc")
   }
 
   /** Canonical undirected co-occurrence edges: one (a, b) row with
@@ -712,8 +693,8 @@ object Graph {
     * orientation + sorted-intersect closing, never the wedge join),
     * then INCREMENTAL support maintenance per peel round: the
     * materialized triangle list drops every triangle that touches a
-    * removed edge (three anti-joins — broadcast when the driver-known
-    * removed-edge count is small, see the scale knob below) and
+    * removed edge (three anti-joins — broadcast while the removed set's
+    * bytes fit `spark.sql.autoBroadcastJoinThreshold`) and
     * support is re-counted from the surviving list by one
     * map-side-combined explode+count. Rounds 2+ never re-pay the
     * adjacency build or the intersect probes, and counting surviving
@@ -722,23 +703,11 @@ object Graph {
     * edge formulation would otherwise need.
     */
   def kTruss(edges: DataFrame, k: Int, rounds: Int = 8): DataFrame =
-    // AQE off for the peel rounds (see [[graft.util.Fixpoint]])
     graft.util.Fixpoint.withoutAqe(edges.sparkSession) {
     require(k >= 3, s"k must be >= 3 (k-2 triangles per edge), got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val spark = edges.sparkSession
     val nodeType = edges.schema("a").dataType
-    // Removed-edge sets up to this many rows ship as a BROADCAST build
-    // side of the per-round anti-joins (the loop runs with AQE off, and
-    // the static planner cannot size a filter over cached blocks, so
-    // without the hint every round would sort-merge the whole triangle
-    // list three times). The driver knows the exact removed count from
-    // the round's convergence probe, so the choice is data-driven, not
-    // a local-mode constant: past the threshold (2 longs/row ≈ 32 MB
-    // at the default) the rounds fall back to shuffle anti-joins.
-    val broadcastRemovedMax =
-      spark.conf.get("spark.graft.ktruss.broadcastRemovedMax", "2000000")
-        .toLong
     // Support of the CURRENT surviving subgraph, keyed on its ORIENTED
     // edges. The orientation is fixed ONCE (below) from the original
     // graph's degrees: triangle enumeration is exact under ANY fixed
@@ -772,9 +741,9 @@ object Graph {
           coalesce(col("support"), lit(0L)).as("support"))
     // canonicalize internally (a reversed duplicate must count once,
     // not silently drop); self-loops close no triangle and go.
-    // EVERY generation — edges, triangle list, support — is lineage-
-    // TRUNCATED (Truncator(1)), never merely persisted: (a) the
-    // maintenance references each table multiple times per round, so an
+    // EVERY generation — edges, triangle list, support, removed set — is
+    // lineage-TRUNCATED, never merely persisted: (a) the maintenance
+    // references each table multiple times per round, so an
     // un-truncated logical plan grows geometrically; (b) chaining
     // PERSISTS across generations (tris_{r+1} reads cached tris_r)
     // would break under Spark's non-cascading cache invalidation —
@@ -782,12 +751,7 @@ object Graph {
     // cache entries and drops their built buffers (SPARK-24596), so a
     // later action would recompute through an already-freed checkpoint.
     // Truncated generations have no cache-level dependencies: each is
-    // its own block-backed leaf, and the eager free of generation g
-    // only runs after g+1 is materialized.
-    val trunc = new graft.util.Truncator(1)
-    val truncTris = new graft.util.Truncator(1)
-    val truncSup = new graft.util.Truncator(1)
-    val truncRm = new graft.util.Truncator(1)
+    // its own block-backed leaf.
     val und0 = edges.select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .where(col("a") < col("b")).distinct()
@@ -797,7 +761,7 @@ object Graph {
     // the [[orientedTriangles]] degree orientation, computed once: out-
     // degree stays O(sqrt(E)) on the ORIGINAL graph and can only shrink
     // as edges peel, so the one closing join never explodes.
-    val dir = trunc(und0
+    val dir = graft.util.Fixpoint.truncate(und0
       .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
       .select(
@@ -809,7 +773,7 @@ object Graph {
     val edgeCount = dir.count()
     // the enumeration + per-round support exchanges carry edge-sized
     // (and 3x-triangle-sized explode) tables; size the loop's shuffle
-    // partitions to the edge table (see [[graft.util.Fixpoint]])
+    // partitions to the edge table
     graft.util.Fixpoint.withLoopPartitions(spark, edgeCount) {
     // the ONE full enumeration, checkpointed ONCE; rounds scan it with
     // anti-joins against the (tiny, cumulative) removed-edge table —
@@ -817,35 +781,59 @@ object Graph {
     val tris0 = {
       val e = enumerate(dir)
       graft.util.PlanDump("ktruss_enumerate_once", e)
-      truncTris(e)
+      graft.util.Fixpoint.truncate(e)
     }
-    var sup = truncSup(supportFrom(dir, tris0))
-    // cumulative removed edges, re-checkpointed per round (a few rows
-    // after round 1 on real graphs — the peel tail is tiny)
-    var removedCum: DataFrame = null
-    var removedCumCount = 0L
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      val removedNow = sup.where(col("support") < k - 2).count()
-      converged = removedNow == 0L
-      if (!converged) {
-        removedCumCount += removedNow
-        removedCum = truncRm(
-          if (removedCum == null) sup.where(col("support") < k - 2)
-            .select(col("u").as("__ru"), col("v").as("__rv"))
-          else removedCum.unionAll(sup.where(col("support") < k - 2)
-            .select(col("u").as("__ru"), col("v").as("__rv"))))
+    val sup0 = graft.util.Fixpoint.truncate(supportFrom(dir, tris0))
+    // The removed-edge probe: how many surviving edges are under
+    // support and their UnsafeRow bytes, in one aggregate. The byte sum
+    // decides the anti-join strategy below, so a string-keyed graph is
+    // sized by its keys' actual length, not by a row count.
+    def fieldBytes(c: Column): Column = nodeType match {
+      case org.apache.spark.sql.types.StringType |
+          org.apache.spark.sql.types.BinaryType =>
+        (octet_length(c) + 7).bitwiseAND(-8).cast("long")
+      case _ => lit(0L)
+    }
+    var removedNow = 0L
+    var removedBytesNow = 0L
+    def removals(sup: DataFrame): Boolean = {
+      val row = sup.where(col("support") < k - 2)
+        .agg(count(lit(1)), coalesce(sum(lit(24L) + fieldBytes(col("u"))
+          + fieldBytes(col("v"))), lit(0L)))
+        .collect().head
+      removedNow = row.getLong(0)
+      removedBytesNow = row.getLong(1)
+      removedNow > 0
+    }
+    // Removed sets up to Spark's own broadcast threshold ship as a
+    // BROADCAST build side of the per-round anti-joins (AQE is off, and
+    // the static planner cannot size a filter over checkpointed blocks,
+    // so without the hint every round would sort-merge the whole
+    // triangle list three times); past it, or with broadcasts off (-1),
+    // the rounds fall back to shuffle anti-joins.
+    val broadcastMax = spark.sessionState.conf.autoBroadcastJoinThreshold
+    var removedCumBytes = 0L
+    var removedCum: Option[DataFrame] = None
+    val out =
+      if (!removals(sup0)) sup0
+      else graft.util.Fixpoint.iterate(spark, sup0, rounds, "ktruss",
+          every = 1, changed = Some(removals)) { sup =>
+        removedCumBytes += removedBytesNow
+        val removed = sup.where(col("support") < k - 2)
+          .select(col("u").as("__ru"), col("v").as("__rv"))
+        // cumulative removed edges (a few rows after round 1 on real
+        // graphs — the peel tail is tiny)
+        removedCum = Some(graft.util.Fixpoint.truncate(
+          removedCum.fold(removed)(_.unionAll(removed)), removedCum))
         // a triangle survives iff NONE of its three edges was ever
         // removed; each slot anti-joins its own aliased copy of the
         // cumulative set (reusing one frame thrice trips ambiguous-
         // attribute analysis; the three broadcast builds dedup to one
         // via ReusedExchange)
         def removedAs(us: String, vs: String): DataFrame = {
-          val rm = removedCum
+          val rm = removedCum.get
             .select(col("__ru").as(us), col("__rv").as(vs))
-          if (removedCumCount <= broadcastRemovedMax) broadcast(rm)
-          else rm
+          if (removedCumBytes <= broadcastMax) broadcast(rm) else rm
         }
         val liveTris = tris0
           .join(removedAs("__r1u", "__r1v"),
@@ -857,24 +845,16 @@ object Graph {
           .join(removedAs("__r3u", "__r3v"),
             col("v") === col("__r3u") && col("w") === col("__r3v"),
             "left_anti")
-        val roundSup = supportFrom(
+        supportFrom(
           sup.where(col("support") >= k - 2).select("u", "v"), liveTris)
-        graft.util.PlanDump(s"ktruss_round_$r", roundSup)
-        sup = truncSup(roundSup)
-      }
-      r += 1
-    }
-    // sup is maintained in lockstep with the surviving edge set (its
-    // truncation already materialized it), so it describes the
-    // surviving subgraph whether or not the peel converged.
-    val out = sup
-    if (!converged) {
-      val under = out.where(col("support") < k - 2).count()
-      if (under > 0) log.warn(
-        s"kTruss: peel budget ($rounds rounds) ended before the " +
-          s"fixpoint — $under surviving edge(s) still have support " +
-          s"< ${k - 2}; raise rounds for the exact $k-truss")
-    }
+      }.state
+    // sup is maintained in lockstep with the surviving edge set, so it
+    // describes the surviving subgraph whether or not the peel
+    // converged; the last probe counted its under-support edges.
+    if (removedNow > 0) log.warn(
+      s"kTruss: peel budget ($rounds rounds) ended before the " +
+        s"fixpoint — $removedNow surviving edge(s) still have support " +
+        s"< ${k - 2}; raise rounds for the exact $k-truss")
     // back to the canonical (a < b) key the caller sees — the oriented
     // key is an internal detail of the fixed orientation.
     out.select(least(col("u"), col("v")).as("a"),
@@ -1052,10 +1032,10 @@ object Graph {
     val sym = graft.util.Caches.persist(
       edges.select(col("a"), col("b"))
         .union(edges.select(col("b").as("a"), col("a").as("b"))))
-    val trunc = new graft.util.Truncator(checkpointEvery)
-    var labels = sym.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node"))
-    for (_ <- 1 to iters) {
+    graft.util.Fixpoint.iterate(edges.sparkSession,
+        sym.select(col("a").as("node")).distinct()
+          .withColumn("label", col("node")), iters, "lpa",
+        every = checkpointEvery, hold = graft.util.Fixpoint.Persist) { labels =>
       val counts = sym
         .join(labels.select(col("node").as("b"), col("label").as("__nl")),
           "b")
@@ -1067,15 +1047,12 @@ object Graph {
       // its native type (string node ids work; negating the label, the
       // old form, forced numeric labels). Same total order as a
       // row_number window, but map-side combinable and sort-free.
-      labels = trunc(
-        counts
-          .groupBy(col("a"))
-          .agg(min(struct((-col("__c")).as("__negc"),
-            col("__nl").as("__l"))).as("__m"))
-          .select(col("a").as("node"), col("__m.__l").as("label")),
-        orElse = graft.util.Caches.persist)
-    }
-    labels
+      counts
+        .groupBy(col("a"))
+        .agg(min(struct((-col("__c")).as("__negc"),
+          col("__nl").as("__l"))).as("__m"))
+        .select(col("a").as("node"), col("__m.__l").as("label"))
+    }.state
   }
 
   /** Newman modularity of a community assignment over a canonical
@@ -1212,46 +1189,40 @@ object Graph {
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 8,
       checkpointEvery: Int = 0): DataFrame =
-    // AQE off for the peel rounds (see [[graft.util.Fixpoint]])
     graft.util.Fixpoint.withoutAqe(edges.sparkSession) {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var sym = graft.util.Caches.persist(
+    val sym0 = graft.util.Caches.persist(
       edges.select(col("a"), col("b"))
         .union(edges.select(col("b").as("a"), col("a").as("b"))))
-    var edgeCount = sym.count()
-    val trunc = new graft.util.Truncator(checkpointEvery)
+    var edgeCount = sym0.count()
     // per-round exchanges carry edge-sized tables; size the loop's
-    // shuffle partitions to that (see [[graft.util.Fixpoint]])
+    // shuffle partitions to that
     graft.util.Fixpoint.withLoopPartitions(edges.sparkSession, edgeCount) {
     // Early stop when a round drops nothing: a no-drop round is the
     // fixpoint, every later round is the identity, so stopping produces
     // the SAME result as running the full budget — the budget is a
-    // ceiling, not a schedule. The count that detects it is against the
-    // just-persisted table (no recomputation), and each superseded edge
-    // table unpersists immediately so at most two generations are ever
-    // cached.
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      val keep = graft.util.Caches.persist(
+    // ceiling, not a schedule. The count that detects it reads the
+    // just-materialized table (no recomputation).
+    var keep: DataFrame = null
+    val sym = graft.util.Fixpoint.iterate(edges.sparkSession, sym0, rounds,
+        "kcore", every = checkpointEvery, hold = graft.util.Fixpoint.Persist,
+        changed = Some { next =>
+          val nextCount = next.count()
+          keep.unpersist(blocking = false)
+          val dropped = nextCount != edgeCount
+          edgeCount = nextCount
+          dropped
+        }) { sym =>
+      keep = graft.util.Caches.persist(
         sym.groupBy("a").agg(count(lit(1)).as("__d"))
           .where(col("__d") >= k).select("a"))
       // semi joins: the node list never widens the edge rows, and a
       // small surviving-node table broadcasts (persisted stats make the
       // size estimate accurate)
-      val next = trunc(
-        sym.join(keep, Seq("a"), "left_semi")
-          .join(keep.select(col("a").as("b")), Seq("b"), "left_semi"),
-        orElse = graft.util.Caches.persist)
-      val nextCount = next.count()
-      converged = nextCount == edgeCount
-      sym.unpersist(blocking = false)
-      keep.unpersist(blocking = false)
-      sym = next
-      edgeCount = nextCount
-      r += 1
-    }
+      sym.join(keep, Seq("a"), "left_semi")
+        .join(keep.select(col("a").as("b")), Seq("b"), "left_semi")
+    }.state
     val deg = graft.util.Caches.persist(
       sym.groupBy(col("a").as("node")).agg(count(lit(1)).as("degree")))
     val under = deg.where(col("degree") < k).count()
@@ -1308,68 +1279,10 @@ object Graph {
     */
   def neighborhoodSizes(und: DataFrame, radius: Int = 2,
       m: Int = 512, checkpointEvery: Int = 0): DataFrame =
-    // AQE off for the register/BFS rounds (see [[graft.util.Fixpoint]])
     graft.util.Fixpoint.withoutAqe(und.sparkSession) {
     require(radius >= 1, s"radius must be >= 1, got $radius")
-    import graft.functions.Sketches
-    val sym = graft.util.Caches.persist(
-      und.select(col("a"), col("b"))
-        .union(und.select(col("b").as("a"), col("a").as("b"))))
-    val nodes = sym.select(col("a").as("node")).distinct()
-    // seed with B_1 = {v} ∪ N(v) built DIRECTLY: registers of a set are
-    // per-bucket maxima over its members, so aggregating the V+E
-    // (node, member) rows in one pass produces bit-identical registers
-    // to a {v}-seed plus one merge round — one join+agg round saved per
-    // loop (half the rounds at the radius-2 gate). sym's (a, b) rows are
-    // distinct by construction (und is an edge set), so no dedup needed.
-    val members1 = nodes.select(col("node"), col("node").as("__member"))
-      .unionAll(sym.select(col("a").as("node"), col("b").as("__member")))
-    // packed-register aggregation: (bucket, rho) coordinates from the
-    // SAME hashing as the row form, folded into one m-byte buffer per
-    // node (byte-wise max == per-bucket max)
-    def aggCol(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-      org.apache.spark.sql.GraftColumnBridge.column(e.asInstanceOf[
-        org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[Array[Byte]]]
-        .toAggregateExpression())
-    def expr(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.GraftColumnBridge.expression(c)
-    val (bCol, rhoCol) = Sketches.registerCoords(col("__member"), m)
-    val truncRegs = new graft.util.Truncator(checkpointEvery)
-    val truncReach = new graft.util.Truncator(checkpointEvery)
-    // materialize-and-evict only BETWEEN rounds (lineage truncation for
-    // the next iteration); the final round flows straight into its
-    // consumer — a last-round count() would pay one extra full
-    // materialization per loop for lineage nobody re-reads
-    var regs = graft.util.Caches.persist(
-      members1.select(col("node"), bCol.as("__b"), rhoCol.as("__rho"))
-        .groupBy("node")
-        .agg(aggCol(graft.functions.PackRegisters(
-          expr(col("__b")), expr(col("__rho")), m)).as("__regs")))
-    for (r <- 2 to radius) {
-      // ONE m-byte buffer per edge crosses the join — never per-bucket rows
-      val contrib = sym
-        .join(regs.withColumnRenamed("node", "b"), "b")
-        .select(col("a").as("node"), col("__regs"))
-      val next = regs.unionAll(contrib)
-        .groupBy("node")
-        .agg(aggCol(graft.functions.MergePackedRegisters(
-          expr(col("__regs")), m)).as("__regs"))
-      if (r < radius) {
-        val p = truncRegs(next, orElse = graft.util.Caches.persist)
-        p.count()
-        regs.unpersist(blocking = false)
-        regs = p
-      } else regs = next
-    }
-    // unpack ONCE to the row contract (zero bytes = absent rows) and
-    // reuse hllEstimate verbatim — representation-independent estimates
-    val regRows = regs.select(col("node"),
-        posexplode(org.apache.spark.sql.GraftColumnBridge.column(
-          graft.functions.Expressions.BytesToLongArray(
-            expr(col("__regs"))))).as(Seq("__b", "__m")))
-      .where(col("__m") > 0)
-    val est = Sketches.hllEstimate(regRows, Seq("node"), m)
-      .withColumnRenamed("hll_estimate", "ball_estimate")
+    val (sym, nodes, ests) = ballEstimates(und, radius, m, checkpointEvery)
+    val est = ests.last.withColumnRenamed(s"__e$radius", "ball_estimate")
     // exact calibration ball via iterated distinct BFS pairs — the
     // quadratic thing the registers replace; fine at gate scale. Seeded
     // at B_1 like the register loop (self ∪ neighbors). The seed is
@@ -1380,21 +1293,19 @@ object Graph {
     // seed in their first round's distinct.
     val seed = nodes.select(col("node").as("start"), col("node").as("x"))
       .unionAll(sym.select(col("a").as("start"), col("b").as("x")))
-    var reach = graft.util.Caches.persist(
-      if (radius == 1) seed.distinct() else seed)
-    for (r <- 2 to radius) {
-      val next = reach.unionAll(
+    def widen(reach: DataFrame): DataFrame =
+      reach.unionAll(
           reach.join(sym.select(col("a").as("x"), col("b").as("__nx")),
             "x")
             .select(col("start"), col("__nx").as("x")))
         .distinct()
-      if (r < radius) {
-        val p = truncReach(next, orElse = graft.util.Caches.persist)
-        p.count()
-        reach.unpersist(blocking = false)
-        reach = p
-      } else reach = next
-    }
+    // materialized only BETWEEN rounds (lineage truncation for the next
+    // one); the final round flows straight into its consumer
+    val reached = graft.util.Fixpoint.iterate(und.sparkSession,
+        graft.util.Caches.persist(if (radius == 1) seed.distinct() else seed),
+        math.max(0, radius - 2), "reach", every = checkpointEvery,
+        hold = graft.util.Fixpoint.Count)(widen).state
+    val reach = if (radius == 1) reached else widen(reached)
     val exact = reach.groupBy(col("start").as("node"))
       .agg(count(lit(1)).as("exact_ball"))
     exact.join(est, "node")
@@ -1426,7 +1337,6 @@ object Graph {
     */
   def harmonicCentrality(und: DataFrame, radius: Int = 2, m: Int = 512,
       checkpointEvery: Int = 0): DataFrame =
-    // AQE off for the register/BFS rounds (see [[graft.util.Fixpoint]])
     graft.util.Fixpoint.withoutAqe(und.sparkSession) {
     require(radius >= 1, s"radius must be >= 1, got $radius")
     val (sym, nodes, ests) = ballEstimates(und, radius, m, checkpointEvery)
@@ -1471,9 +1381,9 @@ object Graph {
       .select("node", "harmonic_exact", "harmonic_estimate")
   }
 
-  /** The shared HyperBall machinery behind [[harmonicCentrality]] and
-    * [[neighborhoodFunction]]: run the packed-register loop of
-    * [[neighborhoodSizes]] and return (sym edges, node table, per-radius
+  /** The HyperBall machinery behind [[neighborhoodSizes]],
+    * [[harmonicCentrality]] and [[neighborhoodFunction]]: run the
+    * packed-register loop and return (sym edges, node table, per-radius
     * estimate tables) where table r has columns (node, __e{r}) — the
     * estimated |B_r(v)| at every radius 0..radius.
     */
@@ -1505,40 +1415,40 @@ object Graph {
       Sketches.hllEstimate(rows, Seq("node"), m)
         .withColumnRenamed("hll_estimate", name)
     }
-    // B_0 = {v}; B_1 = {v} ∪ N(v) seeded directly (the
-    // neighborhoodSizes per-bucket-max algebra)
+    // B_0 = {v}; B_1 = {v} ∪ N(v) built DIRECTLY: registers of a set are
+    // per-bucket maxima over its members, so aggregating the V+E
+    // (node, member) rows in one pass produces bit-identical registers
+    // to a {v}-seed plus one merge round — one join+agg round saved.
+    // sym's (a, b) rows are distinct by construction (und is an edge
+    // set), so no dedup needed.
     val est0 = estimateOf(packed(
       nodes.select(col("node"), col("node").as("__member"))), "__e0")
     val members1 = nodes.select(col("node"), col("node").as("__member"))
       .unionAll(sym.select(col("a").as("node"), col("b").as("__member")))
-    // eagerFree = false: every per-radius estimate table in `ests`
-    // references ITS round's generation, and all of them evaluate
-    // lazily after the loop — eagerly freeing a superseded checkpoint
-    // (whose lineage is truncated) would be a use-after-free when the
-    // final join re-reads radius r's registers
-    val trunc = new graft.util.Truncator(checkpointEvery, eagerFree = false)
-    var regs = graft.util.Caches.persist(packed(members1))
-    val ests = scala.collection.mutable.ArrayBuffer(
-      estimateOf(regs, "__e1"))
-    // NOT partition-scoped (round-20 negative result, 1.16-1.40x on
-    // nf/harmonic): the packed-register merge is an object aggregate
-    // whose per-row cost dominates — collapsing its exchange to one
-    // task serializes real work, unlike the label-table fixpoints.
-    for (r <- 2 to radius) {
-      val contrib = sym
-        .join(regs.withColumnRenamed("node", "b"), "b")
-        .select(col("a").as("node"), col("__regs"))
-      val next = regs.unionAll(contrib)
+    // every per-radius estimate table in `ests` references ITS round's
+    // generation and evaluates lazily after the loop: superseded
+    // checkpoints are kept. NOT partition-scoped (round-20 negative
+    // result, 1.16-1.40x on nf/harmonic): the packed-register merge is an
+    // object aggregate whose per-row cost dominates — collapsing its
+    // exchange to one task serializes real work, unlike the label-table
+    // fixpoints.
+    val ests = scala.collection.mutable.ArrayBuffer(est0)
+    // ONE m-byte buffer per edge crosses each round's join — never
+    // per-bucket rows
+    val last = graft.util.Fixpoint.iterate(und.sparkSession,
+        graft.util.Caches.persist(packed(members1)), radius - 1, "ball",
+        every = checkpointEvery, hold = graft.util.Fixpoint.Count,
+        keepCheckpoints = true) { regs =>
+      ests += estimateOf(regs, s"__e${ests.size}")
+      regs.unionAll(sym
+          .join(regs.withColumnRenamed("node", "b"), "b")
+          .select(col("a").as("node"), col("__regs")))
         .groupBy("node")
         .agg(aggCol(graft.functions.MergePackedRegisters(
           expr(col("__regs")), m)).as("__regs"))
-      val p = trunc(next, orElse = graft.util.Caches.persist)
-      p.count()
-      regs.unpersist(blocking = false)
-      regs = p
-      ests += estimateOf(regs, s"__e$r")
-    }
-    (sym, nodes, est0 +: ests.toSeq)
+    }.state
+    ests += estimateOf(last, s"__e${ests.size}")
+    (sym, nodes, ests.toSeq)
   }
 
   /** The NEIGHBORHOOD FUNCTION / distance distribution (the other
@@ -1557,7 +1467,6 @@ object Graph {
     */
   def neighborhoodFunction(und: DataFrame, radius: Int = 2, m: Int = 512,
       checkpointEvery: Int = 0): DataFrame =
-    // AQE off for the register rounds (see [[graft.util.Fixpoint]])
     graft.util.Fixpoint.withoutAqe(und.sparkSession) {
     require(radius >= 1, s"radius must be >= 1, got $radius")
     val (_, _, ests) = ballEstimates(und, radius, m, checkpointEvery)

@@ -1061,7 +1061,6 @@ object Similarity {
     * already-covered point, not a center.
     */
   def kcenter(df: DataFrame, k: Int): DataFrame =
-    // AQE off for the k argmax rounds (see [[graft.util.Fixpoint]])
     graft.util.Fixpoint.withoutAqe(df.sparkSession) {
     require(k >= 2 && k <= 64, s"k must be in [2, 64], got $k")
     val spark = df.sparkSession
@@ -1075,16 +1074,15 @@ object Similarity {
     val first = cv.orderBy("vec_id").limit(1).collect()
     val seedId = first.head.getLong(0)
     val seedEmb = first.head.getSeq[Float](1)
-    var state = graft.util.Caches.persist(
+    val state0 = graft.util.Caches.persist(
       cv.select(col("vec_id"), col("embedding"),
         sqDist6(col("embedding"), typedLit(seedEmb)).as("__d")))
-    state.count()
+    state0.count()
     val centers = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, java.lang.Double)]
     centers += ((1L, seedId, null))
-    var r = 2
-    var covered = false
-    while (r <= k && !covered) {
+    val state = graft.util.Fixpoint.iterate(spark, state0, k - 1, "kcenter",
+        hold = graft.util.Fixpoint.Count) { state =>
       val top = state
         .agg(max(struct(col("__d"), (-col("vec_id")).as("__nid"),
           col("embedding"))).as("__m"))
@@ -1099,20 +1097,14 @@ object Similarity {
         // probably didn't expect a duplicate-saturated corpus)
         System.err.println(s"kcenter: corpus covered at radius 0 by " +
           s"${centers.size} of the requested $k centers; stopping early")
-        covered = true
+        state
       } else {
-        val cemb = top.getSeq[Float](2)
-        centers += ((r.toLong, cid, Double.box(selDist)))
-        val next = graft.util.Caches.persist(
-          state.select(col("vec_id"), col("embedding"),
-            least(col("__d"), sqDist6(col("embedding"),
-              typedLit(cemb))).as("__d")))
-        next.count()
-        state.unpersist(blocking = false)
-        state = next
-        r += 1
+        centers += ((centers.size + 1L, cid, Double.box(selDist)))
+        state.select(col("vec_id"), col("embedding"),
+          least(col("__d"), sqDist6(col("embedding"),
+            typedLit(top.getSeq[Float](2)))).as("__d"))
       }
-    }
+    }.state
     val coverage = state.agg(max("__d")).collect().head.getDouble(0)
     state.unpersist(blocking = false)
     cv.unpersist(blocking = false)

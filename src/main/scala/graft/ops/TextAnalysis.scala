@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
 
@@ -1031,46 +1031,31 @@ object TextAnalysis {
     * merges.
     */
   def bpeLearnMerges(df: DataFrame, textCol: String,
-      rounds: Int = 4, checkpointEvery: Int = 0): DataFrame =
-    // AQE off for the merge rounds (see [[graft.util.Fixpoint]])
-    graft.util.Fixpoint.withoutAqe(df.sparkSession) {
+      rounds: Int = 4, checkpointEvery: Int = 0): DataFrame = {
+    val picked = learnMerges(df.sparkSession, rounds, checkpointEvery, "bpe",
+      charFramed(df, textCol, "TextAnalysis.bpeLearnMerges"))(mostFrequent)
+    mergeTable(df.sparkSession, picked)
+  }
+
+  /** The BPE merge loop behind [[bpeLearnMerges]], [[ByteBpe.learn]] and
+    * [[Wordpiece.learn]]. Over `framed`, the (e, wn) table of framed
+    * symbol strings and word counts, each round counts the adjacent
+    * symbol pairs weighted by word count; `pick` gets the per-word
+    * symbol arrays (wn, ss) and the pair counts (a, b, cnt) and returns
+    * the row of the chosen merge, whose first two fields are its pair,
+    * or None when no pair remains. The merge is applied as one literal
+    * replace. Returns the picked rows in round order.
+    */
+  private[ops] def learnMerges(spark: org.apache.spark.sql.SparkSession,
+      rounds: Int, checkpointEvery: Int, name: String, framed: => DataFrame)(
+      pick: (DataFrame, DataFrame) => Option[Row]): Seq[Row] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sep = "\u001F"
-    // every char c -> ␟c␟ ; concatenation yields the framed sequence
-    val encode = regexp_replace(col("w"), "(.)", s"$sep$$1$sep")
-    // words containing the U+001F frame separator cannot be framed and
-    // are dropped — loudly (round-18 ADVICE: every other degenerate-
-    // input path in this codebase counts and WARNs; the count runs on
-    // the persisted DISTINCT-word table, not a second corpus pass)
-    val wt = graft.util.Caches.persist(
-      df.select(explode(split(col(textCol), " ")).as("w"))
-        .where(length(col("w")) >= 2)
-        .groupBy("w").agg(count(lit(1)).as("wn")))
-    val sepDropped = wt.where(col("w").contains(sep))
-      .agg(count(lit(1)), coalesce(sum("wn"), lit(0L))).collect().head
-    if (sepDropped.getLong(0) > 0)
-      System.err.println(s"TextAnalysis.bpeLearnMerges: ${sepDropped.getLong(0)} " +
-        s"distinct word(s) (${sepDropped.getLong(1)} occurrences) " +
-        "contain the U+001F frame separator and are dropped from " +
-        "merge learning")
-    var enc = graft.util.Caches.persist(
-      wt.where(!col("w").contains(sep))
-        .select(encode.as("e"), col("wn")))
-    enc.count() // materialize off the word table before evicting it
-    wt.unpersist(blocking = false)
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, String, Long)]
-    // persist-with-eviction keeps EXECUTION flat, but the analyzed plan
-    // still deepens by one replace per merge round; checkpointEvery > 0
-    // truncates lineage every N rounds for long merge horizons
-    val trunc = new graft.util.Truncator(checkpointEvery)
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
+    val picked = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val last = graft.util.Fixpoint.iterate(spark, framed, rounds, name,
+        every = checkpointEvery, hold = graft.util.Fixpoint.Count,
+        aqe = false) { enc =>
       val syms = enc.select(col("wn"),
-        filter(split(col("e"), sep), s => s =!= "").as("ss"))
+        filter(split(col("e"), FrameSep), s => s =!= "").as("ss"))
       // the sequence(1,0)-steps-backwards guard: 1-symbol rows emit null,
       // explode drops them (DuckDB's empty generate_series equivalent)
       val pairs = syms
@@ -1080,26 +1065,69 @@ object TextAnalysis {
               element_at(col("ss"), i + 1).as("b"))))).as("p"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum("wn").as("cnt"))
-      val top = pairs.orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((r.toLong, a, b, a + b, cnt))
-        val next = trunc(
-          enc.select(replace(col("e"), lit(s"$sep$a$sep$sep$b$sep"),
-            lit(s"$sep$a$b$sep")).as("e"), col("wn")),
-          orElse = graft.util.Caches.persist)
-        next.count() // materialize before evicting the parent generation
-        enc.unpersist(blocking = false)
-        enc = next
-        r += 1
+      pick(syms, pairs) match {
+        case None => enc
+        case Some(top) =>
+          picked += top
+          val (a, b) = (top.getString(0), top.getString(1))
+          enc.select(replace(col("e"),
+            lit(s"$FrameSep$a$FrameSep$FrameSep$b$FrameSep"),
+            lit(s"$FrameSep$a$b$FrameSep")).as("e"), col("wn"))
       }
-    }
-    enc.unpersist(blocking = false)
-    merges.toSeq
-      .toDF("merge_round", "left_sym", "right_sym", "merged", "cnt")
+    }.state
+    last.unpersist(blocking = false)
+    picked.toSeq
+  }
+
+  /** The BPE merge rule: the most frequent pair, ties to the
+    * lexicographically smallest (a, b). Row: (a, b, cnt).
+    */
+  private[ops] val mostFrequent: (DataFrame, DataFrame) => Option[Row] =
+    (_, pairs) => pairs.orderBy(col("cnt").desc, col("a"), col("b"))
+      .limit(1).collect().headOption
+
+  /** Picked (a, b, cnt) rows as the merge table
+    * (merge_round, left_sym, right_sym, merged, cnt).
+    */
+  private[ops] def mergeTable(spark: org.apache.spark.sql.SparkSession,
+      picked: Seq[Row]): DataFrame = {
+    import spark.implicits._
+    picked.zipWithIndex.map { case (t, i) =>
+      (i + 1L, t.getString(0), t.getString(1),
+        t.getString(0) + t.getString(1), t.getLong(2))
+    }.toDF("merge_round", "left_sym", "right_sym", "merged", "cnt")
+  }
+
+  /** The symbol frame of the character-level learners: U+001F. */
+  private[ops] val FrameSep = "\u001F"
+
+  /** The distinct words of length >= 2 with their counts, every char c
+    * framed as ␟c␟ — persisted and counted. Words containing the U+001F
+    * frame separator cannot be framed and are dropped — loudly (round-18
+    * ADVICE: every other degenerate-input path in this codebase counts
+    * and WARNs; the count runs on the persisted DISTINCT-word table, not
+    * a second corpus pass).
+    */
+  private[ops] def charFramed(df: DataFrame, textCol: String,
+      who: String): DataFrame = {
+    val wt = graft.util.Caches.persist(
+      df.select(explode(split(col(textCol), " ")).as("w"))
+        .where(length(col("w")) >= 2)
+        .groupBy("w").agg(count(lit(1)).as("wn")))
+    val sepDropped = wt.where(col("w").contains(FrameSep))
+      .agg(count(lit(1)), coalesce(sum("wn"), lit(0L))).collect().head
+    if (sepDropped.getLong(0) > 0)
+      System.err.println(s"$who: ${sepDropped.getLong(0)} " +
+        s"distinct word(s) (${sepDropped.getLong(1)} occurrences) " +
+        "contain the U+001F frame separator and are dropped from " +
+        "merge learning")
+    val enc = graft.util.Caches.persist(
+      wt.where(!col("w").contains(FrameSep))
+        .select(regexp_replace(col("w"), "(.)", s"$FrameSep$$1$FrameSep")
+          .as("e"), col("wn")))
+    enc.count() // materialize off the word table before evicting it
+    wt.unpersist(blocking = false)
+    enc
   }
 
   /** Blocklist screening over whitespace words — the safety/PII-adjacent

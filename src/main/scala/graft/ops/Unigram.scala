@@ -77,7 +77,6 @@ object Unigram {
   def learn(df: DataFrame, textCol: String, vocabSize: Int = 64,
       maxPieceLen: Int = 4, iters: Int = 2,
       seedSize: Int = 2048): DataFrame =
-    // AQE off for the hard-EM rounds (see [[graft.util.Fixpoint]])
     graft.util.Fixpoint.withoutAqe(df.sparkSession) {
     require(vocabSize >= 1, s"vocabSize must be >= 1, got $vocabSize")
     require(iters >= 1, s"iters must be >= 1, got $iters")

@@ -62,82 +62,31 @@ object Wordpiece {
     * re-encode with per-generation persist/evict.
     */
   def learn(df: DataFrame, textCol: String, rounds: Int = 4,
-      checkpointEvery: Int = 0): DataFrame =
-    // AQE off for the merge rounds (see [[graft.util.Fixpoint]])
-    graft.util.Fixpoint.withoutAqe(df.sparkSession) {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
+      checkpointEvery: Int = 0): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val sep = "\u001F"
-    val encode = regexp_replace(col("w"), "(.)", s"$sep$$1$sep")
-    // words containing the U+001F frame separator cannot be framed and
-    // are dropped — loudly (round-18 ADVICE: every other degenerate-
-    // input path in this codebase counts and WARNs; the count runs on
-    // the persisted DISTINCT-word table, not a second corpus pass)
-    val wt = graft.util.Caches.persist(
-      df.select(explode(split(col(textCol), " ")).as("w"))
-        .where(length(col("w")) >= 2)
-        .groupBy("w").agg(count(lit(1)).as("wn")))
-    val sepDropped = wt.where(col("w").contains(sep))
-      .agg(count(lit(1)), coalesce(sum("wn"), lit(0L))).collect().head
-    if (sepDropped.getLong(0) > 0)
-      System.err.println(s"Wordpiece.learn: ${sepDropped.getLong(0)} " +
-        s"distinct word(s) (${sepDropped.getLong(1)} occurrences) " +
-        "contain the U+001F frame separator and are dropped from " +
-        "merge learning")
-    var enc = graft.util.Caches.persist(
-      wt.where(!col("w").contains(sep))
-        .select(encode.as("e"), col("wn")))
-    enc.count() // materialize off the word table before evicting it
-    wt.unpersist(blocking = false)
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, String, Long, Double)]
-    val trunc = new graft.util.Truncator(checkpointEvery)
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val syms = enc.select(col("wn"),
-        filter(split(col("e"), sep), s => s =!= "").as("ss"))
-      val symCounts = syms
-        .select(col("wn"), explode(col("ss")).as("s"))
-        .groupBy("s").agg(sum("wn").as("scnt"))
-      val pairs = syms
-        .select(col("wn"), explode(when(size(col("ss")) >= 2,
-          transform(sequence(lit(1), size(col("ss")) - 1),
-            i => struct(element_at(col("ss"), i).as("a"),
-              element_at(col("ss"), i + 1).as("b"))))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum("wn").as("cnt"))
-      val scored = pairs
-        .join(symCounts.withColumnRenamed("s", "a")
-          .withColumnRenamed("scnt", "ca"), "a")
-        .join(symCounts.withColumnRenamed("s", "b")
-          .withColumnRenamed("scnt", "cb"), "b")
-        .select(col("a"), col("b"), col("cnt"),
-          (col("cnt").cast("double") /
-            (col("ca").cast("double") * col("cb").cast("double")))
-            .as("score"))
-      val top = scored.orderBy(col("score").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt, sc) = (top(0).getString(0), top(0).getString(1),
-          top(0).getLong(2), top(0).getDouble(3))
-        merges += ((r.toLong, a, b, a + b, cnt, sc))
-        val next = trunc(
-          enc.select(replace(col("e"), lit(s"$sep$a$sep$sep$b$sep"),
-            lit(s"$sep$a$b$sep")).as("e"), col("wn")),
-          orElse = graft.util.Caches.persist)
-        next.count()
-        enc.unpersist(blocking = false)
-        enc = next
-        r += 1
-      }
+    val picked = TextAnalysis.learnMerges(spark, rounds, checkpointEvery,
+        "wordpiece", TextAnalysis.charFramed(df, textCol, "Wordpiece.learn")) {
+      (syms, pairs) =>
+        val symCounts = syms
+          .select(col("wn"), explode(col("ss")).as("s"))
+          .groupBy("s").agg(sum("wn").as("scnt"))
+        pairs
+          .join(symCounts.withColumnRenamed("s", "a")
+            .withColumnRenamed("scnt", "ca"), "a")
+          .join(symCounts.withColumnRenamed("s", "b")
+            .withColumnRenamed("scnt", "cb"), "b")
+          .select(col("a"), col("b"), col("cnt"),
+            (col("cnt").cast("double") /
+              (col("ca").cast("double") * col("cb").cast("double")))
+              .as("score"))
+          .orderBy(col("score").desc, col("a"), col("b"))
+          .limit(1).collect().headOption
     }
-    enc.unpersist(blocking = false)
-    merges.toSeq.map { case (i, a, b, m, c, s) =>
-      (i, a, b, m, c,
-        BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+    picked.zipWithIndex.map { case (t, i) =>
+      (i + 1L, t.getString(0), t.getString(1),
+        t.getString(0) + t.getString(1), t.getLong(2),
+        BigDecimal(t.getDouble(3)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
           .toDouble + 0.0)
     }.toDF("merge_round", "left_sym", "right_sym", "merged", "cnt",
       "score")

@@ -123,6 +123,16 @@ abstract class MethodStage(r: ConfigReader) extends ConfiguredStage(r) {
   protected final def select(key: String, default: String): String =
     r.oneOf(key, methods, default)
 
+  /** Reads `key` ("" when absent), a parse error when the selected
+    * method is one of `needers`; read after `method`.
+    */
+  protected final def requiredBy(key: String, needers: String*): String = {
+    val v = r.string(key)
+    if (v.isEmpty && needers.contains(method))
+      r.error(key, s"missing; method '$method' requires it")
+    v.getOrElse("")
+  }
+
   protected def output()(implicit ctx: PipelineContext): DataFrame = {
     lazy val in = input
     arms.toMap.apply(method)(in)

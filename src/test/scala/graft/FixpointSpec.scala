@@ -114,4 +114,28 @@ class FixpointSpec extends SparkSpec {
       assert(spark.conf.get(AqeKey) == "false")
     } finally spark.conf.set(AqeKey, "true")
   }
+
+  test("only util/Fixpoint.scala checkpoints") {
+    // every loop's generations, and every one-shot lineage cut, go
+    // through the fixpoint driver: a checkpoint call anywhere else is a
+    // hand-rolled loop growing back
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no sources at $root")
+    val files = {
+      val w = java.nio.file.Files.walk(root)
+      try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally w.close()
+    }
+    val call = """\.(localCheckpoint|checkpoint)\(""".r
+    val calls = for {
+      f <- files if !f.endsWith(java.nio.file.Paths.get("graft/util/Fixpoint.scala"))
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("/*")
+      if call.findFirstIn(code.split("//", 2)(0)).isDefined
+    } yield s"$f:${i + 1}: $code"
+    assert(files.size > 50)
+    assert(calls.isEmpty, calls.mkString("\n"))
+  }
 }

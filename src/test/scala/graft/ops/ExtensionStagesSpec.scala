@@ -2405,17 +2405,16 @@ class ExtensionStagesSpec extends SparkSpec {
       spark.table("r18_comps"), "doc_id", "score"))
     same("r18_cstats",
       Dedup.clusterStats(docs, spark.table("r18_comps")))
-    // missing componentsView is loud
+    // missing componentsView is loud, at parse time
     val bad = """{"stages": [
       {"type": "Extract", "name": "docs", "table": "documents",
        "outputView": "r18b_docs"},
       {"type": "DedupTransform", "name": "cs", "method": "cluster_stats",
        "inputView": "r18b_docs", "outputView": "r18b_x"}
     ]}"""
-    val Right(pb) = Parser.parse(bad,
+    val Left(errs) = Parser.parse(bad,
       Map("default" -> new ParquetConnector(sf001))): @unchecked
-    val err = intercept[Exception](Runner.run(pb))
-    assert(err.getMessage.contains("componentsView"))
+    assert(errs.map(_.key) == List("stages[1].componentsView"), errs)
     graft.util.Caches.unpersistAll()
   }
 }

@@ -607,6 +607,48 @@ class GraphSpec extends SparkSpec {
     graft.util.Caches.unpersistAll()
   }
 
+  test("ktruss: string ids peel identically with broadcast anti-joins off") {
+    // K4 plus a triangle on one of its nodes and a pendant: at k=4 the
+    // outer triangle and the pendant peel in round 1, whose removed set
+    // feeds the round's three anti-joins — a broadcast build side while
+    // its bytes fit spark.sql.autoBroadcastJoinThreshold, a shuffle
+    // anti-join with the threshold at -1
+    val g = Seq(("n1", "n2"), ("n1", "n3"), ("n1", "n4"), ("n2", "n3"),
+      ("n2", "n4"), ("n3", "n4"), ("n4", "n5"), ("n4", "n6"), ("n5", "n6"),
+      ("n6", "n7")).toDF("a", "b")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def run(threshold: Option[String]): (Seq[(String, String, Long)], String) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_ktruss_plans")
+      threshold.foreach(spark.conf.set(key, _))
+      spark.conf.set("spark.graft.planDumpDir", dir.toString)
+      try {
+        val truss = Graph.kTruss(g, k = 4).orderBy("a", "b").collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+        (truss, java.nio.file.Files.readString(dir.resolve("ktruss_round_1.txt")))
+      } finally {
+        spark.conf.unset(key)
+        spark.conf.unset("spark.graft.planDumpDir")
+        val dumps = java.nio.file.Files.list(dir)
+        try dumps.forEach(java.nio.file.Files.delete(_)) finally dumps.close()
+        java.nio.file.Files.delete(dir)
+        graft.util.Caches.unpersistAll()
+      }
+    }
+    val (broadcastTruss, broadcastPlan) = run(None)
+    val (shuffleTruss, shufflePlan) = run(Some("-1"))
+    val k4 = Seq(("n1", "n2"), ("n1", "n3"), ("n1", "n4"), ("n2", "n3"),
+      ("n2", "n4"), ("n3", "n4")).map { case (a, b) => (a, b, 2L) }
+    assert(broadcastTruss == k4, broadcastTruss)
+    assert(shuffleTruss == broadcastTruss)
+    // the formatted tree names each join with its type: "<Kind> LeftAnti"
+    def antiJoins(plan: String): Seq[String] =
+      """(\w+Join) LeftAnti""".r.findAllMatchIn(plan).map(_.group(1)).toSeq
+    assert(antiJoins(broadcastPlan) == Seq.fill(3)("BroadcastHashJoin"),
+      broadcastPlan)
+    assert(antiJoins(shufflePlan).size == 3 &&
+      !antiJoins(shufflePlan).contains("BroadcastHashJoin"), shufflePlan)
+  }
+
   test("hits: bipartite graph splits the roles exactly — sources have " +
       "zero authority, sinks zero hubness, each side sums to ~scale") {
     val e = Seq(("s1", "c1"), ("s1", "c2"), ("s2", "c2"), ("s3", "c2"))

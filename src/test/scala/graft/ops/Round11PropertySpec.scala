@@ -41,6 +41,20 @@ class Round11PropertySpec extends SparkSpec {
     assert(rows(Graph.personalizedPagerank(e,
       org.apache.spark.sql.functions.col("node") === "1", iters = 5,
       checkpointEvery = 2)) == seeded)
+    val katz = rows(Graph.katz(e, iters = 4))
+    val hits = rows(Graph.hits(e, iters = 4))
+    for (every <- Seq(1, 2)) {
+      assert(rows(Graph.katz(e, iters = 4, checkpointEvery = every)) == katz,
+        s"katz checkpointEvery=$every diverged")
+      assert(rows(Graph.hits(e, iters = 4, checkpointEvery = every)) == hits,
+        s"hits checkpointEvery=$every diverged")
+    }
+    // the condensation of e plus every fifth edge reversed (cycles)
+    val cyclic = e.unionByName(e.where("(cast(src as long) + cast(dst as long)) % 5 = 0")
+      .select($"dst".as("src"), $"src".as("dst")))
+    val layers = rows(Graph.topoLayers(cyclic, maxIter = 40))
+    assert(rows(Graph.topoLayers(cyclic, maxIter = 40, checkpointEvery = 2))
+      == layers, "topoLayers checkpointEvery=2 diverged")
     graft.util.Caches.unpersistAll()
   }
 
@@ -69,6 +83,9 @@ class Round11PropertySpec extends SparkSpec {
     val base = rows(Graph.neighborhoodSizes(e, radius = 3, m = 64))
     assert(rows(Graph.neighborhoodSizes(e, radius = 3, m = 64,
       checkpointEvery = 1)) == base)
+    val nf = rows(Graph.neighborhoodFunction(e, radius = 3, m = 64))
+    assert(rows(Graph.neighborhoodFunction(e, radius = 3, m = 64,
+      checkpointEvery = 1)) == nf, "neighborhoodFunction diverged")
     graft.util.Caches.unpersistAll()
   }
 
@@ -79,26 +96,32 @@ class Round11PropertySpec extends SparkSpec {
     val docs = sample(text, 40).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val base = rows(TextAnalysis.bpeLearnMerges(docs, "text", rounds = 5))
+    val bytes = rows(ByteBpe.learn(docs, "text", rounds = 5))
+    val pieces = rows(Wordpiece.learn(docs, "text", rounds = 5))
     for (every <- Seq(1, 2)) {
       assert(rows(TextAnalysis.bpeLearnMerges(docs, "text", rounds = 5,
         checkpointEvery = every)) == base)
+      assert(rows(ByteBpe.learn(docs, "text", rounds = 5,
+        checkpointEvery = every)) == bytes, s"ByteBpe every=$every diverged")
+      assert(rows(Wordpiece.learn(docs, "text", rounds = 5,
+        checkpointEvery = every)) == pieces,
+        s"Wordpiece every=$every diverged")
     }
     graft.util.Caches.unpersistAll()
   }
 
-  test("Truncator frees superseded localCheckpoint blocks eagerly") {
+  test("Fixpoint.iterate frees superseded localCheckpoint blocks eagerly") {
     // Dataset.unpersist alone is a CacheManager no-op for a
     // localCheckpoint-backed frame (its RDD was persisted directly, never
-    // registered with CacheManager) — the Truncator must release the
+    // registered with CacheManager) — the driver must release the
     // superseded generation's blocks through the LogicalRDD's RDD, not
     // wait for GC-driven ContextCleaner reclaim. Serial test execution
     // (build.sbt) makes the persistent-RDD diff race-free.
     import org.apache.spark.sql.functions.col
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val t = new graft.util.Truncator(1)
-    var df = (1 to 100).toDF("x")
-    (1 to 5).foreach(_ => df = t(df.withColumn("x", col("x") + 1)))
+    val df = graft.util.Fixpoint.iterate(spark, (1 to 100).toDF("x"), 5,
+      "free_check", every = 1)(_.withColumn("x", col("x") + 1)).state
     assert(df.count() == 100)
     val held = sc.getPersistentRDDs.keySet -- before
     assert(held.size <= 1,

@@ -182,4 +182,30 @@ class ConfigSpec extends SparkSpec {
         s"$tpe: ${errs.mkString("; ")}")
     }
   }
+
+  test("a method's required view or directory is a parse-time error") {
+    val needs = Seq(
+      ("SketchTransform", "kmv_diff", "otherView"),
+      ("SketchTransform", "join_size", "otherView"),
+      ("ZorderTransform", "hilbert_write", "outputDir"),
+      ("DedupTransform", "exact_incremental", "seenView"),
+      ("DedupTransform", "minhash_incremental", "seenView"),
+      ("DedupTransform", "keep_best", "componentsView"),
+      ("DedupTransform", "cluster_stats", "componentsView"),
+      ("SampleTransform", "leakage_safe_split", "componentsView"),
+      ("SimilarityTransform", "ivf_write", "indexDir"),
+      ("SimilarityTransform", "ivf_query", "indexDir"))
+    for ((tpe, method, key) <- needs) {
+      def errs(extra: String) = Parser.parse(
+        s"""stages = [
+           |  { type = "$tpe", name = s, inputView = a, outputView = b
+           |    method = $method $extra }
+           |]""".stripMargin, conns).left.getOrElse(Nil)
+      assert(errs("").contains(ConfigError(s"stages[0].$key",
+        s"line 2: missing; method '$method' requires it")),
+        s"$tpe $method: ${errs("").mkString("; ")}")
+      assert(!errs(s""", $key = "v" """).exists(_.key == s"stages[0].$key"),
+        s"$tpe $method with $key")
+    }
+  }
 }

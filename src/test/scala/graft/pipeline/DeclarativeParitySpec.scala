@@ -399,6 +399,10 @@ class DeclarativeParitySpec extends AnyFunSuite {
       "per-batch binning kernel of the streaming PSI monitor; composed by StreamingSink.foreachBatchDriftAppend inside StreamingLoad drift_append",
     "Drift.psiBinCountsOf" ->
       "valueCol-projecting wrapper of psiBinCounts (the foreachBatch entry point); same StreamingLoad drift_append route",
+    "TextAnalysis.charFramed" ->
+      "framed distinct-word table (private[ops]) of the shared BPE merge loop; composed by TextAnalysisTransform bpe_learn and wordpiece_learn",
+    "TextAnalysis.mergeTable" ->
+      "merge-table projection (private[ops]) of the shared BPE merge loop; composed by TextAnalysisTransform bpe_learn and bytebpe_learn",
     "Drift.cumulativeByGroup" ->
       "skew-guarded grouped-cumulative kernel (private[ops]) composed by ks_grouped/wasserstein_grouped/hodges_lehmann and Pii.tClosenessProfile",
     "Graph.supplierCustomerEdges" ->
