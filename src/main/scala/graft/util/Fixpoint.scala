@@ -125,7 +125,8 @@ object Fixpoint {
     * `seed` is evaluated inside the loop's scopes on `spark`.
     */
   def iterate(spark: SparkSession, seed: => DataFrame, maxRounds: Int,
-      name: String, every: Int = 0, hold: Hold = Lazy, keepCheckpoints: Boolean = false,
+      name: String, every: Int = 0, hold: Hold = Lazy,
+      keepCheckpoints: Boolean = false,
       materializeSeed: Boolean = false, aqe: Boolean = true,
       parts: Parts = Parts.Session, reliable: Option[Boolean] = None,
       changed: Option[DataFrame => Boolean] = None)(

@@ -50,8 +50,9 @@ class Round11PropertySpec extends SparkSpec {
         s"hits checkpointEvery=$every diverged")
     }
     // the condensation of e plus every fifth edge reversed (cycles)
-    val cyclic = e.unionByName(e.where("(cast(src as long) + cast(dst as long)) % 5 = 0")
-      .select($"dst".as("src"), $"src".as("dst")))
+    val cyclic = e.unionByName(
+      e.where("(cast(src as long) + cast(dst as long)) % 5 = 0")
+        .select($"dst".as("src"), $"src".as("dst")))
     val layers = rows(Graph.topoLayers(cyclic, maxIter = 40))
     assert(rows(Graph.topoLayers(cyclic, maxIter = 40, checkpointEvery = 2))
       == layers, "topoLayers checkpointEvery=2 diverged")
