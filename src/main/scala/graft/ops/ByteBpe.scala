@@ -83,10 +83,9 @@ object ByteBpe {
     */
   def learn(df: DataFrame, textCol: String, rounds: Int = 4,
       checkpointEvery: Int = 0): DataFrame = {
-    val picked = TextAnalysis.learnMerges(df.sparkSession, rounds,
-      checkpointEvery, "bytebpe",
-      graft.util.Caches.persist(
-        df.select(explode(split(col(textCol), " ")).as("w"))
+    val picked = TextAnalysis.learnMerges(df, rounds, checkpointEvery,
+      "bytebpe", in => graft.util.Caches.persist(
+        in.select(explode(split(col(textCol), " ")).as("w"))
           .where(length(col("w")) >= 1)
           .groupBy("w").agg(count(lit(1)).as("wn"))
           .select(byteFramed(col("w")).as("e"), col("wn"))))(

@@ -509,9 +509,9 @@ object Dedup {
       fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))))
     // Every vertex is the src of at least one directed edge, so the
     // label table (one row per vertex) never outgrows the directed edge
-    // table: the edge count is max(label rows, edge rows). It runs under
-    // the caller's conf, before the loop's scopes open.
-    val (labels, converged) = minLabelFixpoint(directed, directed.count(),
+    // table: the edge count is max(label rows, edge rows). It runs on
+    // the caller's session, before the loop's own session is made.
+    val labels = minLabelFixpoint(directed, directed.count(),
       // Seed lab = min(id, min neighbor): the first neighbor-min round
       // fused into the vertex-set construction (one groupBy instead of a
       // distinct plus a join+groupBy round). The edge table is
@@ -524,10 +524,10 @@ object Dedup {
         .select(col("dst").as("id"), least(col("dst"), col("mn")).as("lab")),
       maxIter, reliable = checkpointDir.isDefined, name = "cc")
     directed.unpersist(blocking = false)
-    if (!converged) log.warn(
+    if (!labels.converged) log.warn(
       s"connectedComponents exited at maxIter=$maxIter without a verified " +
         "fixpoint; labels may be non-converged (raise maxIter)")
-    labels.select(col("id").as("doc_id"), col("lab").as("component"))
+    labels.state.select(col("id").as("doc_id"), col("lab").as("component"))
   }
 
   /** The min-label fixpoint behind [[connectedComponents]] and
@@ -538,8 +538,8 @@ object Dedup {
     * pointers (path halving) lab(v) <- min(lab(v), lab(lab(v))).
     * Combined these converge in O(log n) rounds, so a long CHAIN cannot
     * outrun `maxIter` the way pure one-hop propagation (O(diameter))
-    * could. Returns the last generation (id, lab) and whether its round
-    * changed nothing.
+    * could. Returns the loop's [[graft.util.Fixpoint.Result]], whose
+    * state is the last generation (id, lab).
     *
     * `seed` builds the first generation from the loop's own edge table
     * (cached hash-partitioned on `dst`); `rows` bounds the row counts of
@@ -550,7 +550,8 @@ object Dedup {
     * `reliable` picks the checkpoint flavour; `name` names the round
     * dumps ([[graft.util.Fixpoint.iterate]]).
     *
-    * The loop runs WITHOUT AQE and on ONE hash partitioning. Under AQE
+    * The loop runs on its own session ([[graft.util.Fixpoint.scoped]]),
+    * WITHOUT AQE and on ONE hash partitioning. Under AQE
     * every exchange of every round is its own query stage and job; off,
     * a round is one checkpoint job plus the probe. The edges are
     * hash-partitioned on `dst` once, and every label generation ends
@@ -581,15 +582,12 @@ object Dedup {
     */
   private[ops] def minLabelFixpoint(edges: DataFrame, rows: Long,
       seed: DataFrame => DataFrame, maxIter: Int, reliable: Boolean,
-      name: String): (DataFrame, Boolean) = {
-    val spark = edges.sparkSession
-    val p = graft.util.Fixpoint.loopPartitions(spark, rows)
-    // persisted inside the loop's scopes, where its plan is made
-    lazy val e = graft.util.Caches.persist(edges.repartition(p, col("dst")))
-    val res = graft.util.Fixpoint.iterate(spark, seed(e), maxIter, name,
-        every = 1, materializeSeed = true, aqe = false,
-        parts = graft.util.Fixpoint.Parts.Exactly(p),
-        reliable = Some(reliable),
+      name: String): graft.util.Fixpoint.Result = {
+    val p = graft.util.Fixpoint.loopPartitions(edges.sparkSession, rows)
+    graft.util.Fixpoint.scoped(edges.sparkSession, partitions = p) { loop =>
+    val e = graft.util.Caches.persist(loop(edges).repartition(p, col("dst")))
+    val res = graft.util.Fixpoint.iterate(loop(seed(e)), maxIter, name,
+        every = 1, materializeSeed = true, reliable = Some(reliable),
         changed = Some(next => !next.where(col("lab") =!= col("__ol")).isEmpty)) {
       gen =>
         val l = gen.select(col("id"), col("lab"), col("lab").as("__ol"))
@@ -609,7 +607,8 @@ object Dedup {
           .repartition(p, col("id"))
     }
     e.unpersist(blocking = false)
-    (res.state.select(col("id"), col("lab")), res.converged)
+    res.copy(state = res.state.select(col("id"), col("lab")))
+    }
   }
 
   /** Keep one document per duplicate cluster: drop every row whose id

@@ -130,8 +130,8 @@ object Graph {
               .otherwise(lit(0L)).as("r"))
     }
     val eo = e.join(outdeg, "src") // (src, dst, od)
-    val ranks = graft.util.Fixpoint.iterate(edges.sparkSession, init, iters,
-        "pagerank", every = checkpointEvery) { ranks =>
+    val ranks = graft.util.Fixpoint.iterate(init, iters, "pagerank",
+        every = checkpointEvery) { ranks =>
       val contrib = eo
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"),
@@ -209,8 +209,8 @@ object Graph {
         s"worst pre-division product $worstIntermediate) — " +
         "lower alpha/iters or use pagerank's degree-diluted walk")
     val init = nodes.select(col("node"), lit(RankScale).as("r"))
-    val ranks = graft.util.Fixpoint.iterate(edges.sparkSession, init, iters,
-        "katz", every = checkpointEvery) { ranks =>
+    val ranks = graft.util.Fixpoint.iterate(init, iters, "katz",
+        every = checkpointEvery) { ranks =>
       val contrib = e
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"),
@@ -267,14 +267,14 @@ object Graph {
     */
   def hits(edges: DataFrame, iters: Int = 2,
       checkpointEvery: Int = 0): DataFrame =
-    graft.util.Fixpoint.withoutAqe(edges.sparkSession) {
+    graft.util.Fixpoint.scoped(edges.sparkSession) { loop =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     // e and nodes persisted: e is walked by every pull (2 per
     // iteration) plus the node-set union, and nodes by the start
     // vector, the one-row total and the final join — un-persisted,
     // each walk replays the upstream edge plan AND this distinct.
     val e = graft.util.Caches.persist(
-      edges.select(col("src"), col("dst")).distinct())
+      loop(edges).select(col("src"), col("dst")).distinct())
     val nodes = graft.util.Caches.persist(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct())
@@ -308,10 +308,9 @@ object Graph {
     }
     // each pull's exchange carries node-sized partials; the loop's
     // shuffle partitions are sized to the (already persisted) node table
-    val hub = graft.util.Fixpoint.iterate(edges.sparkSession, hub0, iters,
-        "hits", every = checkpointEvery,
-        parts = graft.util.Fixpoint.Parts.Exactly(graft.util.Fixpoint
-          .loopPartitions(edges.sparkSession, nodes.count()))) { hub =>
+    loop.sizeTo(nodes.count())
+    val hub = graft.util.Fixpoint.iterate(hub0, iters, "hits",
+        every = checkpointEvery) { hub =>
       // score vectors are one row per node — broadcast them into the
       // edge joins so each pull is a map-side broadcast join + combine
       val araw = e.join(broadcast(hub.select(col("node").as("src"),
@@ -372,7 +371,7 @@ object Graph {
     * Output: (node, scc) for every vertex of the edge table, scc = the
     * component's minimum node id.
     */
-  def scc(edges: DataFrame, maxOuter: Int = 12, maxIter: Int = 25): DataFrame = {
+  def scc(edges: DataFrame, maxOuter: Int = 12, maxIter: Int = 25): DataFrame =
     // The trim and peel rounds keep AQE ON (unlike the other fixpoints —
     // see [[graft.util.Fixpoint]]): they are semi/anti-join heavy and
     // AQE's runtime broadcast conversion wins more than its per-stage
@@ -380,9 +379,10 @@ object Graph {
     // sf0.1). The color and confirm label rounds run in
     // [[Dedup.minLabelFixpoint]], which turns AQE off for its own rounds
     // and co-partitions edges and labels, as for connected components.
+    graft.util.Fixpoint.scoped(edges.sparkSession, aqe = true) { loop =>
     require(maxOuter >= 1, s"maxOuter must be >= 1, got $maxOuter")
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    val e0 = edges.select(col("src"), col("dst"))
+    val e0 = loop(edges).select(col("src"), col("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull).distinct()
     val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
     def ckpt(df: DataFrame): DataFrame = graft.util.Fixpoint.truncate(df)
@@ -397,7 +397,7 @@ object Graph {
     // of times; size the loop's shuffle partitions to that state (AQE
     // stays ON — see above — but its coalescing cannot remove the
     // per-task scheduling of an oversized INITIAL partition count)
-    graft.util.Fixpoint.withLoopPartitions(edges.sparkSession, nVerts) {
+    loop.sizeTo(nVerts)
     while (!done && outer < maxOuter) {
       // 1. TRIM fixpoint: peel vertices with no in- or no out-edges.
       // One checkpointed frame per round (id, __live): the peeled rows
@@ -437,7 +437,7 @@ object Graph {
         val rows = math.max(nVerts, rem.count())
         val pass = s"scc_${outer + 1}"
         def minLabel(e: DataFrame, name: String): DataFrame = {
-          val (labels, converged) = Dedup.minLabelFixpoint(e, rows,
+          val labels = Dedup.minLabelFixpoint(e, rows,
             // seed lab = min(id, min over v's edges), every vertex kept
             le => verts
               .join(le.groupBy(col("src").as("id")).agg(min("dst").as("__mn")),
@@ -451,11 +451,11 @@ object Graph {
           // peel loop). Pointer jumping halves chain length per round, so
           // maxIter=25 covers reach-chains ~2^25 long; hitting this means
           // the graph genuinely needs a bigger budget.
-          if (!converged)
+          if (!labels.converged)
             throw new IllegalStateException(
               s"scc label propagation did not converge in maxIter=$maxIter " +
                 "pointer-jumping rounds; raise maxIter")
-          labels
+          labels.state
         }
         val colors = graft.util.Caches.persist(
           minLabel(rem.select(col("dst").as("src"), col("src").as("dst")),
@@ -490,7 +490,6 @@ object Graph {
       }
       outer += 1
     }
-    }
     if (!done)
       throw new IllegalStateException(
         s"scc did not converge in maxOuter=$maxOuter peel rounds; " +
@@ -522,11 +521,12 @@ object Graph {
     * (scc, n_nodes, layer).
     */
   def topoLayers(edges: DataFrame, maxOuter: Int = 12, maxIter: Int = 25,
-      checkpointEvery: Int = 1): DataFrame = {
+      checkpointEvery: Int = 1): DataFrame =
     // AQE stays ON — same adjudication as [[scc]]'s trim and peel rounds,
     // which dominate this operator's runtime.
-    val labels = graft.util.Caches.persist(scc(edges, maxOuter, maxIter))
-    val ce = graft.util.Caches.persist(edges
+    graft.util.Fixpoint.scoped(edges.sparkSession, aqe = true) { loop =>
+    val labels = graft.util.Caches.persist(scc(loop(edges), maxOuter, maxIter))
+    val ce = graft.util.Caches.persist(loop(edges)
       .join(labels.select(col("node").as("src"), col("scc").as("__ca")),
         "src")
       .join(labels.select(col("node").as("dst"), col("scc").as("__cb")),
@@ -536,13 +536,14 @@ object Graph {
     val comps = labels.select(col("scc").as("c")).distinct()
     // the previous generation's layer rides along as __ol, so the
     // convergence probe is a FILTER over the materialized generation;
-    // the loop's partitions are sized to the component count
-    val layered = graft.util.Fixpoint.iterate(edges.sparkSession,
+    // round 1 sizes the loop's partitions to the materialized seed
+    var sized = false
+    val layered = graft.util.Fixpoint.iterate(
         comps.select(col("c"), lit(0L).as("layer")), maxIter, "topo",
         every = checkpointEvery, materializeSeed = true,
-        parts = graft.util.Fixpoint.Parts.SizedBy(_.count()),
         changed = Some(next =>
           !next.where(col("layer") =!= col("__ol")).isEmpty)) { layer =>
+      if (!sized) { loop.sizeTo(layer.count()); sized = true }
       val relax = ce
         .join(layer.select(col("c").as("ca"), col("layer")), "ca")
         .groupBy(col("cb").as("c")).agg((max("layer") + 1L).as("__nl"))
@@ -703,10 +704,10 @@ object Graph {
     * edge formulation would otherwise need.
     */
   def kTruss(edges: DataFrame, k: Int, rounds: Int = 8): DataFrame =
-    graft.util.Fixpoint.withoutAqe(edges.sparkSession) {
+    graft.util.Fixpoint.scoped(edges.sparkSession) { loop =>
     require(k >= 3, s"k must be >= 3 (k-2 triangles per edge), got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = edges.sparkSession
+    val spark = loop.spark
     val nodeType = edges.schema("a").dataType
     // Support of the CURRENT surviving subgraph, keyed on its ORIENTED
     // edges. The orientation is fixed ONCE (below) from the original
@@ -752,7 +753,7 @@ object Graph {
     // later action would recompute through an already-freed checkpoint.
     // Truncated generations have no cache-level dependencies: each is
     // its own block-backed leaf.
-    val und0 = edges.select(least(col("a"), col("b")).as("a"),
+    val und0 = loop(edges).select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .where(col("a") < col("b")).distinct()
     val deg = und0.select(col("a").as("node"))
@@ -774,7 +775,7 @@ object Graph {
     // the enumeration + per-round support exchanges carry edge-sized
     // (and 3x-triangle-sized explode) tables; size the loop's shuffle
     // partitions to the edge table
-    graft.util.Fixpoint.withLoopPartitions(spark, edgeCount) {
+    loop.sizeTo(edgeCount)
     // the ONE full enumeration, checkpointed ONCE; rounds scan it with
     // anti-joins against the (tiny, cumulative) removed-edge table —
     // the triangle list itself is never re-materialized.
@@ -816,7 +817,7 @@ object Graph {
     var removedCum: Option[DataFrame] = None
     val out =
       if (!removals(sup0)) sup0
-      else graft.util.Fixpoint.iterate(spark, sup0, rounds, "ktruss",
+      else graft.util.Fixpoint.iterate(sup0, rounds, "ktruss",
           every = 1, changed = Some(removals)) { sup =>
         removedCumBytes += removedBytesNow
         val removed = sup.where(col("support") < k - 2)
@@ -859,7 +860,6 @@ object Graph {
     // key is an internal detail of the fixed orientation.
     out.select(least(col("u"), col("v")).as("a"),
       greatest(col("u"), col("v")).as("b"), col("support"))
-    } // end withLoopPartitions
   }
 
   /** Local clustering coefficients over a canonical undirected edge
@@ -1032,7 +1032,7 @@ object Graph {
     val sym = graft.util.Caches.persist(
       edges.select(col("a"), col("b"))
         .union(edges.select(col("b").as("a"), col("a").as("b"))))
-    graft.util.Fixpoint.iterate(edges.sparkSession,
+    graft.util.Fixpoint.iterate(
         sym.select(col("a").as("node")).distinct()
           .withColumn("label", col("node")), iters, "lpa",
         every = checkpointEvery, hold = graft.util.Fixpoint.Persist) { labels =>
@@ -1189,24 +1189,25 @@ object Graph {
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 8,
       checkpointEvery: Int = 0): DataFrame =
-    graft.util.Fixpoint.withoutAqe(edges.sparkSession) {
+    graft.util.Fixpoint.scoped(edges.sparkSession) { loop =>
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
+    val und = loop(edges)
     val sym0 = graft.util.Caches.persist(
-      edges.select(col("a"), col("b"))
-        .union(edges.select(col("b").as("a"), col("a").as("b"))))
+      und.select(col("a"), col("b"))
+        .union(und.select(col("b").as("a"), col("a").as("b"))))
     var edgeCount = sym0.count()
     // per-round exchanges carry edge-sized tables; size the loop's
     // shuffle partitions to that
-    graft.util.Fixpoint.withLoopPartitions(edges.sparkSession, edgeCount) {
+    loop.sizeTo(edgeCount)
     // Early stop when a round drops nothing: a no-drop round is the
     // fixpoint, every later round is the identity, so stopping produces
     // the SAME result as running the full budget — the budget is a
     // ceiling, not a schedule. The count that detects it reads the
     // just-materialized table (no recomputation).
     var keep: DataFrame = null
-    val sym = graft.util.Fixpoint.iterate(edges.sparkSession, sym0, rounds,
-        "kcore", every = checkpointEvery, hold = graft.util.Fixpoint.Persist,
+    val sym = graft.util.Fixpoint.iterate(sym0, rounds, "kcore",
+        every = checkpointEvery, hold = graft.util.Fixpoint.Persist,
         changed = Some { next =>
           val nextCount = next.count()
           keep.unpersist(blocking = false)
@@ -1230,7 +1231,6 @@ object Graph {
       s"kCore: $under node(s) still below k=$k after rounds=$rounds — " +
         "the peel did not reach its fixpoint; raise rounds for the exact core")
     deg
-    }
   }
 
   /** Deterministic "random" walks of fixed `length` from EVERY node over
@@ -1279,9 +1279,10 @@ object Graph {
     */
   def neighborhoodSizes(und: DataFrame, radius: Int = 2,
       m: Int = 512, checkpointEvery: Int = 0): DataFrame =
-    graft.util.Fixpoint.withoutAqe(und.sparkSession) {
+    graft.util.Fixpoint.scoped(und.sparkSession) { loop =>
     require(radius >= 1, s"radius must be >= 1, got $radius")
-    val (sym, nodes, ests) = ballEstimates(und, radius, m, checkpointEvery)
+    val (sym, nodes, ests) =
+      ballEstimates(loop(und), radius, m, checkpointEvery)
     val est = ests.last.withColumnRenamed(s"__e$radius", "ball_estimate")
     // exact calibration ball via iterated distinct BFS pairs — the
     // quadratic thing the registers replace; fine at gate scale. Seeded
@@ -1301,7 +1302,7 @@ object Graph {
         .distinct()
     // materialized only BETWEEN rounds (lineage truncation for the next
     // one); the final round flows straight into its consumer
-    val reached = graft.util.Fixpoint.iterate(und.sparkSession,
+    val reached = graft.util.Fixpoint.iterate(
         graft.util.Caches.persist(if (radius == 1) seed.distinct() else seed),
         math.max(0, radius - 2), "reach", every = checkpointEvery,
         hold = graft.util.Fixpoint.Count)(widen).state
@@ -1337,9 +1338,10 @@ object Graph {
     */
   def harmonicCentrality(und: DataFrame, radius: Int = 2, m: Int = 512,
       checkpointEvery: Int = 0): DataFrame =
-    graft.util.Fixpoint.withoutAqe(und.sparkSession) {
+    graft.util.Fixpoint.scoped(und.sparkSession) { loop =>
     require(radius >= 1, s"radius must be >= 1, got $radius")
-    val (sym, nodes, ests) = ballEstimates(und, radius, m, checkpointEvery)
+    val (sym, nodes, ests) =
+      ballEstimates(loop(und), radius, m, checkpointEvery)
     // ascending-radius fold of clamped deltas — identical operand order
     // in the oracle
     val wide = ests.reduce(_.join(_, "node"))
@@ -1358,7 +1360,7 @@ object Graph {
       nodes.select(col("node").as("start"), col("node").as("x"),
         lit(0L).as("d")))
     var frontier = seen
-    // NOT partition-scoped (round-20 negative result, part of the
+    // NOT partition-sized (round-20 negative result, part of the
     // harmonic 1.40x regression): the frontier distinct carries the
     // ball-mass pair table, real per-row work at any scale.
     for (r <- 1 to radius) {
@@ -1427,18 +1429,18 @@ object Graph {
       .unionAll(sym.select(col("a").as("node"), col("b").as("__member")))
     // every per-radius estimate table in `ests` references ITS round's
     // generation and evaluates lazily after the loop: superseded
-    // checkpoints are kept. NOT partition-scoped (round-20 negative
-    // result, 1.16-1.40x on nf/harmonic): the packed-register merge is an
-    // object aggregate whose per-row cost dominates — collapsing its
-    // exchange to one task serializes real work, unlike the label-table
-    // fixpoints.
+    // generations are kept, cached or checkpointed. NOT partition-sized
+    // (round-20 negative result, 1.16-1.40x on nf/harmonic): the
+    // packed-register merge is an object aggregate whose per-row cost
+    // dominates — collapsing its exchange to one task serializes real
+    // work, unlike the label-table fixpoints.
     val ests = scala.collection.mutable.ArrayBuffer(est0)
     // ONE m-byte buffer per edge crosses each round's join — never
     // per-bucket rows
-    val last = graft.util.Fixpoint.iterate(und.sparkSession,
+    val last = graft.util.Fixpoint.iterate(
         graft.util.Caches.persist(packed(members1)), radius - 1, "ball",
         every = checkpointEvery, hold = graft.util.Fixpoint.Count,
-        keepCheckpoints = true) { regs =>
+        keepGenerations = true) { regs =>
       ests += estimateOf(regs, s"__e${ests.size}")
       regs.unionAll(sym
           .join(regs.withColumnRenamed("node", "b"), "b")
@@ -1467,9 +1469,9 @@ object Graph {
     */
   def neighborhoodFunction(und: DataFrame, radius: Int = 2, m: Int = 512,
       checkpointEvery: Int = 0): DataFrame =
-    graft.util.Fixpoint.withoutAqe(und.sparkSession) {
+    graft.util.Fixpoint.scoped(und.sparkSession) { loop =>
     require(radius >= 1, s"radius must be >= 1, got $radius")
-    val (_, _, ests) = ballEstimates(und, radius, m, checkpointEvery)
+    val (_, _, ests) = ballEstimates(loop(und), radius, m, checkpointEvery)
     val rows = ests.zipWithIndex.map { case (df, r) =>
       df.agg(sum(round(col(s"__e$r") * 1048576.0).cast("long")).as("__s"))
         .select(lit(r.toLong).as("r"),

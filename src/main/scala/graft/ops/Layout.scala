@@ -452,7 +452,8 @@ object Layout {
       values: Seq[Long], options: Map[String, String] = Map.empty): DataFrame =
     // AQE off: the delete is a chain of small statistics probes,
     // per-block actions and swap writes (see [[graft.util.Fixpoint]])
-    graft.util.Fixpoint.withoutAqe(spark) {
+    graft.util.Fixpoint.scoped(spark) { loop =>
+    val spark = loop.spark
     require(values.nonEmpty, "need at least one key value to delete")
     if (!options.get("confirm.delete").exists(_.equalsIgnoreCase("true")))
       throw new IllegalArgumentException(

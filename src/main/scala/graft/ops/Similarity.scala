@@ -248,8 +248,8 @@ object Similarity {
       maxBucket: Int = 4096): DataFrame =
     // AQE off for the banding pass + bucket-size probe (an internal
     // action; see [[graft.util.Fixpoint]])
-    graft.util.Fixpoint.withoutAqe(df.sparkSession) {
-    val base = signedBase(df, nBits)
+    graft.util.Fixpoint.scoped(df.sparkSession) { loop =>
+    val base = signedBase(loop(df), nBits)
     // Each banded row also carries the following band's signature (cyclic)
     // as the oversized-bucket extension key.
     val bd = base.select(col("vec_id"), V.bitBands(col("__bits"), b, r).as("bds"))
@@ -1061,12 +1061,12 @@ object Similarity {
     * already-covered point, not a center.
     */
   def kcenter(df: DataFrame, k: Int): DataFrame =
-    graft.util.Fixpoint.withoutAqe(df.sparkSession) {
+    graft.util.Fixpoint.scoped(df.sparkSession) { loop =>
     require(k >= 2 && k <= 64, s"k must be in [2, 64], got $k")
-    val spark = df.sparkSession
+    val spark = loop.spark
     import spark.implicits._
     val cv = graft.util.Caches.persist(
-      df.select(col("vec_id"), col("embedding")))
+      loop(df).select(col("vec_id"), col("embedding")))
     val n = cv.count() // also materializes the persist before the loop
     require(n >= k,
       s"kcenter: k=$k exceeds the corpus ($n vectors) — every center " +
@@ -1081,7 +1081,7 @@ object Similarity {
     val centers = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, java.lang.Double)]
     centers += ((1L, seedId, null))
-    val state = graft.util.Fixpoint.iterate(spark, state0, k - 1, "kcenter",
+    val state = graft.util.Fixpoint.iterate(state0, k - 1, "kcenter",
         hold = graft.util.Fixpoint.Count) { state =>
       val top = state
         .agg(max(struct(col("__d"), (-col("vec_id")).as("__nid"),
@@ -1154,16 +1154,17 @@ object Similarity {
       maxBucket: Int = 4096): DataFrame =
     // AQE off end-to-end: the pair probe and the CC fixpoint dominate
     // (see [[graft.util.Fixpoint]])
-    graft.util.Fixpoint.withoutAqe(df.sparkSession) {
+    graft.util.Fixpoint.scoped(df.sparkSession) { loop =>
     require(minPts >= 2, s"minPts must be >= 2, got $minPts " +
       "(minPts = 1 makes every point core and no point noise — " +
       "that is exact dedup, not density clustering)")
+    val points = loop(df)
     val pairs = graft.util.Caches.persist(
-      nearDupPairs(df, simThreshold, nBits, b, r, maxBucket)
+      nearDupPairs(points, simThreshold, nBits, b, r, maxBucket)
         .select(col("vec_a"), col("vec_b")))
     val sym = pairs.union(
       pairs.select(col("vec_b").as("vec_a"), col("vec_a").as("vec_b")))
-    val pts = df.select(col("vec_id")).distinct()
+    val pts = points.select(col("vec_id")).distinct()
     val core = sym.groupBy(col("vec_a").as("vec_id"))
       .agg(count(lit(1)).as("__deg"))
       .where(col("__deg") + 1 >= minPts).select("vec_id")

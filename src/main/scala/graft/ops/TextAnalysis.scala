@@ -1032,28 +1032,30 @@ object TextAnalysis {
     */
   def bpeLearnMerges(df: DataFrame, textCol: String,
       rounds: Int = 4, checkpointEvery: Int = 0): DataFrame = {
-    val picked = learnMerges(df.sparkSession, rounds, checkpointEvery, "bpe",
-      charFramed(df, textCol, "TextAnalysis.bpeLearnMerges"))(mostFrequent)
+    val picked = learnMerges(df, rounds, checkpointEvery, "bpe",
+      charFramed(_, textCol, "TextAnalysis.bpeLearnMerges"))(mostFrequent)
     mergeTable(df.sparkSession, picked)
   }
 
   /** The BPE merge loop behind [[bpeLearnMerges]], [[ByteBpe.learn]] and
-    * [[Wordpiece.learn]]. Over `framed`, the (e, wn) table of framed
+    * [[Wordpiece.learn]]. Over `framed(df)`, the (e, wn) table of framed
     * symbol strings and word counts, each round counts the adjacent
     * symbol pairs weighted by word count; `pick` gets the per-word
     * symbol arrays (wn, ss) and the pair counts (a, b, cnt) and returns
     * the row of the chosen merge, whose first two fields are its pair,
     * or None when no pair remains. The merge is applied as one literal
-    * replace. Returns the picked rows in round order.
+    * replace. The whole loop, `framed` included, runs on its own session
+    * ([[graft.util.Fixpoint.scoped]]). Returns the picked rows in round
+    * order.
     */
-  private[ops] def learnMerges(spark: org.apache.spark.sql.SparkSession,
-      rounds: Int, checkpointEvery: Int, name: String, framed: => DataFrame)(
+  private[ops] def learnMerges(df: DataFrame, rounds: Int,
+      checkpointEvery: Int, name: String, framed: DataFrame => DataFrame)(
       pick: (DataFrame, DataFrame) => Option[Row]): Seq[Row] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
+    graft.util.Fixpoint.scoped(df.sparkSession) { loop =>
     val picked = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val last = graft.util.Fixpoint.iterate(spark, framed, rounds, name,
-        every = checkpointEvery, hold = graft.util.Fixpoint.Count,
-        aqe = false) { enc =>
+    val last = graft.util.Fixpoint.iterate(framed(loop(df)), rounds, name,
+        every = checkpointEvery, hold = graft.util.Fixpoint.Count) { enc =>
       val syms = enc.select(col("wn"),
         filter(split(col("e"), FrameSep), s => s =!= "").as("ss"))
       // the sequence(1,0)-steps-backwards guard: 1-symbol rows emit null,
@@ -1077,6 +1079,7 @@ object TextAnalysis {
     }.state
     last.unpersist(blocking = false)
     picked.toSeq
+    }
   }
 
   /** The BPE merge rule: the most frequent pair, ties to the

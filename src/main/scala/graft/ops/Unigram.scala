@@ -77,13 +77,13 @@ object Unigram {
   def learn(df: DataFrame, textCol: String, vocabSize: Int = 64,
       maxPieceLen: Int = 4, iters: Int = 2,
       seedSize: Int = 2048): DataFrame =
-    graft.util.Fixpoint.withoutAqe(df.sparkSession) {
+    graft.util.Fixpoint.scoped(df.sparkSession) { loop =>
     require(vocabSize >= 1, s"vocabSize must be >= 1, got $vocabSize")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(seedSize >= 1, s"seedSize must be >= 1, got $seedSize")
-    val spark = df.sparkSession
+    val spark = loop.spark
     import spark.implicits._
-    val wc = graft.util.Caches.persist(wordCounts(df, textCol))
+    val wc = graft.util.Caches.persist(wordCounts(loop(df), textCol))
 
     // substring seed: (pos, len) grid per word, multiplicity × freq
     val subs = wc.select(col("wn"), explode(flatten(

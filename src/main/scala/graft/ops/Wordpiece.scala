@@ -65,8 +65,8 @@ object Wordpiece {
       checkpointEvery: Int = 0): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val picked = TextAnalysis.learnMerges(spark, rounds, checkpointEvery,
-        "wordpiece", TextAnalysis.charFramed(df, textCol, "Wordpiece.learn")) {
+    val picked = TextAnalysis.learnMerges(df, rounds, checkpointEvery,
+        "wordpiece", TextAnalysis.charFramed(_, textCol, "Wordpiece.learn")) {
       (syms, pairs) =>
         val symCounts = syms
           .select(col("wn"), explode(col("ss")).as("s"))

@@ -100,23 +100,17 @@ object ExtensionQueries {
       t
     })
 
-  /** Run `body` (which must both BUILD and DRAIN a streaming query) with
-    * `spark.sql.shuffle.partitions` pinned to `n`, restoring the session
-    * value afterwards. Stateful streaming operators open one state store
+  /** Shuffle partitions of the streaming gates' own session
+    * ([[graft.util.Fixpoint.scoped]]), which builds and drains each
+    * stream. Stateful streaming operators open one state store
     * per shuffle partition per micro-batch (a stream-stream join opens
     * FOUR): at the session's 32 partitions that is ~100 store files of
     * pure fixed overhead per trigger on gate-sized data (measured 16.3s →
     * 5.5s on streaming_join at sf0.1 going 32 → 4). The partition count
-    * freezes into the checkpoint at query START, so nothing outside the
-    * body observes the change.
+    * freezes into the checkpoint at query START, from the session the
+    * stream was read on.
     */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(
-      body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, old)
-  }
+  private val StatePartitions = 4
 
   /** Recursive delete, tolerant of concurrent removal. */
   private def rmrf(p: java.nio.file.Path): Unit =
@@ -2149,8 +2143,8 @@ object ExtensionQueries {
       val in = tmp.resolve("in")
       Tables.eventsRaw(spark, dir).repartition(3)
         .write.parquet(in.toString)
-      withStatePartitions(spark, 4) {
-        val stream = spark.readStream
+      graft.util.Fixpoint.scoped(spark, StatePartitions, aqe = true) { scope =>
+        val stream = scope.spark.readStream
           .schema(Tables.eventsSchema)
           .option("maxFilesPerTrigger", 1)
           .parquet(in.toString)
@@ -3649,8 +3643,8 @@ object ExtensionQueries {
       val in = tmp.resolve("in")
       Tables.eventsRaw(spark, dir).repartition(3)
         .write.parquet(in.toString)
-      withStatePartitions(spark, 4) {
-        val stream = spark.readStream
+      graft.util.Fixpoint.scoped(spark, StatePartitions, aqe = true) { scope =>
+        val stream = scope.spark.readStream
           .schema(Tables.eventsSchema)
           .option("maxFilesPerTrigger", 1)
           .parquet(in.toString)
@@ -3705,8 +3699,8 @@ object ExtensionQueries {
           col("event_type").isin("click", "purchase"))
         .repartition(3)
         .write.parquet(in.toString)
-      withStatePartitions(spark, 4) {
-        def src() = spark.readStream
+      graft.util.Fixpoint.scoped(spark, StatePartitions, aqe = true) { scope =>
+        def src() = scope.spark.readStream
           .schema(Tables.eventsSchema)
           .option("maxFilesPerTrigger", 1)
           .parquet(in.toString)
@@ -3766,8 +3760,8 @@ object ExtensionQueries {
       Tables.eventsRaw(spark, dir).repartition(3).write.parquet(in.toString)
       val dim = Tables.eventsRaw(spark, dir).select(col("user_id")).distinct()
         .withColumn("segment", pmod(col("user_id"), lit(7L)))
-      withStatePartitions(spark, 4) {
-        val stream = spark.readStream
+      graft.util.Fixpoint.scoped(spark, StatePartitions, aqe = true) { scope =>
+        val stream = scope.spark.readStream
           .schema(Tables.eventsSchema)
           .option("maxFilesPerTrigger", 1)
           .parquet(in.toString)
@@ -3977,13 +3971,13 @@ object ExtensionQueries {
         s.coalesce(1).write.mode("append").parquet(in.toString)
         Thread.sleep(5) // distinct file mtimes pin the processing order
       }
-      withStatePartitions(spark, 4) {
-        val stream = spark.readStream
+      graft.util.Fixpoint.scoped(spark, StatePartitions, aqe = true) { scope =>
+        val stream = scope.spark.readStream
           .schema("user_id long, ts long, event_id long")
           .option("maxFilesPerTrigger", 1)
           .parquet(in.toString)
           .as[(Long, Long, Long)]
-        implicit val s: SparkSession = spark
+        implicit val s: SparkSession = scope.spark
         val kept = graft.streaming.StreamingOps
           .throttleStream(stream, gapSeconds = 600)
         val q = graft.streaming.StreamingSink.foreachBatchLoad(
@@ -4017,14 +4011,14 @@ object ExtensionQueries {
       val in = tmp.resolve("in")
       Tables.eventsRaw(spark, dir).repartition(3)
         .write.parquet(in.toString)
-      withStatePartitions(spark, 4) {
-        val stream = spark.readStream
+      graft.util.Fixpoint.scoped(spark, StatePartitions, aqe = true) { scope =>
+        val stream = scope.spark.readStream
           .schema(Tables.eventsSchema)
           .option("maxFilesPerTrigger", 1)
           .parquet(in.toString)
         val typed = stream.select(col("user_id").cast("string")).as[String]
           .map((_, 1L))
-        val running = StreamingOps.runningCountsPerKey(typed)(spark)
+        val running = StreamingOps.runningCountsPerKey(typed)(scope.spark)
         val q = graft.streaming.StreamingSink.foreachBatchLoad(
           running.toDF("user_id", "running_total"),
           new graft.connect.ParquetConnector(tmp.toString), "counts",
@@ -4064,8 +4058,8 @@ object ExtensionQueries {
       val in = tmp.resolve("in")
       Tables.eventsRaw(spark, dir).repartition(3)
         .write.parquet(in.toString)
-      withStatePartitions(spark, 4) {
-        val stream = spark.readStream
+      graft.util.Fixpoint.scoped(spark, StatePartitions, aqe = true) { scope =>
+        val stream = scope.spark.readStream
           .schema(Tables.eventsSchema)
           .option("maxFilesPerTrigger", 1)
           .parquet(in.toString)

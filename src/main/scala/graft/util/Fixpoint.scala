@@ -1,9 +1,9 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSessionBridge, SparkSession}
 
-/** The one driver of the engine's iterative operators, and the conf
-  * scopes their rounds run under.
+/** The one driver of the engine's iterative operators, and the session
+  * they run on.
   *
   * THE LOOP CONTRACT ([[iterate]]). A loop is a seed generation plus a
   * round that builds generation r from generation r-1. The driver:
@@ -32,23 +32,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    caller's. A checkpointed generation is freed through its plan's
   *    LogicalRDD — its blocks, or its reliable files —
   *    because `Dataset.unpersist` is a CacheManager call and a
-  *    localCheckpoint was never registered there. `keepCheckpoints`
-  *    only uncaches: a loop whose per-round frames are read lazily after
-  *    it ends (HyperBall's per-radius estimates) must keep superseded
-  *    checkpoints, whose lineage is gone — freeing one is an
-  *    unrecoverable CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, not a recompute.
+  *    localCheckpoint was never registered there. `keepGenerations`
+  *    frees nothing: a loop whose per-round frames are read lazily after
+  *    it ends (HyperBall's per-radius estimates) keeps every generation
+  *    cached or checkpointed until [[Caches.unpersistAll]] — freeing a
+  *    checkpoint is an unrecoverable CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
+  *    and uncaching a persisted one recomputes its whole chain.
   *  - PROBES each materialized generation with the optional `changed`
   *    (a probe over a persisted generation must read all of it) and stops
   *    at the first round that changed nothing, or when the round returns
   *    its input unchanged, or after `maxRounds`. The [[Result]] says which.
   *  - DUMPS each round's frame before it is materialized as
   *    `<name>_round_<n>` ([[PlanDump]], conf-gated).
-  *  - SCOPES the seed and the rounds: without AQE when `aqe = false`,
-  *    and with the loop's shuffle-partition count per [[Parts]]. An
-  *    operator whose setup or read-out (an exact count, a collect) ran
-  *    inside the same scope opens it around the whole operator instead;
-  *    scopes nest. [[truncate]] is the one-shot form for state outside
+  *  - RUNS ON ONE SESSION, the seed's: every round's frame must be bound
+  *    to it. [[truncate]] is the one-shot lineage cut for state outside
   *    a loop (scc's peel rounds, kTruss's oriented edges).
+  *
+  * THE LOOP'S SESSION ([[scoped]]). An operator runs its whole body —
+  * setup, probes, collects and its [[iterate]] calls — on a CLONE of the
+  * caller's session, as Spark's StreamExecution runs every micro-batch
+  * on a clone of its user's session. The clone starts with the caller's
+  * runtime conf, temp views, functions and execution listeners, shares
+  * its SparkContext and cache, and takes the loop's own settings: AQE
+  * off, and the loop's shuffle-partition count. The caller's conf is
+  * never written, so concurrent queries on the caller's session plan as
+  * they always do, and nothing needs restoring. The operator's result
+  * comes back bound to the caller's session and runs under the caller's
+  * conf; a nested operator clones again.
   *
   * AQE. Adaptive execution re-optimizes at EVERY exchange: each shuffle
   * becomes its own query stage — submitted, materialized, re-planned —
@@ -63,31 +73,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fixpoint over a 5k-edge graph ran 39.3 s with AQE on vs 11.2 s off —
   * identical results, identical plan shapes per round (the same
   * precedent as Spark's own MicroBatchExecution, which force-disables
-  * AQE in stateful streaming). [[withoutAqe]] disables AQE for `body`
-  * and restores the previous value after; the DataFrame an operator
-  * returns executes under the caller's own configuration as usual.
-  * `spark.graft.fixpoint.aqe=true` re-enables AQE inside the loops for
-  * deployments whose per-round tables are large enough that runtime
-  * coalescing / skew splitting outweighs the per-round re-planning
-  * latency (the 100 TB regime).
-  *
-  * CONCURRENCY CONTRACT: `spark.conf` is SESSION-global, not
-  * thread-local, so while any fixpoint scope is open every OTHER query
-  * submitted on the same session also plans under the scoped values:
-  * without AQE inside [[withoutAqe]], and with the loop's (often
-  * single-digit) `spark.sql.shuffle.partitions` inside
-  * [[withLoopPartitions]] / [[withShufflePartitions]] — a concurrent
-  * corpus-sized aggregate would run its exchanges in that many tasks.
-  * Scopes themselves are safe to overlap (the restore is
-  * reference-counted per session below — the last scope out
-  * re-installs the value the first scope in saw, or unsets a key that
-  * had no value, so concurrent fixpoints can no longer clobber each
-  * other's `prev`), but a host that multiplexes AQE- or
-  * parallelism-sensitive OLAP queries and fixpoint operators on one
-  * session concurrently should give the fixpoints their own session
-  * (`newSession()` shares the SparkContext and catalog but has
-  * independent conf) or set `spark.graft.fixpoint.aqe=true`.
-  * Bench/Verify are single-threaded and unaffected.
+  * AQE in stateful streaming).
   */
 object Fixpoint {
 
@@ -97,23 +83,8 @@ object Fixpoint {
   case object Lazy extends Hold
   /** Persisted; the probe or the next round's action fills the cache. */
   case object Persist extends Hold
-  /** Persisted, and counted at once — checkpointed ones are counted too. */
+  /** Persisted, and counted at once unless it was checkpointed. */
   case object Count extends Hold
-
-  /** The shuffle-partition scope of a loop. */
-  sealed trait Parts
-  object Parts {
-    /** The session's own setting. */
-    case object Session extends Parts
-    /** `n` partitions, from the seed's materialization on — for a loop
-      * that also hash-partitions its own state with `n`.
-      */
-    final case class Exactly(n: Int) extends Parts
-    /** [[loopPartitions]] for `rows(seed)`, from round 1 on; `rows` sees
-      * the materialized seed.
-      */
-    final case class SizedBy(rows: DataFrame => Long) extends Parts
-  }
 
   /** The last generation, the rounds that built it, and whether the
     * loop stopped at a fixpoint rather than at its round budget.
@@ -121,66 +92,84 @@ object Fixpoint {
   final case class Result(state: DataFrame, rounds: Int, converged: Boolean)
 
   /** Run a loop under the contract above: `round` builds each
-    * generation from the previous one, at most `maxRounds` times.
-    * `seed` is evaluated inside the loop's scopes on `spark`.
+    * generation from the previous one, at most `maxRounds` times, on
+    * `seed`'s session.
     */
-  def iterate(spark: SparkSession, seed: => DataFrame, maxRounds: Int,
-      name: String, every: Int = 0, hold: Hold = Lazy,
-      keepCheckpoints: Boolean = false,
-      materializeSeed: Boolean = false, aqe: Boolean = true,
-      parts: Parts = Parts.Session, reliable: Option[Boolean] = None,
+  def iterate(seed: DataFrame, maxRounds: Int, name: String,
+      every: Int = 0, hold: Hold = Lazy, keepGenerations: Boolean = false,
+      materializeSeed: Boolean = false, reliable: Option[Boolean] = None,
       changed: Option[DataFrame => Boolean] = None)(
       round: DataFrame => DataFrame): Result = {
     require(every >= 0, s"checkpointEvery must be >= 0 (0 = off), got $every")
+    val spark = seed.sparkSession
+    val durable =
+      reliable.getOrElse(spark.sparkContext.getCheckpointDir.isDefined)
     var made = 0
     // the cadence: whether the next generation materialized is a checkpoint
     def cutNext(): Boolean = { made += 1; every > 0 && made % every == 0 }
-    def loop(gen0: DataFrame, durable: Boolean): Result = {
-      var gen = gen0
-      var held = List(gen0)
-      var rounds = 0
-      var converged = false
-      while (!converged && rounds < maxRounds) {
-        val frame = round(gen)
-        if (frame eq gen) converged = true
-        else {
-          rounds += 1
-          PlanDump(s"${name}_round_$rounds", frame)
-          val cut = cutNext()
-          val next =
-            if (cut) checkpoint(frame, durable)
-            else if (hold == Lazy) frame
-            else Caches.persist(frame)
-          if (hold == Count) next.count()
-          converged = !changed.forall(_(next))
-          if (cut || hold == Count || (hold == Persist && changed.isDefined)) {
-            held.foreach(g =>
-              if (keepCheckpoints) g.unpersist(blocking = false) else free(g))
-            held = Nil
-          }
-          held ::= next
-          gen = next
+    var gen =
+      if (materializeSeed && cutNext()) checkpoint(seed, durable) else seed
+    var held = List(gen)
+    var rounds = 0
+    var converged = false
+    while (!converged && rounds < maxRounds) {
+      val frame = round(gen)
+      if (frame eq gen) converged = true
+      else {
+        require(frame.sparkSession eq spark, s"$name round ${rounds + 1} " +
+          "built its frame on another session than the loop's seed")
+        rounds += 1
+        PlanDump(s"${name}_round_$rounds", frame)
+        val cut = cutNext()
+        val next =
+          if (cut) checkpoint(frame, durable)
+          else if (hold == Lazy) frame
+          else Caches.persist(frame)
+        if (hold == Count && !cut) next.count()
+        converged = !changed.forall(_(next))
+        if (!keepGenerations &&
+            (cut || hold == Count || (hold == Persist && changed.isDefined))) {
+          held.foreach(free)
+          held = Nil
         }
-      }
-      Result(gen, rounds, converged)
-    }
-    def run: Result = {
-      val s = seed
-      val durable =
-        reliable.getOrElse(spark.sparkContext.getCheckpointDir.isDefined)
-      val gen0 =
-        if (materializeSeed && cutNext()) checkpoint(s, durable) else s
-      parts match {
-        case Parts.SizedBy(rows) =>
-          withLoopPartitions(spark, rows(gen0))(loop(gen0, durable))
-        case _ => loop(gen0, durable)
+        held ::= next
+        gen = next
       }
     }
-    def scoped: Result = parts match {
-      case Parts.Exactly(n) => withShufflePartitions(spark, n)(run)
-      case _ => run
+    Result(gen, rounds, converged)
+  }
+
+  /** An operator's own session while it runs [[scoped]]. */
+  final class Scope private[Fixpoint] (val spark: SparkSession,
+      caller: SparkSession) {
+
+    /** `df` re-bound to this session. */
+    def apply(df: DataFrame): DataFrame = GraftSessionBridge.bind(spark, df)
+
+    /** Set this session's shuffle partitions to [[loopPartitions]] for
+      * `rows`-row state, clamped to the caller's setting.
+      */
+    def sizeTo(rows: Long): Unit =
+      spark.conf.set(PartitionsKey, loopPartitions(caller, rows).toString)
+  }
+
+  /** Run an operator's `body` on a clone of `caller` (see the loop's
+    * session above), with AQE off unless `aqe`, and with `partitions`
+    * shuffle partitions when positive. `body` re-binds its input frames
+    * through the [[Scope]]. A frame or [[Result]] it returns comes back
+    * bound to `caller`; any other value is returned as is.
+    */
+  def scoped[T](caller: SparkSession, partitions: Int = 0,
+      aqe: Boolean = false)(body: Scope => T): T = {
+    val spark = GraftSessionBridge.cloneSession(caller)
+    if (!aqe) spark.conf.set("spark.sql.adaptive.enabled", "false")
+    if (partitions > 0) spark.conf.set(PartitionsKey, partitions.toString)
+    body(new Scope(spark, caller)) match {
+      case df: Dataset[_] => GraftSessionBridge.bind(caller, df).asInstanceOf[T]
+      case r: Result =>
+        r.copy(state = GraftSessionBridge.bind(caller, r.state)).asInstanceOf[T]
+      case out => out
     }
-    if (aqe) scoped else withoutAqe(spark)(scoped)
   }
 
   /** One-shot lineage truncation outside a loop, in the session's
@@ -218,64 +207,7 @@ object Fixpoint {
     }
   }
 
-  private val AqeKey = "spark.sql.adaptive.enabled"
-  private val KeepKey = "spark.graft.fixpoint.aqe"
-
-  /** Per-(session, key) open-scope bookkeeping: a stack of scope tokens
-    * with their target values plus the pre-scope original (None when
-    * the key had no value). The LAST scope out restores the original,
-    * or unsets the key so a later `conf.get(key, default)` still sees
-    * its default; a non-final exit re-installs the
-    * remaining top scope's target, so overlapping scopes (nested on one
-    * thread or concurrent across threads) never clobber the value the
-    * first scope in saw. Sessions compare by identity (SparkSession
-    * does not override equals).
-    */
-  private final class ConfScopes(val original: Option[String]) {
-    val stack = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
-    val values = new java.util.IdentityHashMap[AnyRef, String]()
-  }
-  private val open =
-    scala.collection.mutable.HashMap.empty[(SparkSession, String), ConfScopes]
-
-  /** Run `body` with session conf `key` set to `value`, restoring the
-    * pre-scope value afterwards (overlap-safe, see [[ConfScopes]]).
-    * The conf is SESSION-global while the scope is open — see the
-    * concurrency contract above.
-    */
-  def withConf[T](spark: SparkSession, key: String, value: String)(
-      body: => T): T = {
-    val token = new Object
-    open.synchronized {
-      val sc = open.getOrElseUpdate((spark, key),
-        new ConfScopes(spark.conf.getOption(key)))
-      sc.stack += token
-      sc.values.put(token, value)
-      spark.conf.set(key, value)
-    }
-    try body finally open.synchronized {
-      val sc = open((spark, key))
-      sc.stack -= token
-      sc.values.remove(token)
-      if (sc.stack.isEmpty) {
-        open.remove((spark, key))
-        sc.original match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-      } else spark.conf.set(key, sc.values.get(sc.stack.last))
-    }
-  }
-
-  def withoutAqe[T](spark: SparkSession)(body: => T): T = {
-    val keep = spark.conf.get(KeepKey, "false").equalsIgnoreCase("true")
-    val already = open.synchronized {
-      !open.contains((spark, AqeKey)) &&
-        spark.conf.get(AqeKey, "true").equalsIgnoreCase("false")
-    }
-    if (keep || already) body // off globally; nothing to scope
-    else withConf(spark, AqeKey, "false")(body)
-  }
+  private val PartitionsKey = "spark.sql.shuffle.partitions"
 
   /** Shuffle partition count for a fixpoint whose per-round state is
     * `rows` rows: enough partitions to keep each under
@@ -289,23 +221,8 @@ object Fixpoint {
   def loopPartitions(spark: SparkSession, rows: Long): Int = {
     val per = spark.conf
       .get("spark.graft.fixpoint.rowsPerPartition", "65536").toLong
-    val session = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    val session = spark.conf.get(PartitionsKey, "200").toInt
     math.max(1L, math.min(session.toLong,
       (rows + per - 1) / math.max(1L, per))).toInt
   }
-
-  /** Scope `spark.sql.shuffle.partitions` to [[loopPartitions]] for an
-    * iterative loop over `rows`-sized state.
-    */
-  def withLoopPartitions[T](spark: SparkSession, rows: Long)(
-      body: => T): T =
-    withShufflePartitions(spark, loopPartitions(spark, rows))(body)
-
-  /** Scope `spark.sql.shuffle.partitions` to an explicit `n` — for a
-    * loop that also hash-partitions its own state with `n` (so the
-    * loop's aggregates and its `repartition(n, key)` frames agree).
-    */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(
-      body: => T): T =
-    withConf(spark, "spark.sql.shuffle.partitions", n.toString)(body)
 }

@@ -3,67 +3,93 @@ package graft
 import java.util.concurrent.CountDownLatch
 
 import graft.util.Fixpoint
+import org.apache.spark.sql.functions.col
 
-/** The session-global AQE scope must survive OVERLAPPING use: two
-  * fixpoints on different threads both see AQE off inside their
-  * bodies, and the LAST scope out restores the value the FIRST scope
-  * in saw — no lost or doubly-restored conf (the round-19 race:
-  * overlapping scopes each captured `prev` independently, so the
-  * second could capture "false" and restore it permanently).
+/** The fixpoint driver's session contract: an operator's loop runs on a
+  * clone of the caller's session that carries the caller's runtime conf,
+  * views and functions, takes the loop's own AQE and partition settings,
+  * and never writes the caller's conf.
   */
 class FixpointSpec extends SparkSpec {
+  import spark.implicits._
 
   private val AqeKey = "spark.sql.adaptive.enabled"
 
-  test("withoutAqe disables AQE in the body and restores after") {
+  test("a loop on another thread leaves the caller's session as it was") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dumps = java.nio.file.Files.createTempDirectory("fixpoint_dumps")
     spark.conf.set(AqeKey, "true")
-    Fixpoint.withoutAqe(spark) {
-      assert(spark.conf.get(AqeKey) == "false")
-    }
-    assert(spark.conf.get(AqeKey) == "true")
-  }
-
-  test("nested scopes on one thread restore the outermost value") {
-    spark.conf.set(AqeKey, "true")
-    Fixpoint.withoutAqe(spark) {
-      Fixpoint.withoutAqe(spark) {
-        assert(spark.conf.get(AqeKey) == "false")
+    spark.conf.set("spark.graft.planDumpDir", dumps.toString)
+    try {
+      val callerParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val before = spark.conf.getAll
+      // a 40-edge chain: several pointer-jumping rounds, each a job or two
+      val chain = (1L to 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      val done = new CountDownLatch(1)
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val loop = new Thread(() =>
+        try graft.ops.Dedup.connectedComponents(chain).collect()
+        catch { case t: Throwable => failure.set(t) }
+        finally done.countDown())
+      loop.start()
+      var during = 0
+      while (done.getCount > 0) {
+        val q = spark.range(0, 100).groupBy(col("id") % 7).count()
+        q.collect()
+        val plan = q.queryExecution.executedPlan
+        assert(plan.isInstanceOf[AdaptiveSparkPlanExec],
+          s"a caller query planned without AQE:\n$plan")
+        val parts = plan.asInstanceOf[AdaptiveSparkPlanExec].initialPlan
+          .collect { case e: ShuffleExchangeExec =>
+            e.outputPartitioning.numPartitions }
+        assert(parts == Seq(callerParts),
+          s"a caller query shuffled into $parts partitions")
+        assert(spark.conf.getAll == before, "the caller's conf changed")
+        if (done.getCount > 0) during += 1
       }
-      // inner exit must NOT restore yet — the outer scope is still open
-      assert(spark.conf.get(AqeKey) == "false")
+      loop.join(30000)
+      Option(failure.get).foreach(t => throw t)
+      assert(during >= 1, "no caller query ran while the loop ran")
+      assert(spark.conf.getAll == before)
+      val dump = java.nio.file.Files.readString(dumps.resolve("cc_round_1.txt"))
+      assert(!dump.contains("AdaptiveSparkPlan"), dump)
+    } finally {
+      spark.conf.unset("spark.graft.planDumpDir")
+      graft.util.Caches.unpersistAll()
     }
-    assert(spark.conf.get(AqeKey) == "true")
   }
 
-  test("two concurrent fixpoints restore AQE correctly") {
-    spark.conf.set(AqeKey, "true")
-    val bothInside = new CountDownLatch(2)
-    val firstDone = new CountDownLatch(1)
-    val insideValues =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  test("the caller's conf, temp views and functions reach the loop") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    try {
+      GraftFunctions.register(spark)
+      Seq(1L, 2L, 3L).toDF("x").createOrReplaceTempView("fixpoint_view")
+      val seen = Fixpoint.scoped(spark) { loop =>
+        assert(loop.spark ne spark)
+        assert(loop.spark.conf.get(AqeKey) == "false")
+        assert(loop.spark.conf.get(key) == "-1")
+        loop.spark.sql(
+          "SELECT sorted_jaccard(array(x), array(2L)) AS j FROM fixpoint_view")
+      }
+      assert(seen.sparkSession eq spark, "the result is not the caller's")
+      assert(seen.as[Double].collect().sorted.toSeq == Seq(0.0, 0.0, 1.0))
+    } finally {
+      spark.conf.unset(key)
+      spark.catalog.dropTempView("fixpoint_view")
+    }
+  }
 
-    val t1 = new Thread(() => Fixpoint.withoutAqe(spark) {
-      insideValues.add(spark.conf.get(AqeKey))
-      bothInside.countDown()
-      bothInside.await() // guarantee the scopes overlap
-    })
-    val t2 = new Thread(() => Fixpoint.withoutAqe(spark) {
-      insideValues.add(spark.conf.get(AqeKey))
-      bothInside.countDown()
-      bothInside.await()
-      firstDone.await() // t2 exits strictly after t1 has restored
-    })
-    t1.start(); t2.start()
-    t1.join(30000)
-    // t1 exited but t2's scope is still open: AQE must STAY off
-    assert(spark.conf.get(AqeKey) == "false",
-      "first scope's exit must not restore while the second is open")
-    firstDone.countDown()
-    t2.join(30000)
-    assert(insideValues.size == 2)
-    insideValues.forEach(v => assert(v == "false"))
-    assert(spark.conf.get(AqeKey) == "true",
-      "last scope out must restore the pre-scope value")
+  test("a round built on the caller's session fails loudly") {
+    val caller = (1 to 5).toDF("x")
+    val e = intercept[IllegalArgumentException] {
+      Fixpoint.scoped(spark) { loop =>
+        Fixpoint.iterate(loop(caller), 3, "wrong_session")(_ =>
+          caller.withColumn("x", col("x") + 1))
+      }
+    }
+    assert(e.getMessage.contains("another session"), e.getMessage)
   }
 
   test("loopPartitions sizes to the state and clamps to the session") {
@@ -80,39 +106,6 @@ class FixpointSpec extends SparkSpec {
     spark.conf.set("spark.graft.fixpoint.rowsPerPartition", "10")
     try assert(Fixpoint.loopPartitions(spark, 25L) == 3)
     finally spark.conf.unset("spark.graft.fixpoint.rowsPerPartition")
-  }
-
-  test("withLoopPartitions scopes and restores the partition conf") {
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    Fixpoint.withLoopPartitions(spark, 10L) {
-      assert(spark.conf.get(key) == "1")
-    }
-    assert(spark.conf.get(key) == before)
-  }
-
-  test("a key with no value before the scope is unset again after it") {
-    val key = "spark.graft.test.unsetBeforeScope"
-    spark.conf.unset(key)
-    Fixpoint.withConf(spark, key, "x") {
-      Fixpoint.withConf(spark, key, "y") {
-        assert(spark.conf.get(key) == "y")
-      }
-      assert(spark.conf.get(key) == "x")
-    }
-    // unset, not "": a later lookup with a default still sees the default
-    assert(spark.conf.getOption(key).isEmpty)
-    assert(spark.conf.get(key, "dflt") == "dflt")
-  }
-
-  test("scope under an already-off session leaves conf untouched") {
-    spark.conf.set(AqeKey, "false")
-    try {
-      Fixpoint.withoutAqe(spark) {
-        assert(spark.conf.get(AqeKey) == "false")
-      }
-      assert(spark.conf.get(AqeKey) == "false")
-    } finally spark.conf.set(AqeKey, "true")
   }
 
   test("only util/Fixpoint.scala checkpoints") {

@@ -50,8 +50,7 @@ class FixpointJobsSpec extends SparkSpec {
     val settings = Seq("spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> "4")
     val unset = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.graft.fixpoint.rowsPerPartition", "spark.graft.fixpoint.aqe",
-      "spark.graft.planDumpDir")
+      "spark.graft.fixpoint.rowsPerPartition", "spark.graft.planDumpDir")
     val saved = (settings.map(_._1) ++ unset)
       .map(k => k -> spark.conf.getOption(k))
     settings.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -95,23 +94,23 @@ class FixpointJobsSpec extends SparkSpec {
     ("neighborhoodSizes", () => Graph.neighborhoodSizes(und, radius = 3,
       m = 64), 9),
     ("neighborhoodSizes every=1", () => Graph.neighborhoodSizes(und,
-      radius = 3, m = 64, checkpointEvery = 1), 11),
-    ("harmonicCentrality", () => Graph.harmonicCentrality(und, radius = 3,
-      m = 64), 19),
-    ("neighborhoodFunction", () => Graph.neighborhoodFunction(und,
-      radius = 3, m = 64), 7),
-    ("neighborhoodFunction every=1", () => Graph.neighborhoodFunction(und,
       radius = 3, m = 64, checkpointEvery = 1), 8),
+    ("harmonicCentrality", () => Graph.harmonicCentrality(und, radius = 3,
+      m = 64), 18),
+    ("neighborhoodFunction", () => Graph.neighborhoodFunction(und,
+      radius = 3, m = 64), 6),
+    ("neighborhoodFunction every=1", () => Graph.neighborhoodFunction(und,
+      radius = 3, m = 64, checkpointEvery = 1), 6),
     ("bpeLearnMerges", () => TextAnalysis.bpeLearnMerges(docs, "text",
       rounds = 4), 10),
     ("bpeLearnMerges every=2", () => TextAnalysis.bpeLearnMerges(docs,
-      "text", rounds = 4, checkpointEvery = 2), 12),
+      "text", rounds = 4, checkpointEvery = 2), 10),
     ("ByteBpe.learn", () => ByteBpe.learn(docs, "text", rounds = 4), 8),
     ("ByteBpe.learn every=2", () => ByteBpe.learn(docs, "text", rounds = 4,
-      checkpointEvery = 2), 10),
+      checkpointEvery = 2), 8),
     ("Wordpiece.learn", () => Wordpiece.learn(docs, "text", rounds = 4), 14),
     ("Wordpiece.learn every=2", () => Wordpiece.learn(docs, "text",
-      rounds = 4, checkpointEvery = 2), 16),
+      rounds = 4, checkpointEvery = 2), 14),
     ("kcenter", () => Similarity.kcenter(vectors, k = 4), 10))
 
   test("each iterative operator runs its pinned number of Spark jobs") {

@@ -268,6 +268,33 @@ class GraphSpec extends SparkSpec {
     graft.util.Caches.unpersistAll()
   }
 
+  test("neighborhoodFunction reads every register generation from cache") {
+    // the per-radius estimates read their rounds' generations lazily,
+    // after the loop: at checkpointEvery = 0 the loop must keep them
+    // cached, or the final action recomputes the register merges
+    val key = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+        .toDF("a", "b")
+      val out = Graph.neighborhoodFunction(und, radius = 3, m = 64)
+      out.collect()
+      val plan = out.queryExecution.executedPlan
+      val walk =
+        new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      val nodes = walk.collect(plan) { case p => p }
+      val merges = nodes.filter(_.expressions.exists(_.find(
+        _.isInstanceOf[graft.functions.MergePackedRegisters]).isDefined))
+      assert(merges.isEmpty, s"register merges recomputed:\n$plan")
+      assert(nodes.exists(_.isInstanceOf[
+        org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]), plan)
+    } finally {
+      saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      graft.util.Caches.unpersistAll()
+    }
+  }
+
   test("neighborhoodSizes is layout-independent") {
     val und = (1L to 40L).map(i => (i, i % 13 + 41)).toDF("a", "b")
     def run(d: org.apache.spark.sql.DataFrame) =

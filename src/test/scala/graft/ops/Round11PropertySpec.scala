@@ -121,7 +121,7 @@ class Round11PropertySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val df = graft.util.Fixpoint.iterate(spark, (1 to 100).toDF("x"), 5,
+    val df = graft.util.Fixpoint.iterate((1 to 100).toDF("x"), 5,
       "free_check", every = 1)(_.withColumn("x", col("x") + 1)).state
     assert(df.count() == 100)
     val held = sc.getPersistentRDDs.keySet -- before
